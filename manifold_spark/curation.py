@@ -19,10 +19,11 @@ documents were dropped.
 Scale: the composition inherits each stage's shape — scan-side
 projections (1, 4), one-shuffle aggregates (2), banded LSH with skew
 caps (3), hash gates (5), and one sharded window (6). Stage boundaries
-persist (shared operator-cache registry) so each stage's audit count and
-the next stage both read the materialized frame instead of re-executing
-the upstream DAG. At 100 TB you would persist stage boundaries as
-parquet instead; the `report` counts then come free from write metrics.
+persist (shared operator-cache registry) or truncate lineage
+(`plans.boundary.stage_boundary`) so each stage's audit count and the
+next stage both read the materialized frame instead of re-executing the
+upstream DAG. At 100 TB you would write stage boundaries as parquet
+instead; the `report` counts then come free from write metrics.
 """
 
 from __future__ import annotations
@@ -61,13 +62,23 @@ def curate_corpus(
     The count() per stage is for the audit report; drop it (or read the
     counts from stage writes) when auditing isn't needed.
 
-    Stage boundaries persist through the shared operator-cache registry
-    (release with `operator_cache_scope()` / `release_shingle_caches()`):
-    without it every stage count re-executes the whole upstream DAG —
-    measured 70.0 → 61.6 s at sf0.1 (the bulk of the cost is the stages
-    themselves, LSH + components + LM training; the persists buy the
-    recompute cascade, not the stage work). This is the local stand-in
-    for the 100 TB stage-boundary parquet writes.
+    Every stage reads a materialized input, never a re-execution of the
+    upstream DAG. Stages 1-3 and 5 persist through the shared
+    operator-cache registry (release with `operator_cache_scope()` /
+    `release_shingle_caches()`). The quality stage has three lineage
+    boundaries (`plans.boundary.stage_boundary`: a lazy localCheckpoint
+    by default, a durable parquet write-read under
+    ``spark.manifold.stageBoundary=parquet``):
+
+    - "curation-repetition": the repetition-filtered survivors, which LM
+      training, scoring and the join back all read. Without it each of
+      those reads re-ran the Gopher repetition explode. On a 5,000-doc
+      corpus (~300 chars a doc, local[4] on 4 vCPUs) the boundary cut
+      one call from 35.1 to 18.4 s and its JVM allocation from 29.6 to
+      10.3 GB (medians of 10 interleaved runs).
+    - "lm-model": the char-trigram LM inside `score_docs`.
+    - "curation-quality": the bucketed survivors; truncates the LM-scored
+      plan before the mixture stage reads it twice.
     """
     from manifold_spark.operators.c4 import (
         DEFAULT_BLOCKLIST,
@@ -80,6 +91,7 @@ def curate_corpus(
     from manifold_spark.operators.repetition import repetition_signals
     from manifold_spark.operators.sampling import pack_documents, temperature_sample
     from manifold_spark.operators.textstats import token_count_ws
+    from manifold_spark.plans.boundary import stage_boundary
 
     report: dict[str, int] = {"input": docs.count()}
 
@@ -131,6 +143,11 @@ def curate_corpus(
         survivors = survivors.join(
             rep.filter(F.col("repetition_pass")).select(id_col), id_col
         )
+        # Boundary: LM training, scoring and the join back all read
+        # `survivors` (score_docs alone reads it three times); without
+        # this each read re-ran the repetition explode over every char
+        # and word n-gram.
+        survivors = stage_boundary(survivors, "curation-repetition")
     scored = score_docs(survivors, text_col=text_col, id_col=id_col).join(
         survivors.select(id_col, lang_col, text_col), id_col
     )
@@ -142,20 +159,14 @@ def curate_corpus(
     quality = bucketed.filter(
         F.col("ppl_bucket_label").isin(*keep_ppl_buckets)
     ).select(id_col, lang_col, text_col)
-    # r14 round-close (guide §3.3): localCheckpoint, not persist — the
-    # LM-scored lineage above this boundary is a ~770 KB logical plan
-    # (the model/training subtrees copy per reference; trees, not DAGs),
-    # and the mixture join below references `quality` TWICE (corpus side
-    # + rates aggregate), so every downstream action re-canonicalized a
-    # ~1.5 MB tree on the driver (measured: the mixture stage cost 13 s
-    # of which <1 s was execution). Checkpointing truncates the plan to
-    # a LogicalRDD — the local stand-in for the 100 TB stage-boundary
-    # parquet write this docstring already documents. Lazy: the stage
-    # count below materializes it.
-    # r15 (VERDICT r14 #7): durability-switchable boundary — see
-    # manifold_spark/plans/boundary.py (local default unchanged).
-    from manifold_spark.plans.boundary import stage_boundary
-
+    # Boundary, not persist: the LM-scored lineage above it is a large
+    # logical plan (the model subtrees copy per reference; trees, not
+    # DAGs), and the mixture join below references `quality` twice
+    # (corpus side + rates aggregate), so without truncation every
+    # downstream action re-canonicalized it while planning (measured:
+    # the mixture stage cost 13 s of which <1 s was execution). This is
+    # the last of the three quality-stage boundaries (see the docstring).
+    # Lazy in local mode: the stage count below materializes it.
     quality = stage_boundary(quality, "curation-quality")
     report["quality"] = quality.count()
 

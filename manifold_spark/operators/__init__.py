@@ -1313,27 +1313,54 @@ def q_events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-event-type stats: exact distinct counts AND exact percentiles in
 # one aggregate (merged from the round-2 keys `events_distinct_users` +
 # `events_percentiles` under the driver's 50-key cap — one shuffle
-# instead of two over the same grouping key). DuckDB `quantile_cont`
-# interpolates identically to Spark `percentile`. At interactive 100 TB
-# scale the one-line swaps are approx_count_distinct (HLL) and
-# approx_percentile (t-digest) — kept exact here for the oracle gate.
+# instead of two over the same grouping key). The oracle spells out
+# Spark's `percentile` rather than calling DuckDB's `quantile_cont`:
+# both interpolate between the order statistics at floor/ceil of
+# pos = (n-1)·p, but Spark returns the lower value as-is when the two
+# neighbours are equal and otherwise computes (hi_i-pos)·lo +
+# (pos-lo_i)·hi, while `quantile_cont` always interpolates in its own
+# form — 19 zeros + [225.77, 225.77] at p99 gives 225.77 in Spark and
+# 225.76999999999998 in DuckDB. At interactive 100 TB scale the one-line
+# swaps are approx_count_distinct (HLL) and approx_percentile
+# (t-digest) — kept exact here for the oracle gate.
 # ---------------------------------------------------------------------------
 
 
 @register(
     "events_type_stats",
     """
+    WITH typed AS (
+        SELECT event_type,
+               count(DISTINCT user_id) AS n_users,
+               count(*) AS n_events,
+               CAST(SUM(CAST(floor((value) * 10000.0 + 0.5) AS HUGEINT)) AS DOUBLE) / 10000.0 AS total_value,
+               list(value ORDER BY value) FILTER (WHERE value IS NOT NULL) AS vs
+        FROM events
+        GROUP BY event_type
+    ), positioned AS (
+        SELECT *, CAST(len(vs) - 1 AS DOUBLE) * q AS pos
+        FROM typed, (VALUES (CAST(0.5 AS DOUBLE)), (CAST(0.9 AS DOUBLE)), (CAST(0.99 AS DOUBLE))) AS p(q)
+    ), neighbours AS (
+        SELECT *, floor(pos) AS lo_i, ceil(pos) AS hi_i,
+               vs[CAST(floor(pos) AS BIGINT) + 1] AS lo,
+               vs[CAST(ceil(pos) AS BIGINT) + 1] AS hi
+        FROM positioned
+    ), pct AS (
+        SELECT *, CASE WHEN lo_i = hi_i OR lo = hi THEN lo
+                       ELSE (hi_i - pos) * lo + (pos - lo_i) * hi END AS v
+        FROM neighbours
+    )
     SELECT 'type' AS grain,
            '' AS hour_start,
            event_type,
-           count(DISTINCT user_id) AS n_users,
-           count(*) AS n_events,
-           CAST(SUM(CAST(floor((value) * 10000.0 + 0.5) AS HUGEINT)) AS DOUBLE) / 10000.0 AS total_value,
-           quantile_cont(value, 0.5) AS p50,
-           quantile_cont(value, 0.9) AS p90,
-           quantile_cont(value, 0.99) AS p99
-    FROM events
-    GROUP BY event_type
+           n_users,
+           n_events,
+           total_value,
+           max(v) FILTER (WHERE q = 0.5) AS p50,
+           max(v) FILTER (WHERE q = 0.9) AS p90,
+           max(v) FILTER (WHERE q = 0.99) AS p99
+    FROM pct
+    GROUP BY event_type, n_users, n_events, total_value
     UNION ALL
     SELECT 'hour' AS grain,
            strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,

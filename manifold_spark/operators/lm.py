@@ -182,6 +182,12 @@ def score_docs(
     tertile. Filter `n_trigrams > 0` before `ppl_buckets` (curate_corpus
     does). Unseen trigrams (held-out scoring) price as (k)/(C₂+k·V) via
     the model's prefix table; unseen prefixes reduce to k/(k·V) = 1/V.
+
+    With ``model=None`` the returned plan evaluates `docs` more than once
+    (LM training, then the per-document trigram scan), and a caller that
+    joins the scores back reads it again. When `docs` is expensive to
+    compute, pass a materialized frame — a `stage_boundary` or a persist
+    (curate_corpus puts its repetition-filtered survivors behind one).
     """
     if model is None:
         # The model is referenced by three subtrees below (term join,

@@ -226,7 +226,9 @@ def scd2_merge(
 
     # Key-level changed flag from the per-side distinct-hash sets (NULL
     # when either side is absent — `when` routes that to "untouched",
-    # matching the old anti-join).
+    # matching the old anti-join). `try_element_at`: an all-NULL-hash key
+    # has an EMPTY set, and the size guards are conjuncts the optimizer
+    # may reorder — `element_at(empty, 1)` would raise under ANSI.
     t_hs, b_hs = F.col("t.__t_hs"), F.col("b.__b_hs")
     changed = (
         (F.size(t_hs) > 0)
@@ -234,7 +236,7 @@ def scd2_merge(
         & (
             (F.size(t_hs) > 1)
             | (F.size(b_hs) > 1)
-            | (F.element_at(t_hs, 1) != F.element_at(b_hs, 1))
+            | (F.try_element_at(t_hs, F.lit(1)) != F.try_element_at(b_hs, F.lit(1)))
         )
     )
 

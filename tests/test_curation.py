@@ -5,13 +5,9 @@ operators composed clean → exact dedup → fuzzy dedup → quality → mixture
 
 from __future__ import annotations
 
-import pytest
-
-# r15 slow tier (VERDICT r14 #2): full curation pipeline compositions —
-# excluded from the default (driver-verify) run by pytest.ini's
-# `-m "not slow"`; run with `-m slow` (round-close evidence in
-# OPTIMIZATION_r15.md).
-pytestmark = pytest.mark.slow
+# Slow tier: the full curation pipeline compositions are marked `slow`,
+# excluded from the default run by pytest.ini's `-m "not slow"`; run
+# them with `-m slow`. The boundary pin stays in the default run.
 
 import gc
 
@@ -37,6 +33,7 @@ def _reclaim_jvm_memory(spark):
     spark.sparkContext._jvm.System.gc()
 
 
+@pytest.mark.slow
 def test_curate_corpus_end_to_end(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # give the exact-dedup stage real work: duplicate every 10th doc
@@ -73,6 +70,43 @@ def test_curate_corpus_end_to_end(spark, sf_dir):
         assert sum(toks) - max(toks) < 256, (shard, b, toks)
 
 
+@pytest.mark.parametrize("boundary_mode", ["local", "parquet"])
+def test_quality_stage_reads_bounded_survivors(
+    spark, sf_dir, tmp_path, monkeypatch, boundary_mode
+):
+    """The frame curate_corpus hands `score_docs` is the repetition-
+    filtered survivors behind a stage boundary, so LM training, scoring
+    and the join back read one truncated input instead of each re-running
+    the repetition explode (`__lines_tagged` is the per-line unit array
+    `repetition_signals` builds), in both boundary modes."""
+    from manifold_spark.operators import lm
+
+    real_score_docs = lm.score_docs
+    plans = []
+
+    def recording_score_docs(docs, *args, **kwargs):
+        plans.append(docs._jdf.queryExecution().analyzed().toString())
+        return real_score_docs(docs, *args, **kwargs)
+
+    monkeypatch.setattr(lm, "score_docs", recording_score_docs)
+    spark.conf.set("spark.manifold.stageBoundary", boundary_mode)
+    spark.conf.set("spark.manifold.stageBoundaryDir", str(tmp_path))
+    try:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        packed, report = curate_corpus(docs, pack_budget=256)
+        n_packed = packed.count()
+    finally:
+        spark.conf.unset("spark.manifold.stageBoundary")
+        spark.conf.unset("spark.manifold.stageBoundaryDir")
+        release_shingle_caches()
+
+    assert len(plans) == 1
+    assert "__lines_tagged" not in plans[0]
+    assert report["quality"] < report["fuzzy_dedup"]
+    assert report["packed"] == n_packed > 0
+
+
+@pytest.mark.slow
 def test_curate_corpus_deterministic(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     a, ra = curate_corpus(docs, pack_budget=256)
@@ -85,6 +119,7 @@ def test_curate_corpus_deterministic(spark, sf_dir):
     assert rows_a == rows_b
 
 
+@pytest.mark.slow
 def test_incremental_curation_batch_split_invariant(spark, sf_dir, tmp_path):
     """The incremental twin's contract: feeding the corpus as ONE batch
     or as any id-ordered split yields the SAME kept id set and the same
@@ -160,6 +195,7 @@ def test_incremental_curation_batch_split_invariant(spark, sf_dir, tmp_path):
     assert one_report["packed"] > 0
 
 
+@pytest.mark.slow
 def test_checkpoint_curation_state_roundtrip(spark):
     """`checkpoint_curation_state` (the in-memory lineage truncation for
     notebook-style loops) must preserve state contents exactly and drop

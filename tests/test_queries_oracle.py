@@ -93,3 +93,31 @@ def test_rows_only_queries_run(spark, sf_dir):
             df = fn(spark, sf_dir)
             assert df.columns, name
             assert df.count() >= 0, name
+
+
+def test_events_type_stats_equal_neighbour_percentile(spark, tmp_path):
+    """Spark's `percentile` returns the lower order statistic as-is when
+    both interpolation neighbours are equal; the oracle must too. On 19
+    zeros + [225.77, 225.77], p99 sits between the two 225.77s: Spark
+    gives 225.77 where DuckDB's `quantile_cont` gives
+    225.76999999999998."""
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events AS SELECT range AS event_id,"
+        " TIMESTAMP '2024-01-01 00:00:00' + range * INTERVAL 1 MINUTE AS ts,"
+        " range % 3 AS user_id, 'view' AS event_type,"
+        " CAST(CASE WHEN range < 19 THEN 0.0 ELSE 225.77 END AS DOUBLE) AS value,"
+        " '{}' AS props FROM range(21)"
+    )
+    con.execute(f"COPY events TO '{tmp_path}/events.parquet' (FORMAT PARQUET)")
+
+    sdf = all_queries()["events_type_stats"](spark, str(tmp_path))
+    spark_rows = [tuple(r) for r in sdf.collect()]
+    res = con.execute(all_oracles()["events_type_stats"])
+    duck_cols = [d[0] for d in res.description]
+    duck_rows = res.fetchall()
+    con.close()
+
+    (typed,) = [r for r in spark_rows if r[0] == "type"]
+    assert typed[sdf.columns.index("p99")] == 225.77
+    assert _rowset(list(sdf.columns), spark_rows) == _rowset(duck_cols, duck_rows)

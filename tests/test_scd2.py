@@ -103,6 +103,33 @@ def test_null_business_keys(spark):
     assert duplicate_active_keys(dim2, ["broker"]).count() == 0
 
 
+def test_all_null_hashes_of_a_key(spark):
+    """A key whose every hash is NULL has empty per-side hash sets; the
+    changed flag must evaluate without indexing into them (ANSI raises
+    on an out-of-range `element_at`). NULL hashes never flag a change,
+    so nothing expires or inserts — exactly the 4-join reference form."""
+    old_ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        null_hash = F.lit(None).cast("string")
+        week1 = _base(spark, [("A", "x"), ("B", "y")]).withColumn("hash", null_hash)
+        dim1 = scd2.scd2_merge(None, week1, "broker_id", ["broker"], "2024-01-01")
+        dim1 = spark.createDataFrame(dim1.collect(), dim1.schema)
+        # A: NULL on both sides (twice in staging); B: NULL target only
+        week2 = _base(spark, [("A", "x"), ("A", "x2"), ("B", "y")]).withColumn(
+            "hash", F.when(F.col("broker") == "B", F.col("hash")).otherwise(null_hash)
+        )
+        merged = scd2.scd2_merge(dim1, week2, "broker_id", ["broker"], "2024-01-08")
+        reference = scd2._scd2_merge_joins(
+            dim1, week2, "broker_id", ["broker"], "2024-01-08"
+        )
+        rows = sorted(map(tuple, merged.collect()))
+        assert rows == sorted(map(tuple, reference.collect()))
+        assert rows == sorted(map(tuple, dim1.collect()))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old_ansi)
+
+
 def test_distributed_surrogate_keys_dense_and_layout_independent(spark):
     """The distributed id scheme must produce the exact dense set
     offset+1..offset+N and assign the SAME id to the same row regardless
