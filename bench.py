@@ -1095,51 +1095,6 @@ def main() -> None:
     # 17-row cross-round series and must not absorb new rows.
     extended["curation_pipeline"] = round(best, 3)
 
-    # Backfill tier (r6): run_week above measures week 1 against an EMPTY
-    # warehouse; the real weekly cost at scale is an SCD2 merge against a
-    # GROWN target. Ten weeks of the README's evolution protocol (80%
-    # presence sample, ~10% price mutations — the same generator the
-    # 10-week simulation test uses) against ONE warehouse with the
-    # bucketed merge backend: flat per-week time (week-10 ≈ week-2) is
-    # the proof that the merge touches only affected buckets, not a
-    # history that grows with the warehouse.
-    import datetime as _dt
-    import random as _random
-    import tempfile
-
-    from manifold_spark.catalog import TableStore
-    from manifold_spark.pipeline import run_week
-    from manifold_spark.sources.fixtures import make_listing, write_week
-
-    bf_root = tempfile.mkdtemp(prefix="bench-backfill-")
-    bf_store = TableStore(tempfile.mkdtemp(prefix="bench-backfill-wh-"))
-    rng = _random.Random(13)
-    n_listings = int(100_000 * max(sf / 0.1, 0.01))
-    universe = [f"B{i:06d}" for i in range(max(2_000, n_listings // 4))]
-    asset = {c: make_listing(rng, c) for c in universe}
-    start_date = _dt.date(2024, 1, 1)
-    per_week: list[float] = []
-    for w in range(10):
-        week_date = start_date + _dt.timedelta(weeks=w)
-        present = [c for c in universe if rng.random() < 0.8]
-        for c in present:
-            if rng.random() < 0.1 and asset[c]["PriceCurrencyFormated"] is not None:
-                asset[c] = dict(
-                    asset[c],
-                    PriceCurrencyFormated=round(
-                        asset[c]["PriceCurrencyFormated"] * 1.03, 2
-                    ),
-                )
-        write_week(bf_root, week_date, [asset[c] for c in present])
-        start = time.perf_counter()
-        run_week(spark, bf_store, bf_root, week_date.isoformat(), bucketed_dims=16)
-        per_week.append(round(time.perf_counter() - start, 3))
-    backfill = {
-        "universe": len(universe),
-        "per_week_sec": per_week,
-        "week10_over_week2": round(per_week[9] / per_week[1], 3),
-    }
-
     total = round(sum(timings.values()), 3)
     # r7 (VERDICT r6 #2): calibration-normalized per-query times — each
     # raw time divided by this run's calibration_1e8_agg_sec, so the
@@ -1179,7 +1134,6 @@ def main() -> None:
         "incremental": incremental,
         "ann_store": ann_store_tier,
         "quality": quality,
-        "backfill": backfill,
         "multifile": multifile,
         "minhash_diag": minhash_diag,
         "plan_shuffles": shuffles,

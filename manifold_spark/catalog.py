@@ -4,11 +4,19 @@ The reference's `staging` / `presentation` schemas live in Redshift; ours
 are directories of Parquet tables. `TRUNCATE` + `COPY` collapses to an
 overwrite write (reference S5/D8); DDL collapses to the write's schema.
 
-Rebuild-overwrite safety: Spark cannot overwrite a path that feeds the
-running plan, so `overwrite` stages the new data in a sibling tmp dir and
-swaps it in — which is exactly what the SCD2 rebuild needs (read dim,
-rebuild, replace). The API is MERGE-shaped so a Delta-backed store can
-slot in later without touching callers (SURVEY §7 risk 1).
+Two write modes, one per table kind the weekly job writes:
+
+- `overwrite` replaces a whole table: the staging tables and the SCD2
+  dimensions. Spark cannot overwrite a path that feeds the running
+  plan, so it stages the new data in a sibling tmp dir and swaps it in,
+  which is exactly what the SCD2 rebuild needs (read dim, rebuild,
+  replace).
+- `overwrite_partitions` replaces only the partitions present in the
+  frame: the fact table's week partition, so a re-run of a week
+  replaces it in place.
+
+A Delta-backed store can slot in later behind the same two calls
+without touching callers (SURVEY §7 risk 1).
 """
 
 from __future__ import annotations
@@ -18,22 +26,6 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def _link_tree(src: str, dst: str) -> None:
-    """Mirror ``src`` at ``dst`` using hardlinks for files (copy as a
-    cross-device fallback) — constant-size metadata work per file, no
-    data movement, so staging a full table directory costs O(#files),
-    not O(bytes)."""
-    if os.path.isdir(src):
-        os.makedirs(dst, exist_ok=True)
-        for entry in os.listdir(src):
-            _link_tree(os.path.join(src, entry), os.path.join(dst, entry))
-    else:
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
 
 
 class TableStore:
@@ -94,67 +86,6 @@ class TableStore:
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
         )
-        writer.parquet(self.path(database, table))
-
-    def swap_partitions(
-        self,
-        df: DataFrame,
-        database: str,
-        table: str,
-        partition_by: list[str],
-    ) -> None:
-        """Partition-scoped overwrite for plans that READ from the
-        destination table (e.g. an SCD2 merge whose output derives from
-        the dimension being replaced): stage the written partitions to a
-        sibling tmp dir, assemble a COMPLETE new table directory
-        (hardlinks for every untouched partition — no data copy), then
-        swap the whole directory in. The table is therefore never
-        half-merged (ADVICE r2): before the swap the old state is fully
-        intact; after it the new state is fully live. The swap itself is
-        two renames — a crash exactly between them leaves the table
-        momentarily absent but fully recoverable from the `.old-*` dir it
-        just renamed (never a mix of old and new buckets).
-        Single-level partitioning only (all this engine uses)."""
-        if len(partition_by) != 1:
-            raise ValueError("swap_partitions supports exactly one partition column")
-        final = self.path(database, table)
-        token = uuid.uuid4().hex[:8]
-        tmp = f"{final}.tmp-{token}"
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-        if not os.path.isdir(final):
-            os.replace(tmp, final)
-            return
-        stage = f"{final}.stage-{token}"
-        old = f"{final}.old-{token}"
-        try:
-            written = {e for e in os.listdir(tmp) if "=" in e}
-            os.makedirs(stage)
-            # untouched partitions + marker files: hardlink from the live
-            # table (same filesystem — the stage dir is a sibling)
-            for entry in os.listdir(final):
-                if entry not in written:
-                    _link_tree(os.path.join(final, entry), os.path.join(stage, entry))
-            # replaced partitions: move in from the staged write
-            for entry in written:
-                os.replace(os.path.join(tmp, entry), os.path.join(stage, entry))
-            os.replace(final, old)
-            os.replace(stage, final)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(stage, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-
-    def append(
-        self,
-        df: DataFrame,
-        database: str,
-        table: str,
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """INSERT…SELECT append (reference D6/D9)."""
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
         writer.parquet(self.path(database, table))
 
     def columns(self, spark: SparkSession, database: str, table: str) -> list[str]:

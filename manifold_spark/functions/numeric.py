@@ -33,15 +33,6 @@ def decimal_sum(col: Column, scale: int = 4) -> Column:
     return F.sum(scaled).cast("double") / F.lit(float(10**scale))
 
 
-def decimal_sum_sql(expr: str, scale: int = 4) -> str:
-    """The DuckDB mirror of `decimal_sum`, term-for-term."""
-    factor = 10**scale
-    return (
-        f"CAST(SUM(CAST(floor(({expr}) * {factor}.0 + 0.5) AS HUGEINT)) AS DOUBLE)"
-        f" / {factor}.0"
-    )
-
-
 def decimal_avg(col: Column, scale: int = 4) -> Column:
     """Order-independent AVG: exact scaled sum divided by count."""
     return decimal_sum(col, scale) / F.count(col)

@@ -83,13 +83,6 @@ def feature_grams_from(toks: Column) -> Column:
     return F.concat(word_grams(toks, 1), word_grams(toks, 2))
 
 
-def feature_grams(text: Column) -> Column:
-    """Unigrams + word bigrams over the shared dedup tokenizer. Prefer
-    `feature_grams_from` over a staged token column in per-corpus plans
-    (see its r14 note)."""
-    return feature_grams_from(normalized_tokens(text))
-
-
 def _bucket(gram: Column, n_buckets: int) -> Column:
     return (stable_long_hash(gram, seed=FEATURE_SEED) % n_buckets).cast("long")
 
@@ -215,15 +208,6 @@ def train_nb(
     return model, class_table
 
 
-#: A/B toggle for the scoring tf-relation persist (kept measurable —
-#: see the comment at the persist site). Scope note (ADVICE r14): this
-#: only governs the ``tf=None`` fallback inside `score_nb_classes`;
-#: `classify_self` builds and persists its own shared tf relation
-#: unconditionally (the r14 one-tokenize-pass path), so the measured
-#: variant there is the persisted one either way.
-_PERSIST_TF = True
-
-
 def score_nb_classes(
     docs: DataFrame,
     model: DataFrame,
@@ -267,10 +251,9 @@ def score_nb_classes(
         # 78.1 s → 64.8 s self-classification. Registered with the shared
         # operator-cache registry so `operator_cache_scope()` /
         # `release_shingle_caches()` reclaim it.
-        if _PERSIST_TF:
-            from manifold_spark.operators.dedup import _persist_tracked
+        from manifold_spark.operators.dedup import _persist_tracked
 
-            feats = _persist_tracked(feats)
+        feats = _persist_tracked(feats)
     matched = feats.join(broadcast(model), "bucket")
     m_sums = matched.groupBy(id_col, "label").agg(
         F.sum(F.col("tf") * F.col("w_q")).alias("m_sum"),

@@ -207,25 +207,6 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> D
     )
 
 
-def minhash_signature(shingles: Column, num_perm: int = 24) -> Column:
-    """Array-form MinHash signature for a shingles column (small-data /
-    single-doc convenience; the corpus path uses `shingle_rows` +
-    aggregation in `minhash_lsh_pairs` instead)."""
-    perms = _permutation_constants(num_perm)
-    hashes = F.transform(shingles, lambda s: stable_long_hash(s) % _MERSENNE)
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, _permute(a, b)))
-            for (a, b) in perms
-        ]
-    )
-
-
-def _permute(a: int, b: int):
-    # closure capture — see the arity note on `bit_merge`.
-    return lambda h: (F.lit(a) * h + F.lit(b)) % _MERSENNE
-
-
 def _minhash_sigs(sh: DataFrame, num_perm: int) -> DataFrame:
     """(doc_id, n_sh, sig_0..sig_{n-1}) from hashed shingle rows — one
     groupBy with num_perm map-side-combined min-aggregates.

@@ -69,11 +69,6 @@ def marker_count_in(tokens: Column, markers: list[str]) -> Column:
     ).cast("int")
 
 
-def marker_count(text: Column, markers: list[str]) -> Column:
-    """How many whitespace tokens are in the marker list (with repeats)."""
-    return marker_count_in(ws_tokens(F.lower(text)), markers)
-
-
 def language_id_from_counts(
     counts: dict[str, Column], cjk_count: Column
 ) -> Column:

@@ -34,19 +34,14 @@ def run_week(
     store: TableStore,
     raw_root: str,
     execution_date: str | dt.date,
-    infer_schema: bool = False,
-    idempotent_fact: bool = True,
-    bucketed_dims: int | None = None,
     stage_timings: dict | None = None,
 ) -> dict[str, int]:
     """Run one weekly timestep end-to-end. Returns row counts per table.
 
-    ``bucketed_dims=N`` switches the dimension merges to the bucketed
-    backend (`scd2.scd2_merge_bucketed` with N key-hash buckets): only
-    buckets containing changed/new keys are rewritten instead of the
-    whole dimension — the row-level-merge cost model for dims whose size
-    makes rebuild-overwrite expensive. Default (None) keeps the
-    rebuild-overwrite path; results are row-identical either way.
+    Each dimension is merged with `scd2.scd2_merge` and rebuilt in full
+    (`TableStore.overwrite`); the fact table gets only this week's
+    ``date_id`` partition (`TableStore.overwrite_partitions`), so a
+    re-run of a week replaces it in place.
 
     ``stage_timings`` (r13, VERDICT r12 #2): pass a dict and each
     stage's wall seconds are accumulated into it (el_staging,
@@ -87,7 +82,7 @@ def run_week(
     from manifold_spark.plans.parallelism import scoped_scan_split_size
 
     path = ingest.timestep_path(raw_root, execution_date)
-    base = clean.clean_listings(ingest.load_json_listings(spark, path, infer_schema))
+    base = clean.clean_listings(ingest.load_json_listings(spark, path))
     base = base.cache()
     try:
         # r14: the weekly snapshot is typically ONE JSON-lines file, so
@@ -131,19 +126,13 @@ def run_week(
     def _merge_dim(item: tuple[str, str]) -> tuple[str, int]:
         dim_name, sk_col = item
         base_df = store.read(spark, "staging", dim_name)
-        if bucketed_dims:
-            scd2.scd2_merge_bucketed(
-                spark, store, "presentation", dim_name, base_df, sk_col,
-                DIM_KEYS[dim_name], execution_date, n_buckets=bucketed_dims,
-            )
-        else:
-            target = (
-                store.read(spark, "presentation", dim_name)
-                if store.exists("presentation", dim_name)
-                else None
-            )
-            merged = scd2.scd2_merge(target, base_df, sk_col, DIM_KEYS[dim_name], execution_date)
-            store.overwrite(merged, "presentation", dim_name)
+        target = (
+            store.read(spark, "presentation", dim_name)
+            if store.exists("presentation", dim_name)
+            else None
+        )
+        merged = scd2.scd2_merge(target, base_df, sk_col, DIM_KEYS[dim_name], execution_date)
+        store.overwrite(merged, "presentation", dim_name)
         dim = store.read(spark, "presentation", dim_name)
         return dim_name, quality.assert_dim_invariants(
             dim, DIM_KEYS[dim_name], dim_name
@@ -166,9 +155,9 @@ def run_week(
     def _fact_prep() -> tuple[int, int]:
         if not store.exists("presentation", "fact_stock"):
             return 0, 0
-        existing = store.read(spark, "presentation", "fact_stock")
-        if idempotent_fact:
-            existing = existing.filter(F.col("date_id") != week_date_id)
+        existing = store.read(spark, "presentation", "fact_stock").filter(
+            F.col("date_id") != week_date_id
+        )
         row = existing.agg(
             F.max("id").alias("mx"), F.count(F.lit(1)).alias("n")
         ).collect()[0]
@@ -183,18 +172,21 @@ def run_week(
     _mark("scd2_dims")
 
     # Stage 6 — fact load: write ONLY the week's date_id partition.
-    # Idempotent mode (default) uses dynamic partition overwrite, so a
-    # re-run replaces the week in place; the id offset comes from the OTHER
-    # partitions' max (a driver-side scalar resolved before the write job
-    # starts, so there is no read-while-write hazard). Cost per week is
-    # O(week), never O(table history); all other partitions' files are
-    # untouched. Readers get partition pruning on the time axis (the
-    # reference's path-partitioning, now as a Catalyst-visible layout).
+    # Dynamic partition overwrite, so a re-run replaces the week in place;
+    # the id offset comes from the OTHER partitions' max (a driver-side
+    # scalar resolved before the write job starts, so there is no
+    # read-while-write hazard). Cost per week is O(week), never O(table
+    # history); all other partitions' files are untouched. Readers get
+    # partition pruning on the time axis (the reference's
+    # path-partitioning, now as a Catalyst-visible layout).
     # r15: the non-empty gate's count comes from an Observation ON the
     # write job (written rows) plus the retained-partition count from
     # `_fact_prep` — the same total the old read-back count() computed,
     # without re-scanning the table after the write (guide §1.4/§2.6;
-    # VERDICT r14 #3).
+    # VERDICT r14 #3). That total matches disk because `fact_new` is
+    # never empty here: staging_quality already failed on an empty
+    # staging.fact_stock, and `load_fact_stock` only left-joins it, so
+    # the write always replaces the week's partition.
     from pyspark.sql import Observation
 
     fact_staging = store.read(spark, "staging", "fact_stock")
@@ -209,10 +201,7 @@ def run_week(
     )
     obs = Observation("fact_load_rows")
     fact_new = fact_new.observe(obs, F.count(F.lit(1)).alias("n"))
-    if idempotent_fact:
-        store.overwrite_partitions(fact_new, "presentation", "fact_stock", partition_by=["date_id"])
-    else:
-        store.append(fact_new, "presentation", "fact_stock", partition_by=["date_id"])
+    store.overwrite_partitions(fact_new, "presentation", "fact_stock", partition_by=["date_id"])
     total_fact = n_retained + int(obs.get["n"])
     if total_fact == 0:
         raise quality.QualityError("table 'fact_stock' is empty")

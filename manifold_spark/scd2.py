@@ -22,6 +22,12 @@ one serial point is the surrogate-key `row_number` over *inserted rows
 only* (a single-partition window over the weekly delta, not the dim);
 at extreme dim scale swap `assign_surrogate_keys` for a
 zipWithIndex-per-partition scheme — the merge logic is unchanged.
+
+Persistence: `scd2_merge` returns the whole rebuilt dimension and the
+caller overwrites the table with it (`pipeline.run_week`). Rewriting
+only the key-hash buckets that hold changed keys does not pay: ~8% of
+the keys change a week, so hashed over 16 buckets every bucket changes
+anyway (SCALING.md).
 """
 
 from __future__ import annotations
@@ -34,6 +40,8 @@ from pyspark.sql import functions as F
 from manifold_spark.schema import SCD2_SENTINEL
 
 SCD2_COLS = ["record_start_date", "record_end_date"]
+#: Change-detection fingerprint column (`stage.with_fingerprint`'s output).
+HASH_COL = "hash"
 
 
 def assign_surrogate_keys(
@@ -138,8 +146,6 @@ def scd2_merge(
     sk_col: str,
     keys: list[str],
     as_of: str | dt.date,
-    hash_col: str = "hash",
-    sk_offset: int | None = None,
 ) -> DataFrame:
     """Merge a staging snapshot ``base`` into SCD2 dimension ``target``,
     returning the REBUILT dimension (caller persists it — rebuild-overwrite
@@ -206,10 +212,10 @@ def scd2_merge(
         .withColumn(
             "__b_rn",
             F.row_number().over(
-                Window.partitionBy("__jk").orderBy(F.col(hash_col))
+                Window.partitionBy("__jk").orderBy(F.col(HASH_COL))
             ),
         )
-        .withColumn("__b_hs", F.collect_set(F.col(hash_col)).over(full_frame_b))
+        .withColumn("__b_hs", F.collect_set(F.col(HASH_COL)).over(full_frame_b))
         .alias("b")
     )
     # `__t` is an infallible t-presence marker (a join output column that
@@ -219,7 +225,7 @@ def scd2_merge(
     t = (
         active.withColumn("__jk", jk)
         .withColumn("__t", F.lit(1))
-        .withColumn("__t_hs", F.collect_set(F.col(hash_col)).over(full_frame_b))
+        .withColumn("__t_hs", F.collect_set(F.col(HASH_COL)).over(full_frame_b))
         .alias("t")
     )
     joined = t.join(b, F.col("t.__jk") == F.col("b.__jk"), "full_outer")
@@ -265,7 +271,7 @@ def scd2_merge(
         F.col("__b").isNotNull()
         & (
             F.col(f"t.{sk_col}").isNull()
-            | (F.col(f"t.{hash_col}") != F.col(f"b.{hash_col}"))
+            | (F.col(f"t.{HASH_COL}") != F.col(f"b.{HASH_COL}"))
         )
     ).select(*[F.col(f"b.{c}").alias(c) for c in payload_cols])
     inserts = inserts_src.withColumns(
@@ -275,14 +281,8 @@ def scd2_merge(
         }
     )
     # Surrogate keys continue from the current max (driver-side scalar — one
-    # tiny action over the dim's sk column only). `sk_offset` overrides it
-    # when the caller merges a SUBSET of the dimension (bucketed backend)
-    # but keys must stay unique table-wide.
-    max_sk = (
-        sk_offset
-        if sk_offset is not None
-        else (target.agg(F.max(sk_col)).collect()[0][0] or 0)
-    )
+    # tiny action over the dim's sk column only).
+    max_sk = target.agg(F.max(sk_col)).collect()[0][0] or 0
     inserts = assign_surrogate_keys(inserts, sk_col, keys, offset=max_sk)
 
     ordered = [sk_col, *payload_cols, *SCD2_COLS]
@@ -299,8 +299,6 @@ def _scd2_merge_joins(
     sk_col: str,
     keys: list[str],
     as_of: str | dt.date,
-    hash_col: str = "hash",
-    sk_offset: int | None = None,
 ) -> DataFrame:
     """The pre-r15 4-join merge, kept verbatim as the REFERENCE FORM the
     single-pass `scd2_merge` is pinned against (bit-identity on unique,
@@ -325,7 +323,7 @@ def _scd2_merge_joins(
     # the unique-active invariant makes the key a sufficient identifier).
     changed_keys = (
         t.join(b, key_cond, "inner")
-        .filter(F.col(f"t.{hash_col}") != F.col(f"b.{hash_col}"))
+        .filter(F.col(f"t.{HASH_COL}") != F.col(f"b.{HASH_COL}"))
         .select(*[F.col(f"t.{k}").alias(k) for k in keys])
     )
 
@@ -345,7 +343,7 @@ def _scd2_merge_joins(
         b.join(t, key_cond, "left")
         .filter(
             F.col(f"t.{sk_col}").isNull()
-            | (F.col(f"t.{hash_col}") != F.col(f"b.{hash_col}"))
+            | (F.col(f"t.{HASH_COL}") != F.col(f"b.{HASH_COL}"))
         )
         .select(*[F.col(f"b.{c}").alias(c) for c in payload_cols])
     )
@@ -355,11 +353,7 @@ def _scd2_merge_joins(
             "record_end_date": sentinel,
         }
     )
-    max_sk = (
-        sk_offset
-        if sk_offset is not None
-        else (target.agg(F.max(sk_col)).collect()[0][0] or 0)
-    )
+    max_sk = target.agg(F.max(sk_col)).collect()[0][0] or 0
     inserts = assign_surrogate_keys(inserts, sk_col, keys, offset=max_sk)
 
     ordered = [sk_col, *payload_cols, *SCD2_COLS]
@@ -369,88 +363,3 @@ def _scd2_merge_joins(
         .unionByName(expired.select(*ordered))
         .unionByName(inserts.select(*ordered))
     )
-
-
-# ---------------------------------------------------------------------------
-# Bucketed merge backend: row-level-merge economics on plain Parquet.
-# ---------------------------------------------------------------------------
-
-#: Partition column carrying the key-hash bucket in bucketed dimensions.
-BUCKET_COL = "__kb"
-
-
-def key_bucket(keys: list[str], n_buckets: int):
-    """Deterministic key-hash bucket (md5-derived, layout- and engine-
-    independent); coalesce makes it non-nullable for clean joins/pruning."""
-    from manifold_spark.functions.hashing import stable_long_hash
-
-    grain = F.concat_ws("||", *[F.col(k).cast("string") for k in keys])
-    return F.coalesce((stable_long_hash(grain) % n_buckets).cast("int"), F.lit(0))
-
-
-def scd2_merge_bucketed(
-    spark,
-    store,
-    database: str,
-    table: str,
-    base: DataFrame,
-    sk_col: str,
-    keys: list[str],
-    as_of: str | dt.date,
-    hash_col: str = "hash",
-    n_buckets: int = 16,
-) -> None:
-    """SCD2 merge that REWRITES ONLY the buckets containing changed or new
-    keys — the rebuild-overwrite cost model (O(dimension) per week) drops
-    to O(changed buckets), which is what a Delta/Iceberg MERGE would buy,
-    on plain Parquet.
-
-    The dimension is stored partitioned by ``__kb = hash(keys) % n_buckets``.
-    Per merge: detect changed-or-new keys against the active slice (a read
-    over the whole dim — reads are cheap, writes are the scale problem),
-    collect their bucket ids (≤ n_buckets values), run the ordinary
-    `scd2_merge` on just those buckets' rows, and swap exactly those
-    partition directories in. A snapshot with zero real changes writes
-    NOTHING; unchanged buckets' files stay byte-identical.
-
-    Same merge semantics as `scd2_merge` (keys absent from staging are
-    untouched), same surrogate-key sequence (offset = table-wide max).
-    """
-    if not store.exists(database, table):
-        out = initial_load(base, sk_col, keys, as_of).withColumn(
-            BUCKET_COL, key_bucket(keys, n_buckets)
-        )
-        store.overwrite(out, database, table, partition_by=[BUCKET_COL])
-        return
-
-    target = store.read(spark, database, table)
-    sentinel = F.lit(SCD2_SENTINEL).cast("date")
-    active = target.filter(F.col("record_end_date") == sentinel)
-
-    b, t = base.alias("b"), active.alias("t")
-    key_cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys]
-    delta_keys = (
-        b.join(t, key_cond, "left")
-        .filter(
-            F.col(f"t.{sk_col}").isNull()
-            | (F.col(f"t.{hash_col}") != F.col(f"b.{hash_col}"))
-        )
-        .select(*[F.col(f"b.{k}").alias(k) for k in keys])
-    )
-    affected = [
-        r["kb"]
-        for r in delta_keys.select(key_bucket(keys, n_buckets).alias("kb"))
-        .distinct()
-        .collect()
-    ]
-    if not affected:
-        return  # nothing changed: zero writes
-
-    max_sk = target.agg(F.max(sk_col)).collect()[0][0] or 0
-    tgt_sub = target.filter(F.col(BUCKET_COL).isin(affected)).drop(BUCKET_COL)
-    base_sub = base.filter(key_bucket(keys, n_buckets).isin(affected))
-    merged = scd2_merge(
-        tgt_sub, base_sub, sk_col, keys, as_of, hash_col, sk_offset=max_sk
-    )
-    out = merged.withColumn(BUCKET_COL, key_bucket(keys, n_buckets))
-    store.swap_partitions(out, database, table, partition_by=[BUCKET_COL])

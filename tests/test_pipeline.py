@@ -2,14 +2,16 @@
 invariants): two weeks, SCD2 evolution, fact resolution."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from manifold_spark.catalog import TableStore
 from manifold_spark.pipeline import run_week
-from manifold_spark.quality import duplicate_active_keys
+from manifold_spark.quality import QualityError, duplicate_active_keys
 from manifold_spark.schema import DIM_KEYS
+from manifold_spark.sources.fixtures import write_week
 
 SENTINEL = dt.date(9999, 12, 31)
 
@@ -78,8 +80,6 @@ def test_fact_idempotent_rerun(spark, warehouse, listings_weeks):
 
 def _partition_snapshot(path):
     """{relpath: (size, mtime_ns)} for every data file under a table dir."""
-    import os
-
     snap = {}
     for dirpath, _, files in os.walk(path):
         for f in files:
@@ -112,27 +112,31 @@ def test_fact_load_touches_only_its_partition(spark, listings_weeks, tmp_path_fa
     assert any(p.startswith(week2_key) for p in snap)
 
 
-def test_bucketed_dims_pipeline_equivalent(spark, warehouse, listings_weeks, tmp_path_factory):
-    """run_week with the bucketed dimension backend must produce tables
-    row-identical to the rebuild-overwrite default."""
-    store_b = TableStore(str(tmp_path_factory.mktemp("wh-bucketed")))
+def test_reported_counts_match_disk(spark, listings_weeks, tmp_path_factory):
+    """`run_week`'s reported staging.* and presentation.* counts equal
+    what a read-back finds on disk — after each week and after a re-run
+    of a week. An empty week fails at staging_quality, before any
+    presentation table is written, so no stale or partial state can
+    make the report and the disk disagree."""
+    store = TableStore(str(tmp_path_factory.mktemp("wh-counts")))
     meta = listings_weeks
-    run_week(spark, store_b, meta["root"], meta["week1"], bucketed_dims=8)
-    run_week(spark, store_b, meta["root"], meta["week2"], bucketed_dims=8)
-    store = warehouse["store"]
-    from manifold_spark.scd2 import BUCKET_COL
+    tables = ("dim_broker", "dim_geography", "dim_asset", "fact_stock")
+    expected_keys = {f"{db}.{t}" for db in ("staging", "presentation") for t in tables}
+    for week in (meta["week1"], meta["week2"], meta["week2"]):
+        counts = run_week(spark, store, meta["root"], week)
+        assert set(counts) == expected_keys
+        assert counts == {k: store.read(spark, *k.split(".")).count() for k in counts}
 
-    for dim in DIM_KEYS:
-        plain = store.read(spark, "presentation", dim)
-        bucketed = store_b.read(spark, "presentation", dim).drop(BUCKET_COL)
-        assert sorted(plain.collect(), key=str) == sorted(
-            bucketed.select(*plain.columns).collect(), key=str
-        )
-    fact_p = store.read(spark, "presentation", "fact_stock")
-    fact_b = store_b.read(spark, "presentation", "fact_stock")
-    assert sorted(fact_p.collect(), key=str) == sorted(
-        fact_b.select(*fact_p.columns).collect(), key=str
-    )
+    presentation = os.path.join(store.root, "presentation")
+    before = _partition_snapshot(presentation)
+    empty_root = str(tmp_path_factory.mktemp("raw-empty"))
+    empty_week = dt.date.fromisoformat(meta["week2"]) + dt.timedelta(weeks=1)
+    write_week(empty_root, empty_week, [])
+    stages = {}
+    with pytest.raises(QualityError, match=r"staging\."):
+        run_week(spark, store, empty_root, empty_week, stage_timings=stages)
+    assert set(stages) == {"el_staging"}  # raised inside staging_quality
+    assert _partition_snapshot(presentation) == before
 
 
 def test_date_dimension(spark, warehouse):
