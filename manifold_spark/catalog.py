@@ -1,8 +1,18 @@
-"""Path-based warehouse catalog (reference D1-D3, D8, S5).
+"""Path-based warehouse catalog (reference D1-D3, D7, D8, S5).
 
 The reference's `staging` / `presentation` schemas live in Redshift; ours
 are directories of Parquet tables. `TRUNCATE` + `COPY` collapses to an
-overwrite write (reference S5/D8); DDL collapses to the write's schema.
+overwrite write (reference S5/D8).
+
+The DDL is declared, not inferred: every table has its schema in
+`schema.WAREHOUSE_SCHEMAS` (reference D2/D3, `sql_queries_staging.py`,
+`sql_queries_presentation.py`). `read` hands that schema to the Parquet
+reader, so a read plans without the footer-inference job Spark would
+otherwise run per call; both writes compare the frame's column names,
+order and types (nullability aside) with the declaration and raise
+before touching the table dir. An undeclared table is an error on read
+and write, as a table without a `CREATE TABLE` would be; there is no
+inference fallback.
 
 Two write modes, one per table kind the weekly job writes:
 
@@ -27,6 +37,20 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from manifold_spark.schema import warehouse_schema
+
+
+def _check_schema(df: DataFrame, database: str, table: str) -> None:
+    """Raise unless ``df`` has the declared column names, order and types
+    of ``database.table`` (nullability is not compared)."""
+    got = df.schema.simpleString()
+    want = warehouse_schema(database, table).simpleString()
+    if got != want:
+        raise ValueError(
+            f"frame {got} does not match the declared schema of "
+            f"{database}.{table}, {want}"
+        )
+
 
 class TableStore:
     """A tiny two-level catalog: ``{root}/{database}/{table}`` Parquet dirs."""
@@ -47,7 +71,9 @@ class TableStore:
         )
 
     def read(self, spark: SparkSession, database: str, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(database, table))
+        return spark.read.schema(warehouse_schema(database, table)).parquet(
+            self.path(database, table)
+        )
 
     def overwrite(
         self,
@@ -58,6 +84,7 @@ class TableStore:
     ) -> None:
         """Truncate-and-load (reference D8+S5). Stage-to-tmp + swap so the
         source of a rebuild can also be its destination."""
+        _check_schema(df, database, table)
         final = self.path(database, table)
         tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
         writer = df.write.mode("overwrite")
@@ -81,14 +108,10 @@ class TableStore:
         O(week), not O(table history). Safe without the tmp-swap dance
         because the written partitions' data derives from staging, never
         from the table being written."""
+        _check_schema(df, database, table)
         writer = (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
         )
         writer.parquet(self.path(database, table))
-
-    def columns(self, spark: SparkSession, database: str, table: str) -> list[str]:
-        """Column introspection (reference D7, `dimension_operator.py:100-137`
-        queries information_schema; here the Parquet footer is the schema)."""
-        return self.read(spark, database, table).columns

@@ -8,28 +8,16 @@ the source scan.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from manifold_spark import schema as S
+from manifold_spark.schema import snake_case
 
 #: HTML-tag strip pattern: removes every tag except `<a …>` / `</a>`
 #: (reference P4, `/root/reference/scripts/el_to_parquet.py:66-69`).
 #: Java regex supports the negative lookahead.
 HTML_STRIP_PATTERN = r"<(?!\/?a(?=>|\s.*>))\/?.*?>"
-
-_CAMEL_BOUNDARY = re.compile(r"(?<=[a-z0-9])(?=[A-Z])|(?<=[A-Z])(?=[A-Z][a-z])")
-
-
-def snake_case(name: str) -> str:
-    """CamelCase → snake_case (reference P7, `el_to_parquet.py:98-116`).
-
-    `ContractNumber` → `contract_number`, `AreaNet` → `area_net`; already
-    snake names pass through unchanged.
-    """
-    return _CAMEL_BOUNDARY.sub("_", name).lower()
 
 
 def fill_defaults(
@@ -97,5 +85,5 @@ def clean_listings(df: DataFrame) -> DataFrame:
     df = df.select(*present)
     df = fill_defaults(df)
     df = clean_text_cols(df)
-    df = rename_columns(df, {"PriceCurrencyFormated": "Price"})
+    df = rename_columns(df, S.RENAMED_ATTRIBUTES)
     return snake_case_columns(df)

@@ -19,13 +19,18 @@ class QualityError(AssertionError):
     """A data-quality invariant failed."""
 
 
-def assert_nonempty(df: DataFrame, name: str) -> int:
-    """Reference A2 (`data_quality_count_operator.py:17,27-48`): fail if the
-    table has no rows. Returns the count."""
-    n = df.count()
+def check_nonempty(n: int, name: str) -> int:
+    """Reference A2 (`data_quality_count_operator.py:17,27-48`) on a row
+    count already in hand, e.g. one observed on the table's write: fail
+    if it is zero. Returns ``n``."""
     if n == 0:
         raise QualityError(f"table {name!r} is empty")
     return n
+
+
+def assert_nonempty(df: DataFrame, name: str) -> int:
+    """Reference A2: fail if ``df`` has no rows. Returns the count."""
+    return check_nonempty(df.count(), name)
 
 
 def duplicate_active_keys(df: DataFrame, keys: list[str]) -> DataFrame:

@@ -37,11 +37,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from manifold_spark.schema import SCD2_SENTINEL
-
-SCD2_COLS = ["record_start_date", "record_end_date"]
-#: Change-detection fingerprint column (`stage.with_fingerprint`'s output).
-HASH_COL = "hash"
+from manifold_spark.schema import HASH_COL, SCD2_COLS, SCD2_SENTINEL
 
 
 def assign_surrogate_keys(

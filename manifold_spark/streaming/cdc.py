@@ -22,13 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from manifold_spark import clean, scd2, stage
 from manifold_spark.catalog import TableStore
-from manifold_spark.schema import DIM_KEYS, LISTING_SCHEMA, STAGING_COLUMNS
-
-_DIMS = {
-    "dim_broker": "broker_id",
-    "dim_geography": "geography_id",
-    "dim_asset": "asset_id",
-}
+from manifold_spark.schema import (
+    DIM_KEYS,
+    LISTING_SCHEMA,
+    STAGING_COLUMNS,
+    SURROGATE_KEYS,
+)
 
 
 def merge_batch(
@@ -39,7 +38,7 @@ def merge_batch(
 ) -> None:
     """Apply one micro-batch of raw listings to the SCD2 dimensions —
     shared by the streaming sink and any batch backfill."""
-    dims = _DIMS if dims is None else dims
+    dims = SURROGATE_KEYS if dims is None else dims
     if raw_batch.isEmpty():
         return
     spark = raw_batch.sparkSession

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from manifold_spark.catalog import TableStore
 from manifold_spark.pipeline import run_week
 from manifold_spark.quality import QualityError, duplicate_active_keys
-from manifold_spark.schema import DIM_KEYS
+from manifold_spark.schema import DIM_KEYS, WAREHOUSE_SCHEMAS
 from manifold_spark.sources.fixtures import write_week
 
 SENTINEL = dt.date(9999, 12, 31)
@@ -30,6 +30,73 @@ def test_staging_written(spark, warehouse):
         df = store.read(spark, "staging", t)
         assert df.count() > 0
         assert "hash" in df.columns or t == "fact_stock"
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_declared_schemas_match_disk(spark, warehouse):
+    """After weeks 1 and 2, every warehouse table as Spark infers it from
+    its files (partitioned `fact_stock` and `dim_date` included) has
+    exactly its declared column names, order and types."""
+    store = warehouse["store"]
+    declared = [(db, t) for db, tables in WAREHOUSE_SCHEMAS.items() for t in tables]
+    assert len(declared) == 9
+    for db, t in declared:
+        inferred = spark.read.parquet(store.path(db, t)).schema
+        assert _fields(inferred) == _fields(WAREHOUSE_SCHEMAS[db][t]), f"{db}.{t}"
+
+
+def test_declared_read_runs_no_job(spark, warehouse):
+    """`TableStore.read` hands the declared schema to the reader, so no
+    read launches the Parquet footer-inference job."""
+    store = warehouse["store"]
+    sc = spark.sparkContext
+    sc.setJobGroup("declared-read", "TableStore.read job-count pin")
+    try:
+        frames = [
+            store.read(spark, db, t) for db, tables in WAREHOUSE_SCHEMAS.items() for t in tables
+        ]
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("declared-read") == []
+    assert [_fields(df.schema) for df in frames] == [
+        _fields(s) for tables in WAREHOUSE_SCHEMAS.values() for s in tables.values()
+    ]
+
+
+def test_writes_reject_undeclared_schemas(spark, warehouse):
+    """A frame whose columns differ from the declaration in name, order
+    or type, or a table that is not declared at all, raises before the
+    write; the table's files stay as they were."""
+    store = warehouse["store"]
+    presentation = os.path.join(store.root, "presentation")
+    before = _partition_snapshot(presentation)
+    broker = store.read(spark, "presentation", "dim_broker")
+    fact = store.read(spark, "presentation", "fact_stock")
+    bad = {
+        "extra column": broker.withColumn("extra", F.lit(1)),
+        "missing column": broker.drop("hash"),
+        "reordered": broker.select("broker", "broker_id", "hash", "record_start_date", "record_end_date"),
+        "retyped": broker.withColumn("broker_id", F.col("broker_id").cast("int")),
+    }
+    for df in bad.values():
+        with pytest.raises(ValueError, match="presentation.dim_broker"):
+            store.overwrite(df, "presentation", "dim_broker")
+    with pytest.raises(ValueError, match="presentation.fact_stock"):
+        store.overwrite_partitions(
+            fact.withColumn("price", F.col("price").cast("float")),
+            "presentation",
+            "fact_stock",
+            partition_by=["date_id"],
+        )
+    with pytest.raises(ValueError, match="not declared"):
+        store.overwrite(broker, "presentation", "dim_broker_copy")
+    with pytest.raises(ValueError, match="not declared"):
+        store.read(spark, "presentation", "dim_broker_copy")
+    assert _partition_snapshot(presentation) == before
+    assert sorted(os.listdir(presentation)) == sorted(WAREHOUSE_SCHEMAS["presentation"])
 
 
 def test_unique_active_invariant(spark, warehouse):
