@@ -68,7 +68,8 @@ def curate_corpus(
     `release_shingle_caches()`). The quality stage has three lineage
     boundaries (`plans.boundary.stage_boundary`: a lazy localCheckpoint
     by default, a durable parquet write-read under
-    ``spark.manifold.stageBoundary=parquet``):
+    ``spark.manifold.stageBoundary=parquet``, made while this function
+    builds the plan, not at a later action):
 
     - "curation-repetition": the repetition-filtered survivors, which LM
       training, scoring and the join back all read. Without it each of
@@ -79,6 +80,15 @@ def curate_corpus(
     - "lm-model": the char-trigram LM inside `score_docs`.
     - "curation-quality": the bucketed survivors; truncates the LM-scored
       plan before the mixture stage reads it twice.
+
+    The quality stage's character and word n-grams come from one
+    `regexp_extract_all` pass per document (`lm.extract_char_ngrams`,
+    `repetition.extract_word_ngrams`), and the repetition filter's plan
+    has no per-character explode: it reads only ``repetition_pass``, so
+    the character-entropy branch is dropped. On the same corpus and host
+    this cut one call's JVM allocation from 10.2 to 6.1 GB (medians of
+    10 interleaved runs, 10/10 wins); its time, 18.1 → 16.6 s, moved
+    less than the run-to-run spread.
     """
     from manifold_spark.operators.c4 import (
         DEFAULT_BLOCKLIST,
@@ -145,8 +155,8 @@ def curate_corpus(
         )
         # Boundary: LM training, scoring and the join back all read
         # `survivors` (score_docs alone reads it three times); without
-        # this each read re-ran the repetition explode over every char
-        # and word n-gram.
+        # this each read re-ran the repetition explode over every line
+        # and word n-gram. Parquet mode writes here, at plan-build time.
         survivors = stage_boundary(survivors, "curation-repetition")
     scored = score_docs(survivors, text_col=text_col, id_col=id_col).join(
         survivors.select(id_col, lang_col, text_col), id_col
@@ -166,7 +176,8 @@ def curate_corpus(
     # downstream action re-canonicalized it while planning (measured:
     # the mixture stage cost 13 s of which <1 s was execution). This is
     # the last of the three quality-stage boundaries (see the docstring).
-    # Lazy in local mode: the stage count below materializes it.
+    # Lazy in local mode: the stage count below materializes it; parquet
+    # mode writes here, at plan-build time.
     quality = stage_boundary(quality, "curation-quality")
     report["quality"] = quality.count()
 

@@ -13,12 +13,17 @@ C(c₁c₂·) sums them by 2-char prefix, and V is the corpus character
 vocabulary size. Everything derives from ONE trigram-count table.
 
 Scale shape:
-- Training is one explode (3 rows per normalized char — trigram stream +
-  the unigram vocab stream) into a map-side-combined groupBy whose key
-  space is bounded by |charset|³, NOT the corpus: the counts table stays
+- Characters and trigrams each come from one codegen'd
+  `regexp_extract_all` pass over the normalized text
+  (`extract_char_ngrams`): no per-element lambda, index array or boxed
+  index arithmetic per document. Training
+  explodes the trigram stream and the character stream (2 rows per
+  normalized char) into map-side-combined aggregates whose key space is
+  bounded by |charset|³, NOT the corpus: the counts table stays
   broadcastable (≲ a few M rows for real text) at any corpus size.
-- Scoring joins the document trigram stream against the broadcast model
-  and folds per-doc — one shuffle keyed by doc id.
+- Scoring explodes the document trigram stream a second time, joins it
+  against the broadcast model and folds per-doc — one shuffle keyed by
+  doc id.
 - Cross-engine float discipline: each distinct trigram's log-probability
   is quantized ONCE (floor(ln(p)·10⁶) as bigint) in the model table, so
   the per-document reduction is an integer sum — order-independent and
@@ -55,54 +60,26 @@ def normalize_text(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def char_ngrams(norm: Column, n: int = 3) -> Column:
-    """Array of n-char substrings of the normalized text; shorter than n
-    → empty array (guard matters: sequence counts DOWN past zero).
-
-    Prefer `char_ngrams_from` over a staged `char_array` column in
-    corpus paths: each `substr(i, n)` here seeks from the string start
-    (UTF-8 has no O(1) char index), so this form is O(len²) per doc."""
-    return F.when(
-        F.length(norm) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(norm) - (n - 1)),
-            lambda i: norm.substr(i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+#: One character (a full code point: Java regex matches a surrogate pair
+#: as one character) per match.
+CHAR_PATTERN = r"(?s)(.)"
 
 
-def char_array(norm: Column) -> Column:
-    """One-pass character array of ``norm`` (r14, guide §1.2): split on
-    the empty pattern emits exactly the per-position characters —
-    value-identical to `char_ngrams(norm, 1)` — in O(len) instead of the
-    substr loop's O(len²) UTF-8 seeks. The empty-string guard keeps ''
-    mapping to an empty array regardless of engine edge semantics: on the
-    pinned Spark 4.1.2, split('', '') yields [] (not ['']), and empty-
-    pattern split edge cases (leading/trailing empties) are JVM/Spark-
-    version-sensitive — `test_char_ngrams_from_equals_substr_form` is the
-    guard to re-run when bumping Spark."""
-    return F.when(F.length(norm) > 0, F.split(norm, "")).otherwise(
-        F.array().cast("array<string>")
-    )
+def extract_char_ngrams(text: Column, n: int = 3) -> Column:
+    """Every n-character substring of ``text``, in order, as one
+    `regexp_extract_all` pass; shorter than n → empty array, NULL → NULL.
 
-
-def char_ngrams_from(chars: Column, n: int = 3) -> Column:
-    """n-char grams from a PRE-STAGED `char_array` attribute: gram i is
-    the concat of its n single-char elements — the identical character
-    sequence `substr(i, n)` extracts, via O(1) `element_at` lookups.
-    Stage the array as its own projection first (a lambda capturing a
-    non-attribute subtree re-evaluates it per element)."""
+    For n > 1 a zero-width lookahead captures the window at each start
+    position. After an empty match the regex engine steps one UTF-16
+    unit, so it also tries the position between the two halves of a
+    surrogate pair; the low-surrogate class rejects that start (a
+    lookbehind guard does not). Without it an emoji-heavy doc yields
+    extra half-character grams (`tests/test_text_extract.py` pins this
+    against the substr-per-position reference form)."""
     if n == 1:
-        return chars
-    return F.when(
-        F.size(chars) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(chars) - n),
-            lambda i: F.concat(
-                *[F.element_at(chars, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+        return F.regexp_extract_all(text, F.lit(CHAR_PATTERN), 1)
+    pattern = r"(?s)(?=([^\x{DC00}-\x{DFFF}].{%d}))" % (n - 1)
+    return F.regexp_extract_all(text, F.lit(pattern), 1)
 
 
 def train_char_lm(
@@ -120,25 +97,15 @@ def train_char_lm(
     single-row vocab frame (broadcast by construction).
     """
     docs = ensure_parallelism(docs)  # single-row-group parquet can't split
-    # r14: normalization staged as its own projection — `char_ngrams`'
-    # substr lambda captures its input, and higher-order lambdas
-    # re-evaluate captured subtrees PER ELEMENT: inlined, the
-    # lower+regex+trim normalization ran once per CHARACTER POSITION
-    # (O(len²)/doc; measured 7× on the bare trigram explode). Same rows.
-    # r14 cont.: the CHAR ARRAY is staged too and trigrams concat its
-    # elements — each substr(i, 3) seeks from the string start (UTF-8),
-    # so even over a staged string the extraction was O(len²)/doc.
-    normed = docs.select(normalize_text(F.col(text_col)).alias("__norm")).select(
-        char_array(F.col("__norm")).alias("__chars")
-    )
-    chars = F.col("__chars")
-    tri = normed.select(F.explode(char_ngrams_from(chars, 3)).alias("tri"))
+    normed = docs.select(normalize_text(F.col(text_col)).alias("__norm"))
+    norm = F.col("__norm")
+    tri = normed.select(F.explode(extract_char_ngrams(norm, 3)).alias("tri"))
     c3 = tri.groupBy("tri").agg(F.count(F.lit(1)).alias("c3"))
     c2 = c3.groupBy(F.substring("tri", 1, 2).alias("prefix")).agg(
         F.sum("c3").alias("c2")
     )
     vocab = (
-        normed.select(F.explode(char_ngrams_from(chars, 1)).alias("ch"))
+        normed.select(F.explode(extract_char_ngrams(norm, 1)).alias("ch"))
         .agg(F.countDistinct("ch").alias("v"))
     )
     return (
@@ -207,7 +174,9 @@ def score_docs(
         # localCheckpoint locally (unchanged bench behavior), a parquet
         # write-read under spark.manifold.stageBoundary=parquet so a
         # cluster run survives executor loss (localCheckpoint blocks have
-        # no replication and no recompute lineage).
+        # no replication and no recompute lineage). The parquet mode
+        # writes EAGERLY: the training job runs here, while the plan is
+        # built, even if the caller never runs an action on the result.
         from manifold_spark.plans.boundary import stage_boundary
 
         model = stage_boundary(
@@ -217,15 +186,11 @@ def score_docs(
     v_row = model.select(F.max("v").alias("v_all"))
 
     docs = ensure_parallelism(docs)  # single-row-group parquet can't split
-    # r14: normalization staged (see train_char_lm — inlined it ran per
-    # character position inside the trigram lambda); char array staged
-    # likewise (substr-per-position is O(len²) on UTF-8 strings).
     doc_tri = docs.select(
-        F.col(id_col), normalize_text(F.col(text_col)).alias("__norm")
-    ).select(
-        F.col(id_col), char_array(F.col("__norm")).alias("__chars")
-    ).select(
-        F.col(id_col), F.explode(char_ngrams_from(F.col("__chars"), 3)).alias("tri")
+        F.col(id_col),
+        F.explode(
+            extract_char_ngrams(normalize_text(F.col(text_col)), 3)
+        ).alias("tri"),
     ).withColumn("tri_prefix", F.substring("tri", 1, 2))
 
     scored = (

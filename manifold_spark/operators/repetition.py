@@ -33,13 +33,26 @@ Scale shape (the reason this is NOT per-doc quadratic HOFs): duplicate
 counting needs per-(doc, gram) counts, and a lambda of the form
 ``transform(distinct, g -> size(filter(grams, = g)))`` is O(len²) per
 document — a single pathological 1M-token doc would stall an executor.
-Instead every countable unit (line rows + one row per n-gram per n) is
-exploded into ONE relation keyed by (doc_id, kind, gram): one
+Instead every countable unit (line rows + one row per word n-gram per n)
+is exploded into ONE relation keyed by (doc_id, kind, gram): one
 map-side-combined groupBy produces the counts, a second groupBy(doc_id)
 folds them to per-doc stats, and a left join back to the scan-side
 projection (line/symbol ratios — genuinely O(len) per doc) finishes the
 frame. Two shuffles total, both keyed by doc_id(+gram) — uniform at any
 corpus size, no token-level window, no pair formation.
+
+Extraction is native: each n-gram size is one codegen'd
+`regexp_extract_all` pass over the normalized text
+(`extract_word_ngrams`), and units are tagged by exploding an array of
+(kind, grams) structs — no per-element lambda or index array.
+
+The character-entropy units are their own branch: an (id, char) count
+folded to id and left-joined on id. A caller that does not read
+``char_entropy`` (``curate_corpus`` reads only ``repetition_pass``) gets
+a plan without it — Catalyst drops a left join whose right side is
+unique on the key and contributes no column — so it never explodes a
+row per character. When it is read, the branch adds its own two
+doc_id-keyed shuffles.
 
 The reference engine has no repetition filters (text-only EL pipeline);
 this extends the LLM-pipeline tier alongside `textstats` (quality
@@ -51,6 +64,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from manifold_spark.operators.lm import extract_char_ngrams, normalize_text
 from manifold_spark.operators.textstats import ws_tokens
 from manifold_spark.plans.parallelism import ensure_parallelism
 
@@ -90,26 +104,44 @@ def _nonempty_lines(text: Column) -> Column:
     return F.filter(F.split(text, "\n"), lambda l: F.length(F.trim(l)) > 0)
 
 
-def _word_ngrams(tokens: Column, n: int) -> Column:
-    """Space-joined word n-grams; fewer than n tokens → empty array.
-    The guard matters: sequence(1, k) counts DOWN for k < 1."""
-    return F.when(
-        F.size(tokens) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - n + 1),
-            lambda i: F.array_join(F.slice(tokens, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+def extract_word_ngrams(norm: Column, n: int) -> Column:
+    """Space-joined word n-grams of ``norm`` (`lm.normalize_text` output:
+    single-space-separated lowercase tokens, no edge spaces) in order,
+    as one `regexp_extract_all` pass; fewer than n tokens → empty array.
+
+    A zero-width lookahead at each token start (no non-space before it)
+    captures that token and the n-1 after it. The regex engine steps one
+    UTF-16 unit after an empty match, and the lookbehind alone does not
+    reject the position inside a surrogate pair, so the first character
+    also excludes low surrogates (see `lm.extract_char_ngrams`)."""
+    pattern = r"(?<![^ ])(?=([^ \x{DC00}-\x{DFFF}][^ ]*(?: [^ ]+){%d}))" % (n - 1)
+    return F.regexp_extract_all(norm, F.lit(pattern), 1)
 
 
-def _tag(kind: str):
-    """Struct-tagging lambda factory (a plain closure over the loop var
-    would late-bind; a default arg would break HOF arity inspection)."""
-
-    def inner(gram: Column) -> Column:
-        return F.struct(F.lit(kind).alias("kind"), gram.alias("gram"))
-
-    return inner
+def _units(docs: DataFrame, text: Column, id_col: str) -> DataFrame:
+    """One relation of every countable unit, (id, kind, gram): a row per
+    non-empty line (kind 'line') and per word n-gram of each size
+    (kind 'g{n}'), tagged by exploding (kind, units) structs. The n-grams
+    come from the normalized text, which equals
+    array_join(ws_tokens(lower(text)), ' ') (pinned with the unit rows
+    in tests/test_text_extract.py)."""
+    kinds = [F.struct(F.lit("line").alias("kind"), F.col("__lines").alias("units"))]
+    for n in sorted(set(TOP_NGRAM_THRESHOLDS) | set(DUP_NGRAM_THRESHOLDS)):
+        kinds.append(
+            F.struct(
+                F.lit(f"g{n}").alias("kind"),
+                extract_word_ngrams(F.col("__norm"), n).alias("units"),
+            )
+        )
+    return (
+        docs.select(
+            F.col(id_col),
+            normalize_text(text).alias("__norm"),
+            _nonempty_lines(text).alias("__lines"),
+        )
+        .select(F.col(id_col), F.explode(F.array(*kinds)).alias("k"))
+        .select(id_col, F.col("k.kind").alias("kind"), F.explode("k.units").alias("gram"))
+    )
 
 
 def repetition_signals(
@@ -131,42 +163,13 @@ def repetition_signals(
     # NULL text reads as degenerate-empty (0 lines, 0 fractions), not a
     # row of NULL metrics.
     text = F.coalesce(F.col(text_col), F.lit(""))
-    tokens = ws_tokens(F.lower(text))
     lines = _nonempty_lines(text)
     top_ns = sorted(TOP_NGRAM_THRESHOLDS)
     dup_ns = sorted(DUP_NGRAM_THRESHOLDS)
 
-    # One relation of every countable unit: lines + n-grams for every n
-    # + (late r8) raw characters for the entropy signal. Characters ride
-    # the SAME exploded-counts shuffle — no new plan stage.
-    # r14 (guide §1.2): split('') instead of the per-position substr loop
-    # — substr(i, 1) seeks from the string start (UTF-8 has no O(1) char
-    # index), so extraction was O(len²)/doc; the split emits the
-    # identical character list (incl. empty/NULL handling) in one pass.
-    from manifold_spark.operators.lm import char_array
-
-    chars = char_array(text)
-    # r14: tokens staged as an attribute before the n-gram transforms —
-    # `_word_ngrams`' slice lambda captures its token input and
-    # higher-order lambdas re-evaluate captured subtrees per element, so
-    # the inlined form re-tokenized the document once per n-gram
-    # position × 5 gram sizes (O(len²)). Same unit rows.
-    toked = docs.select(
-        F.col(id_col),
-        tokens.alias("__toks"),
-        F.transform(lines, _tag("line")).alias("__lines_tagged"),
-        F.transform(chars, _tag("c1")).alias("__chars_tagged"),
+    counts = _units(docs, text, id_col).groupBy(id_col, "kind", "gram").agg(
+        F.count(F.lit(1)).alias("cnt")
     )
-    unit_arrays = [F.col("__lines_tagged"), F.col("__chars_tagged")]
-    for n in sorted(set(top_ns) | set(dup_ns)):
-        unit_arrays.append(
-            F.transform(_word_ngrams(F.col("__toks"), n), _tag(f"g{n}"))
-        )
-    units = toked.select(
-        F.col(id_col), F.explode(F.concat(*unit_arrays)).alias("u")
-    ).select(id_col, F.col("u.kind").alias("kind"), F.col("u.gram").alias("gram"))
-
-    counts = units.groupBy(id_col, "kind", "gram").agg(F.count(F.lit(1)).alias("cnt"))
     kind_stats = counts.groupBy(id_col, "kind").agg(
         F.sum("cnt").alias("total"),
         F.count(F.lit(1)).alias("n_distinct"),
@@ -174,14 +177,26 @@ def repetition_signals(
         F.max(F.col("cnt") * F.lit(_TOP_CODE_SCALE) + F.length("gram")).alias(
             "top_code"
         ),
-        # Σ cnt·floor(ln(cnt)·S) — the entropy numerator's variable part
-        # (only read for kind 'c1'; ln(1)=0 exactly, so singletons add 0)
-        F.sum(
-            F.col("cnt")
-            * F.floor(
-                F.log(F.col("cnt").cast("double")) * F.lit(float(_ENT_SCALE))
-            ).cast("long")
-        ).alias("ent_sum_q"),
+    )
+
+    # Character entropy: its own (id, char) → id branch, left-joined on
+    # id below, so a plan that does not read char_entropy drops it.
+    char_stats = (
+        docs.select(F.col(id_col), F.explode(extract_char_ngrams(text, 1)).alias("ch"))
+        .groupBy(id_col, "ch")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .groupBy(id_col)
+        .agg(
+            F.sum("cnt").alias("c1_total"),
+            # Σ cnt·floor(ln(cnt)·S) — the entropy numerator's variable
+            # part (ln(1)=0 exactly, so singletons add 0)
+            F.sum(
+                F.col("cnt")
+                * F.floor(
+                    F.log(F.col("cnt").cast("double")) * F.lit(float(_ENT_SCALE))
+                ).cast("long")
+            ).alias("c1_ent_sum_q"),
+        )
     )
 
     def _k(kind: str, metric: str) -> Column:
@@ -191,10 +206,6 @@ def repetition_signals(
         _k("line", "total").alias("line_total"),
         _k("line", "n_distinct").alias("line_distinct"),
         _k("line", "dup_mass").alias("line_dup_mass"),
-    ]
-    agg_cols += [
-        _k("c1", "total").alias("c1_total"),
-        _k("c1", "ent_sum_q").alias("c1_ent_sum_q"),
     ]
     for n in top_ns:
         agg_cols.append(_k(f"g{n}", "top_code").alias(f"g{n}_top_code"))
@@ -217,7 +228,7 @@ def repetition_signals(
         ).alias("_n_ellipsis"),
     )
 
-    j = base.join(per_doc, id_col, "left")
+    j = base.join(per_doc, id_col, "left").join(char_stats, id_col, "left")
     denom_chars = F.greatest(F.col("_n_chars"), F.lit(1))
     line_total = F.coalesce(F.col("line_total"), F.lit(0))
 

@@ -1340,9 +1340,12 @@ def test_dsir_keep_rates_all_null_logratios(spark):
 
 
 def test_char_ngrams_from_equals_substr_form(spark):
-    """r14 internals pin: the staged char-array trigram builder must be
-    value-identical to the substr-per-position form on unicode, short,
-    empty and NULL inputs (the O(len) rewrite must not change a gram)."""
+    """Internals pin: the native `regexp_extract_all` extractor and the
+    staged char-array reference form must both be value-identical to the
+    substr-per-position form on unicode, short, empty and NULL inputs
+    (the default-tier Unicode torture pins are tests/test_text_extract.py)."""
+    import textquality_reference as ref
+
     df = spark.createDataFrame(
         [("héllo wörld",), ("日本語テスト",), ("ab",), ("",), (None,), ("a b  c",)],
         "t string",
@@ -1350,11 +1353,14 @@ def test_char_ngrams_from_equals_substr_form(spark):
     norm = lm.normalize_text(F.col("t"))
     for n in (1, 3):
         rows = df.select(
-            lm.char_ngrams(norm, n).alias("old"),
-            lm.char_ngrams_from(lm.char_array(norm), n).alias("new"),
+            ref.char_ngrams(norm, n).alias("old"),
+            ref.char_ngrams_from(ref.char_array(norm), n).alias("staged"),
+            F.coalesce(
+                lm.extract_char_ngrams(norm, n), F.array().cast("array<string>")
+            ).alias("new"),
         ).collect()
         for r in rows:
-            assert r["old"] == r["new"], (n, r)
+            assert r["old"] == r["staged"] == r["new"], (n, r)
 
 
 def test_classifier_shared_tf_paths_bit_identical(spark):
