@@ -163,7 +163,6 @@ def repetition_signals(
     # NULL text reads as degenerate-empty (0 lines, 0 fractions), not a
     # row of NULL metrics.
     text = F.coalesce(F.col(text_col), F.lit(""))
-    lines = _nonempty_lines(text)
     top_ns = sorted(TOP_NGRAM_THRESHOLDS)
     dup_ns = sorted(DUP_NGRAM_THRESHOLDS)
 
@@ -213,13 +212,22 @@ def repetition_signals(
         agg_cols.append(_k(f"g{n}", "dup_mass").alias(f"g{n}_dup_mass"))
     per_doc = kind_stats.groupBy(id_col).agg(*agg_cols)
 
-    # Scan-side O(len) per-doc metrics (no shuffle on this branch).
+    # Scan-side O(len) per-doc metrics (no shuffle on this branch). The
+    # lines are their own projection, split once for the three metrics
+    # that read them (plan pinned in tests/test_text_extract.py).
+    lines = F.col("__lines")
     base = docs.select(
         id_col,
         F.length(text).cast("int").alias("_n_chars"),
         F.size(ws_tokens(text)).alias("_n_tokens"),
-        F.size(lines).cast("int").alias("n_lines"),
         F.regexp_count(text, F.lit(SYMBOL_PATTERN)).alias("_n_symbols"),
+        _nonempty_lines(text).alias("__lines"),
+    ).select(
+        id_col,
+        "_n_chars",
+        "_n_tokens",
+        "_n_symbols",
+        F.size(lines).cast("int").alias("n_lines"),
         F.size(
             F.filter(lines, lambda l: F.trim(l).rlike(BULLET_PATTERN))
         ).alias("_n_bullet"),

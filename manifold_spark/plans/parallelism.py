@@ -26,10 +26,24 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame
 
 
-def _max_partition_bytes(df: DataFrame) -> int:
-    raw = str(df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    digits = re.match(r"\d+", raw.strip())
-    return int(digits.group()) if digits else 128 * 1024 * 1024
+_MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
+#: Binary shift of each suffix of a Spark byte-size string, as
+#: `JavaUtils.byteStringAsBytes` reads them; a bare number is bytes.
+_BYTE_SHIFTS = {
+    "": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+    "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50,
+}
+
+
+def _max_partition_bytes(spark) -> tuple[str, int]:
+    """The raw ``maxPartitionBytes`` setting and its size in bytes
+    ("64m" is 64 MiB; "134217728b" and "134217728" are 128 MiB). An
+    unparseable value reads as the 128 MiB default."""
+    raw = str(spark.conf.get(_MAX_PARTITION_BYTES, "134217728"))
+    m = re.fullmatch(r"(\d+)([a-z]*)", raw.strip().lower())
+    if m is None or m.group(2) not in _BYTE_SHIFTS:
+        return raw, 128 << 20
+    return raw, int(m.group(1)) << _BYTE_SHIFTS[m.group(2)]
 
 
 def estimated_splits(df: DataFrame) -> int | None:
@@ -43,7 +57,7 @@ def estimated_splits(df: DataFrame) -> int | None:
         return None
     if not files:
         return None
-    max_bytes = _max_partition_bytes(df)
+    _, max_bytes = _max_partition_bytes(df.sparkSession)
     total_splits = 0
     for uri in files:
         parsed = urlparse(uri)
@@ -89,20 +103,17 @@ def scoped_scan_split_size(spark, path: str, min_fraction: float = 0.5):
             except OSError:
                 sizes = []
                 break
-    key = "spark.sql.files.maxPartitionBytes"
-    raw = str(spark.conf.get(key, "134217728"))
-    digits = re.match(r"\d+", raw.strip())
-    max_bytes = int(digits.group()) if digits else 128 * 1024 * 1024
+    raw, max_bytes = _max_partition_bytes(spark)
     splits = sum(max(1, math.ceil(s / max_bytes)) for s in sizes)
     if not sizes or splits >= max(2, int(target * min_fraction)):
         yield
         return
     per = max(sum(sizes) // max(target, 1), 1 << 20)
-    spark.conf.set(key, str(per))
+    spark.conf.set(_MAX_PARTITION_BYTES, str(per))
     try:
         yield
     finally:
-        spark.conf.set(key, raw)
+        spark.conf.set(_MAX_PARTITION_BYTES, raw)
 
 
 def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:

@@ -202,6 +202,27 @@ def test_ensure_parallelism_file_heuristic(spark, sf_dir, tmp_path):
     assert ensure_parallelism(inmem) is inmem
 
 
+def test_split_size_reads_byte_suffixes(spark, sf_dir, tmp_path):
+    """A suffixed ``maxPartitionBytes`` ("64m") is 64 MiB, not 64 bytes:
+    one split for a small file, so both guards can still fire, and
+    `scoped_scan_split_size` restores the raw string on exit."""
+    import shutil
+
+    from manifold_spark.plans.parallelism import estimated_splits, scoped_scan_split_size
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    shutil.copy(f"{sf_dir}/lineitem.parquet", tmp_path / "part-0.parquet")
+    spark.conf.set(key, "64m")
+    try:
+        assert estimated_splits(spark.read.parquet(str(tmp_path))) == 1
+        with scoped_scan_split_size(spark, str(tmp_path)):
+            assert spark.conf.get(key) != "64m"  # one split: the guard fires
+        assert spark.conf.get(key) == "64m"
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_scan_prunes_columns_for_projection(spark, sf_dir):
     """A 2-column projection must read 2 columns, not 11."""
     l = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_orderkey", "l_quantity")

@@ -173,3 +173,17 @@ def test_pass_only_plan_has_no_char_explode(torture):
     assert "explode" in pass_only  # the line / word n-gram units remain
     assert lm.CHAR_PATTERN in _optimized(rep)
     assert lm.CHAR_PATTERN in _optimized(rep.select("doc_id", "char_entropy"))
+
+
+def test_repetition_lines_split_once_per_branch(torture):
+    """The non-empty lines are split once per branch: the full frame's
+    plan holds one split in the unit relation and one in the scan-side
+    projection (its three line metrics share it), and the pass-flag plan
+    that `curate_corpus` reads holds only the unit relation's. The rows
+    equal the pure-Python reference."""
+    rep = repetition_signals(torture)
+    lines = "filter(split(coalesce(text"
+    assert _optimized(rep).count(lines) == 2
+    assert _optimized(rep.filter("repetition_pass").select("doc_id")).count(lines) == 1
+    got = {r["doc_id"]: r.asDict() for r in rep.collect()}
+    assert got == ref.repetition_rows(TORTURE)

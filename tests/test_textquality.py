@@ -20,6 +20,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+import textquality_reference as ref
 from manifold_spark.operators import lm
 from manifold_spark.operators.repetition import repetition_signals
 
@@ -376,86 +377,6 @@ def test_stratified_sample_exact_quotas(spark):
     assert a == b
 
 
-def _repetition_reference(texts):
-    """Independent pure-Python repetition signals (same definitions,
-    same integer-exact arithmetic) for cross-implementation pinning."""
-    import re
-    from collections import Counter
-
-    from manifold_spark.operators.repetition import (
-        DUP_LINE_CHAR_FRAC_MAX,
-        DUP_LINE_FRAC_MAX,
-        DUP_NGRAM_THRESHOLDS,
-        TOP_NGRAM_THRESHOLDS,
-    )
-
-    def ws_toks(t):
-        # exact engine/oracle semantics (r8 swap): whitespace split of
-        # the space-trimmed text with empty tokens dropped
-        return [w for w in re.split(r"\s+", t.strip(" ")) if w]
-
-    out = {}
-    for doc_id, raw in enumerate(texts):
-        text = raw if raw is not None else ""
-        n_chars = len(text)
-        dc = max(n_chars, 1)
-        toks = ws_toks(text.lower())
-        raw_toks = ws_toks(text)
-        lines = [l for l in text.split("\n") if l.strip()]
-        row = {"doc_id": doc_id, "n_lines": len(lines)}
-        lc = Counter(lines)
-        total = len(lines)
-        row["dup_line_frac"] = (total - len(lc)) / total if total else 0.0
-        row["dup_line_char_frac"] = (
-            sum((c - 1) * len(l) for l, c in lc.items()) / dc
-        )
-        passes = (
-            row["dup_line_frac"] <= DUP_LINE_FRAC_MAX
-            and row["dup_line_char_frac"] <= DUP_LINE_CHAR_FRAC_MAX
-        )
-        for n, thr in sorted(TOP_NGRAM_THRESHOLDS.items()):
-            grams = Counter(
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            )
-            top = max(((c, len(g)) for g, c in grams.items()), default=(0, 0))
-            mass = top[0] * top[1] if top[0] >= 2 else 0
-            row[f"top_{n}gram_char_frac"] = mass / dc
-            passes = passes and row[f"top_{n}gram_char_frac"] <= thr
-        for n, thr in sorted(DUP_NGRAM_THRESHOLDS.items()):
-            grams = Counter(
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            )
-            row[f"dup_{n}gram_char_frac"] = (
-                sum((c - 1) * len(g) for g, c in grams.items()) / dc
-            )
-            passes = passes and row[f"dup_{n}gram_char_frac"] <= thr
-        row["symbol_word_ratio"] = len(
-            re.findall(r"#|\.\.\.|…", text)
-        ) / max(len(raw_toks), 1)
-        row["bullet_line_frac"] = sum(
-            1 for l in lines if re.match(r"^[-*•]", l.strip())
-        ) / max(len(lines), 1)
-        row["ellipsis_line_frac"] = sum(
-            1 for l in lines if re.search(r"(\.\.\.|…)$", l.strip())
-        ) / max(len(lines), 1)
-        # char entropy with the engine's exact quantization: integer
-        # numerator of L·floor(ln L·S) − Σ n_c·floor(ln n_c·S), one final
-        # double division
-        from manifold_spark.operators.repetition import _ENT_SCALE
-
-        cc = Counter(text)
-        L = sum(cc.values())
-        if L > 0:
-            lnq = lambda n: math.floor(math.log(n) * _ENT_SCALE)  # noqa: E731
-            num = L * lnq(L) - sum(n * lnq(n) for n in cc.values())
-            row["char_entropy"] = num / (L * _ENT_SCALE)
-        else:
-            row["char_entropy"] = 0.0
-        row["repetition_pass"] = passes
-        out[doc_id] = row
-    return out
-
-
 def test_repetition_matches_pure_python(spark):
     """Cross-implementation pin on a seeded random corpus whose tiny
     vocabulary forces heavy line/gram duplication, with newlines,
@@ -485,7 +406,7 @@ def test_repetition_matches_pure_python(spark):
     got = {
         r["doc_id"]: r.asDict() for r in repetition_signals(docs).collect()
     }
-    assert got == _repetition_reference(texts)
+    assert got == ref.repetition_rows(texts)
 
 
 # ---------------------------------------------------------------------------
