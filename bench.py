@@ -127,6 +127,37 @@ STDOUT_KEYS = (
     "queries_first_run", "queries_cal", "value_cal", "calibration_1e8_agg_sec", "sf",
 )
 DETAIL_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
+#: Memory limits that can bind this process: cgroup v2, then v1. Read,
+#: never written; "max" (v2) or a missing file means no limit.
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def usable_memory_bytes(limit_files=CGROUP_MEMORY_LIMITS) -> int:
+    """The memory this process can use: the smaller of physical RAM and
+    every numeric cgroup limit in ``limit_files``."""
+    limits = [os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")]
+    for path in limit_files:
+        try:
+            with open(path) as f:
+                text = f.read().strip()
+        except OSError:
+            continue
+        if text.isdigit():
+            limits.append(int(text))
+    return min(limits)
+
+
+def driver_heap(cap_gb: int, usable: int | None = None) -> str:
+    """``spark.driver.memory`` for this host: half the usable memory in
+    whole GB (at least 1), capped at ``cap_gb``. In local mode the one
+    JVM also holds off-heap buffers and the Python workers run beside
+    it, so a heap near the host's memory gets the process OOM-killed (a
+    fixed 16g heap did, on a 15 GB host)."""
+    usable = usable_memory_bytes() if usable is None else usable
+    return f"{max(1, min(cap_gb, usable // 2 // 2**30))}g"
 
 
 def timed(run, runs=2, scope="each"):
@@ -744,7 +775,7 @@ def scaling(sf_dir: str, cpus: int, sf: float) -> None:
         shuffle_partitions=cpus,
         extra_conf={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "24g",
+            "spark.driver.memory": driver_heap(24),
             # the default 128 MB maxPartitionBytes packs the 32 small
             # files a table into 1-5 splits, serializing the scans at any
             # core count; a floor of 2 × cores makes the split count
@@ -795,7 +826,7 @@ def main() -> None:
         app_name="manifold-spark-bench",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
+        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": driver_heap(16)},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

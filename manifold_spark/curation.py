@@ -90,42 +90,22 @@ def curate_corpus(
     10 interleaved runs, 10/10 wins); its time, 18.1 → 16.6 s, moved
     less than the run-to-run spread.
     """
-    from manifold_spark.operators.c4 import (
-        DEFAULT_BLOCKLIST,
-        DEFAULT_LINE_DROP_TERMS,
-        c4_filters,
-    )
     from manifold_spark.operators import dedup
     from manifold_spark.operators.dedup import _persist_tracked
     from manifold_spark.operators.lm import ppl_buckets, score_docs
     from manifold_spark.operators.repetition import repetition_signals
-    from manifold_spark.operators.sampling import pack_documents, temperature_sample
-    from manifold_spark.operators.textstats import token_count_ws
+    from manifold_spark.operators.sampling import temperature_sample
     from manifold_spark.plans.boundary import stage_boundary
 
     report: dict[str, int] = {"input": docs.count()}
 
-    # 1. heuristic clean: C4 line+document rules; keep passers, carry the
-    #    cleaned text forward (lang rides the projection — no join back).
-    cleaned = (
-        c4_filters(
-            docs,
-            text_col=text_col,
-            id_col=id_col,
-            min_words_per_line=min_words_per_line,
-            min_kept_lines=min_kept_lines,
-            line_drop_terms=(
-                DEFAULT_LINE_DROP_TERMS if line_drop_terms is None
-                else line_drop_terms
-            ),
-            blocklist=DEFAULT_BLOCKLIST if blocklist is None else blocklist,
-            require_terminal_punct=require_terminal_punct,
-            passthrough_cols=(lang_col,),
+    # 1. heuristic clean: C4 line+document rules.
+    cleaned = _persist_tracked(
+        _c4_clean(
+            docs, text_col, id_col, lang_col, min_words_per_line,
+            min_kept_lines, require_terminal_punct, line_drop_terms, blocklist,
         )
-        .filter(F.col("keep") == 1)
-        .select(id_col, lang_col, F.col("text_clean").alias(text_col))
     )
-    cleaned = _persist_tracked(cleaned)
     report["c4_clean"] = cleaned.count()
 
     # 2. exact dedup on cleaned content (min-id survivor carries lang).
@@ -205,18 +185,71 @@ def curate_corpus(
     mixed = _persist_tracked(mixed)
     report["mixture"] = mixed.count()
 
-    # 6. packing: whitespace token budget bins (swap in BPE counts via
-    #    operators/bpe.bpe_encode when a trained tokenizer is in play).
-    #    lang rides the shard shuffle as a payload column — no join back.
+    # 6. packing: whitespace token budget bins.
+    packed = _pack(mixed, text_col, id_col, lang_col, pack_budget)
+    report["packed"] = packed.count()
+    return packed, report
+
+
+def _c4_clean(
+    docs: DataFrame,
+    text_col: str,
+    id_col: str,
+    lang_col: str,
+    min_words_per_line: int,
+    min_kept_lines: int,
+    require_terminal_punct: bool,
+    line_drop_terms: tuple[str, ...] | None,
+    blocklist: tuple[str, ...] | None,
+) -> DataFrame:
+    """Curation stage 1, shared by `curate_corpus` and
+    `curate_batch_incremental`: the C4 line+document rules, keeping the
+    passers as (id, lang, cleaned text). lang rides the projection, so
+    no join back; None term lists take the C4 defaults."""
+    from manifold_spark.operators.c4 import (
+        DEFAULT_BLOCKLIST,
+        DEFAULT_LINE_DROP_TERMS,
+        c4_filters,
+    )
+
+    return (
+        c4_filters(
+            docs,
+            text_col=text_col,
+            id_col=id_col,
+            min_words_per_line=min_words_per_line,
+            min_kept_lines=min_kept_lines,
+            line_drop_terms=(
+                DEFAULT_LINE_DROP_TERMS if line_drop_terms is None
+                else line_drop_terms
+            ),
+            blocklist=DEFAULT_BLOCKLIST if blocklist is None else blocklist,
+            require_terminal_punct=require_terminal_punct,
+            passthrough_cols=(lang_col,),
+        )
+        .filter(F.col("keep") == 1)
+        .select(id_col, lang_col, F.col("text_clean").alias(text_col))
+    )
+
+
+def _pack(
+    mixed: DataFrame, text_col: str, id_col: str, lang_col: str, budget: int
+) -> DataFrame:
+    """Curation stage 6, shared by `curate_corpus` and
+    `curate_batch_incremental`: whitespace token-budget bins (swap in BPE
+    counts via operators/bpe.bpe_encode when a trained tokenizer is in
+    play). lang rides the shard shuffle as a payload column, so no join
+    back."""
+    from manifold_spark.operators.sampling import pack_documents
+    from manifold_spark.operators.textstats import token_count_ws
+
     with_tokens = mixed.select(
         id_col, lang_col, token_count_ws(F.col(text_col)).alias("n_tokens")
     )
-    packed = pack_documents(
-        with_tokens, id_col, "n_tokens", budget=pack_budget,
+    return pack_documents(
+        with_tokens, id_col, "n_tokens", budget=budget,
         payload_cols=(lang_col,),
     )
-    report["packed"] = packed.count()
-    return packed, report
 
 
 # ---------------------------------------------------------------------------
@@ -229,23 +262,31 @@ def curate_corpus(
 #
 #   exact  → content-hash first-seen set (streaming/jobs.first_seen_upsert
 #            semantics over the hash)
-#   fuzzy  → incremental MinHash LSH index (dedup.minhash_index_upsert);
-#            ONLINE semantics: a document is dropped iff it near-dups any
-#            previously seen (post-exact) document — the arrival-order
-#            rule; the batch pipeline's components-min rule needs future
-#            knowledge a stream doesn't have (documented divergence).
+#   fuzzy  → incremental MinHash LSH index probed with pruned reads
+#            (dedup.minhash_index_probe); ONLINE semantics: a document is
+#            dropped iff it near-dups any previously seen (post-exact)
+#            document — the arrival-order rule; the batch pipeline's
+#            components-min rule needs future knowledge a stream doesn't
+#            have (documented divergence).
 #   quality/mixture → stateless per-doc gates under the seed models.
 #   packing → per-batch bins (bin ids are batch-local by design; a global
 #            bin id would serialize the stream).
 #
+# State is a `CurationState` store or nothing. With a store, each batch
+# reads the history the store holds below its batch id and returns its
+# own O(batch) delta for the caller to `write_delta`; with None the batch
+# has no history (a one-shot run, or a stream's first trigger). The
+# store's parquet versions are what truncate lineage between batches.
+#
 # Contract: document ids are unique across batches and MONOTONE in
 # arrival order (give later batches larger ids) — then feeding the same
-# corpus as ONE batch or as any id-ordered split yields the SAME kept id
-# set and the same summed stage counts (pinned in tests/test_curation.py
-# and on the real writeStream/availableNow harness in test_streaming.py).
+# corpus as ONE batch or as any id-ordered split through one store yields
+# the SAME kept id set and the same summed stage counts (pinned in
+# tests/test_curation.py and on the real writeStream/availableNow harness
+# in test_streaming.py).
 # CAP CAVEAT: split-invariance holds only while the LSH skew cap
-# (`lsh_max_bucket`, default 50 — plumbed to `minhash_index_upsert`)
-# never ENGAGES at a batch boundary. The upsert's streaming-cap
+# (`lsh_max_bucket`, default 50 — plumbed to `minhash_index_probe`)
+# never ENGAGES at a batch boundary. The probe's streaming-cap
 # semantics pair a bucket's early entries before it outgrows the cap,
 # while a one-shot run of the same corpus sees the bucket over-cap from
 # the start and emits none of those pairs — different kept sets. Raise
@@ -270,8 +311,6 @@ def curation_models(
     returned frames are persisted via the shared operator-cache registry
     (release with `operator_cache_scope()`); pass the dict to
     `curate_batch_incremental` / `curation_sink`."""
-    from pyspark.sql.functions import broadcast  # noqa: F401
-
     from manifold_spark.operators.dedup import _persist_tracked
     from manifold_spark.operators.lm import score_docs, train_char_lm
     from manifold_spark.operators.sampling import temperature_rates
@@ -304,7 +343,7 @@ def curation_models(
 def curate_batch_incremental(
     batch: DataFrame,
     models: dict,
-    state: dict | None = None,
+    state: CurationState | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     lang_col: str = "lang",
@@ -321,79 +360,56 @@ def curate_batch_incremental(
     audit: bool = True,
 ) -> tuple[DataFrame, dict, dict[str, int]]:
     """One micro-batch of incremental curation (the `foreachBatch` body).
-    ``state`` is None (first batch), the in-memory dict a previous call
-    returned, or a `CurationState` store — with a store, every state
-    read is PRUNED (touched hash-prefix buckets, touched LSH key ranges,
-    candidate docs' shingles only) instead of a full cumulative-state
-    shuffle, and new_state carries {"store", "deltas"} only.
-    Returns (packed, new_state, report): packed carries the batch's
-    surviving (id, lang, n_tokens, shard, bin_id) rows, new_state the
-    grown dedup state ({"hashes": DataFrame, "minhash": index dict}),
-    report the per-batch stage counts (same keys as `curate_corpus`);
-    ``audit=False`` skips the per-stage count() actions (report comes
-    back empty) — the production-sink fast path; stage frames still
-    persist where multiple consumers need them.
+    ``state`` is a `CurationState` store whose read horizon the caller
+    pinned with `begin_batch`, or None for a batch with no history. With
+    a store every state read is PRUNED (touched hash-prefix buckets,
+    touched LSH key ranges, candidate docs' shingles only) instead of a
+    full cumulative-state shuffle.
+
+    Returns (packed, deltas, report): packed carries the batch's
+    surviving (id, lang, n_tokens, shard, bin_id) rows; deltas the
+    batch's own dedup state ({"hashes": DataFrame, "minhash": index
+    dict}), which the caller appends with ``store.write_delta(batch_id,
+    deltas)`` before the next batch; report the per-batch stage counts
+    (same keys as `curate_corpus`). ``audit=False`` skips the per-stage
+    count() actions (report comes back empty) — the production-sink fast
+    path; stage frames still persist where multiple consumers need them.
 
     Per-batch cost is O(batch + touched LSH buckets + broadcast models) —
     independent of stream history; state is hash-set + LSH-index bounded
     (token text is never stored). ``lsh_max_bucket`` is the fuzzy
     stage's skew cap (see the module-header CAP CAVEAT: an engaging cap
-    breaks exact one-shot ≡ split invariance at the boundary batch). Unseen languages price permissively
-    (head bucket, keep-all mixture) — fit the seed to cover the stream's
-    languages. local-mode note: executor storage (state checkpoints,
-    stage caches) shares the single JVM's heap — size the driver ≥4g for
-    corpus-scale drives (bench uses 16g); on a real cluster the state
-    lives on executors/parquet and the driver holds only plans."""
-    from manifold_spark.operators.c4 import (
-        DEFAULT_BLOCKLIST,
-        DEFAULT_LINE_DROP_TERMS,
-        c4_filters,
-    )
+    breaks exact one-shot ≡ split invariance at the boundary batch).
+    Unseen languages price permissively (head bucket, keep-all mixture)
+    — fit the seed to cover the stream's languages. local-mode note:
+    executor storage (stage caches) shares the single JVM's heap — size
+    the driver ≥4g for corpus-scale drives; on a real cluster the state
+    lives on parquet and the driver holds only plans."""
     from manifold_spark.operators import dedup
     from manifold_spark.operators.dedup import _persist_tracked
     from manifold_spark.operators.lm import score_docs
     from manifold_spark.operators.repetition import repetition_signals
-    from manifold_spark.operators.sampling import (
-        RATE_DENOM,
-        pack_documents,
-    )
+    from manifold_spark.operators.sampling import RATE_DENOM
     from manifold_spark.functions.hashing import stable_long_hash
     from pyspark.sql.functions import broadcast
 
     report: dict[str, int] = {}
     if audit:
         report["input"] = batch.count()
-    store = state if isinstance(state, CurationState) else None
-    if store is None:
-        state = state or {"hashes": None, "minhash": None}
 
-    # 1. heuristic clean (stateless — identical to the batch pipeline;
-    #    lang rides the projection, no join back).
-    cleaned = (
-        c4_filters(
-            batch,
-            text_col=text_col,
-            id_col=id_col,
-            min_words_per_line=min_words_per_line,
-            min_kept_lines=min_kept_lines,
-            line_drop_terms=(
-                DEFAULT_LINE_DROP_TERMS if line_drop_terms is None
-                else line_drop_terms
-            ),
-            blocklist=DEFAULT_BLOCKLIST if blocklist is None else blocklist,
-            require_terminal_punct=require_terminal_punct,
-            passthrough_cols=(lang_col,),
+    # 1. heuristic clean (stateless — the batch pipeline's stage).
+    cleaned = _persist_tracked(
+        _c4_clean(
+            batch, text_col, id_col, lang_col, min_words_per_line,
+            min_kept_lines, require_terminal_punct, line_drop_terms, blocklist,
         )
-        .filter(F.col("keep") == 1)
-        .select(id_col, lang_col, F.col("text_clean").alias(text_col))
     )
-    cleaned = _persist_tracked(cleaned)
     if audit:
         report["c4_clean"] = cleaned.count()
 
     # 2. exact dedup: batch-internal min-id per content hash (ONE window
     #    shuffle — the agg+self-join form cost two), then drop hashes the
-    #    accumulated state already holds (first-seen layering).
+    #    store already holds (first-seen layering).
     from pyspark.sql import Window
 
     hashed = cleaned.withColumn("_h", F.sha2(F.col(text_col), 256))
@@ -405,52 +421,41 @@ def curate_batch_incremental(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    if store is not None:
+    if state is not None:
         # Pruned state probe: the store reads only the hash-prefix
         # buckets this batch's content hashes fall in — O(touched
         # buckets), never O(stream history).
         picked = _persist_tracked(picked)
-        prev_hashes = store.read_hashes(picked)
+        prev_hashes = state.read_hashes(picked)
         if prev_hashes is not None:
             picked = picked.join(prev_hashes, "_h", "left_anti")
-    elif state["hashes"] is not None:
-        picked = picked.join(state["hashes"], "_h", "left_anti")
     exact = _persist_tracked(picked.select(id_col, lang_col, text_col))
     # picked holds exactly one row per _h (the window pick), so the
     # hashes are already distinct — no extra shuffle.
     new_hashes = picked.select("_h")
-    if store is None:
-        hashes_state = (
-            new_hashes
-            if state["hashes"] is None
-            else state["hashes"].unionByName(new_hashes).distinct()
-        )
     if audit:
         report["exact_dedup"] = exact.count()
 
-    # 3. fuzzy dedup: probe + grow the incremental LSH index; a batch doc
-    #    drops iff it pairs with ANY previously seen doc (cross-batch:
-    #    the batch side of the pair; within-batch: the larger id). The
-    #    batch's own index is computed once and also returned as the
-    #    state DELTA so sinks append O(batch) per trigger instead of
-    #    rewriting the O(stream-history) cumulative snapshot.
+    # 3. fuzzy dedup: probe the LSH index; a batch doc drops iff it pairs
+    #    with ANY previously seen doc (cross-batch: the batch side of the
+    #    pair; within-batch: the larger id). The batch's own index is
+    #    computed once and also returned as the state DELTA, so sinks
+    #    append O(batch) per trigger. Without a store the entry reader
+    #    returns None and only within-batch pairs form.
     b_index = dedup.minhash_index(exact, text_col, id_col)
-    if store is not None:
-        # The batch's own entries/sizes feed multiple probe subtrees
-        # (kb collect, bucket counts, candidate join, verify) — persist
-        # so the signature aggregation runs once.
-        b_index["entries"] = _persist_tracked(b_index["entries"])
-        b_index["sizes"] = _persist_tracked(b_index["sizes"])
-        pairs = dedup.minhash_index_probe(
-            b_index, store.read_entries, store.read_doc_state,
-            threshold=lsh_threshold, max_bucket=lsh_max_bucket,
-        )
-        minhash_state = None
+    # The batch's own entries/sizes feed multiple probe subtrees (kb
+    # collect, bucket counts, candidate join, verify) — persist so the
+    # signature aggregation runs once.
+    b_index["entries"] = _persist_tracked(b_index["entries"])
+    b_index["sizes"] = _persist_tracked(b_index["sizes"])
+    if state is None:
+        read_entries, read_doc_state = (lambda _: None), None
     else:
-        pairs, minhash_state = dedup.minhash_index_upsert(
-            exact, state["minhash"], text_col, id_col, threshold=lsh_threshold,
-            max_bucket=lsh_max_bucket, batch_index=b_index,
-        )
+        read_entries, read_doc_state = state.read_entries, state.read_doc_state
+    pairs = dedup.minhash_index_probe(
+        b_index, read_entries, read_doc_state,
+        threshold=lsh_threshold, max_bucket=lsh_max_bucket,
+    )
     b_ids = exact.select(F.col(id_col).alias("id_b")).withColumn(
         "_b_in", F.lit(True)
     )
@@ -524,60 +529,11 @@ def curate_batch_incremental(
         gated.filter(F.col("_m_ok")).select(id_col, lang_col, text_col)
     )
 
-    # 6. packing: per-batch bins (bin ids batch-local by design); lang
-    #    rides the shard shuffle as a payload column — no join back.
-    from manifold_spark.operators.textstats import token_count_ws
-
-    with_tokens = mixed.select(
-        id_col, lang_col, token_count_ws(F.col(text_col)).alias("n_tokens")
-    )
-    packed = pack_documents(
-        with_tokens, id_col, "n_tokens", budget=pack_budget,
-        payload_cols=(lang_col,),
-    )
+    # 6. packing: per-batch bins (bin ids batch-local by design).
+    packed = _pack(mixed, text_col, id_col, lang_col, pack_budget)
     if audit:
         report["packed"] = packed.count()
-    if store is not None:
-        # The store IS the cumulative state; only the deltas matter.
-        new_state = {
-            "store": store,
-            "deltas": {"hashes": new_hashes, "minhash": b_index},
-        }
-    else:
-        new_state = {
-            "hashes": hashes_state,
-            "minhash": minhash_state,
-            # append-shaped persistence: only these BATCH deltas need
-            # writing per trigger (id-disjoint across batches, so a union
-            # of all persisted deltas reconstructs the cumulative state
-            # exactly).
-            "deltas": {"hashes": new_hashes, "minhash": b_index},
-        }
-    return packed, new_state, report
-
-
-def checkpoint_curation_state(state: dict) -> dict:
-    """Truncate the dedup-state lineage after a batch (eager
-    localCheckpoint of every cumulative state frame; the per-batch
-    `deltas` are dropped — they exist for append-shaped sinks).
-    REQUIRED between in-memory batches: each state frame otherwise
-    references the previous batch's whole curation DAG, so plan size —
-    and driver heap — grows without bound across triggers.
-    Store-shaped state ({"store", "deltas"} from a `CurationState` run)
-    passes through UNCHANGED — the store already truncates lineage via
-    its parquet versions, so there is nothing to checkpoint (ADVICE r10:
-    raising KeyError here broke callers chaining store-backed batches).
-    `curation_sink` gets the same truncation for free from its parquet
-    state writes (the production shape)."""
-    if "store" in state:
-        return state
-    return {
-        "hashes": state["hashes"].localCheckpoint(eager=True),
-        "minhash": {
-            name: frame.localCheckpoint(eager=True)
-            for name, frame in state["minhash"].items()
-        },
-    }
+    return packed, {"hashes": new_hashes, "minhash": b_index}, report
 
 
 def _py_stable_long_hash(value, seed: int = 0) -> int:
@@ -633,8 +589,8 @@ class CurationState:
     ``doc_buckets`` to thousands so a small batch prunes to a sliver of
     the state — since r13 that prices only snapshot READS (the lever
     the granularity exists for): delta writes are bucket-count-
-    independent (``delta_files`` flat files per relation), so the r12
-    measurement's 2–3× write penalty at 256-way no longer applies.
+    independent (one flat file per relation), so the r12 measurement's
+    2–3× write penalty at 256-way no longer applies.
 
     ``read_stats`` accumulates the files/bytes each pruned read actually
     touched since the last `begin_batch` — the bench's flatness
@@ -661,7 +617,6 @@ class CurationState:
         key_prefix_len: int = 1,
         doc_buckets: int = 16,
         compact_every: int = 4,
-        delta_files: int = 1,
     ) -> None:
         self.spark = spark
         self.state_dir = state_dir
@@ -669,9 +624,6 @@ class CurationState:
         self.key_prefix_len = key_prefix_len
         self.doc_buckets = doc_buckets
         self.compact_every = compact_every
-        #: files per relation per DELTA (flat layout — see write_delta);
-        #: raise for corpus-sized backfill triggers, not for bucket count.
-        self.delta_files = delta_files
         self._batch_id: int | None = None
         self._base: int | None = None
         self._live: list[int] = []
@@ -952,8 +904,7 @@ class CurationState:
         the per-trigger write cost is the largest part, not the sum.
 
         Layout (r13 — VERDICT r12 #3, decoupling read pruning from
-        write fanout): a delta is ``delta_files`` FLAT file(s) per
-        relation, sorted by the bucket column (stored as data, not as
+        write fanout): a delta is ONE FLAT file per relation, sorted by the bucket column (stored as data, not as
         hive dirs) — parquet footer min/max gives the small-delta read
         side the same bucket prune the directory tree would, while the
         write never pays per-bucket fanout (measured r12: 256-way
@@ -981,23 +932,15 @@ class CurationState:
         def _write(item):
             part, frame = item
             proj, pcol = self._project(part, frame)
-            if self.delta_files <= 1:
-                # repartition(1), NOT coalesce(1): the delta is a lazy
-                # plan (the trigger's LSH/hash tail), and coalesce would
-                # collapse everything after its last exchange into the
-                # single write task — measured +5-8 s/trigger at sf0.1.
-                # The round-robin shuffle is O(batch) and keeps the
-                # upstream stage parallel; the single-task sort of a
-                # trigger-sized partition is noise.
-                proj = proj.repartition(1)
-            else:
-                # corpus-sized backfill triggers: a few range-bucketed
-                # files, each covering a contiguous bucket span so the
-                # footer prune stays tight.
-                proj = proj.repartitionByRange(self.delta_files, F.col(pcol))
-            proj.sortWithinPartitions(pcol).write.mode("overwrite").parquet(
-                os.path.join(root, part)
-            )
+            # repartition(1), NOT coalesce(1): the delta is a lazy plan
+            # (the trigger's LSH/hash tail), and coalesce would collapse
+            # everything after its last exchange into the single write
+            # task — measured +5-8 s/trigger at sf0.1. The round-robin
+            # shuffle is O(batch) and keeps the upstream stage parallel;
+            # the single-task sort of a trigger-sized partition is noise.
+            proj.repartition(1).sortWithinPartitions(pcol).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(root, part))
 
         with ThreadPoolExecutor(max_workers=len(parts)) as pool:
             list(pool.map(_write, parts.items()))
@@ -1155,14 +1098,14 @@ def curation_sink(
         store.collect_read_stats = state_metrics is not None
         store.begin_batch(batch_id)
         with operator_cache_scope():
-            packed, new_state, report = curate_batch_incremental(
+            packed, deltas, report = curate_batch_incremental(
                 batch, models, store,
                 text_col=text_col, id_col=id_col, lang_col=lang_col, **knobs,
             )
             packed.write.mode("overwrite").parquet(
                 f"{out_path}/batch_id={batch_id}"
             )
-            store.write_delta(batch_id, new_state["deltas"])
+            store.write_delta(batch_id, deltas)
             store.maybe_compact(batch_id)
         if state_metrics is not None:
             state_metrics.append(

@@ -521,18 +521,32 @@ def minhash_index_upsert(
         all_sh = index["shingles"].unionByName(b_index["shingles"])
         all_sizes = index["sizes"].unionByName(b_index["sizes"])
 
-    # Cap on CURRENT (post-batch) bucket sizes; only in-cap buckets pair.
+    candidates = _index_candidates(b_index["entries"], old_entries, max_bucket)
+    pairs = _verify_candidates(candidates, all_sh, all_sizes, threshold)
+    return pairs, {"entries": all_entries, "shingles": all_sh, "sizes": all_sizes}
+
+
+def _index_candidates(
+    b_entries: DataFrame, old_entries: DataFrame | None, max_bucket: int
+) -> DataFrame:
+    """The pairing step shared by `minhash_index_upsert` and
+    `minhash_index_probe`: distinct (id_a < id_b) candidates with ≥1
+    batch side, from the batch's LSH entries and the state's entries
+    (None when the state is empty). The cap applies to CURRENT
+    (post-batch) bucket sizes; only in-cap buckets pair."""
+    all_entries = (
+        b_entries if old_entries is None else old_entries.unionByName(b_entries)
+    )
     ok_buckets = (
         all_entries.groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") <= max_bucket)
         .select("band", "key")
     )
-    new_b = b_index["entries"].join(ok_buckets, ["band", "key"])
+    new_b = b_entries.join(ok_buckets, ["band", "key"])
 
-    # Candidates with ≥1 batch side: new⋈new ordered one way plus
-    # new⋈old both ways — never old⋈old (those pairs were emitted by
-    # earlier batches).
+    # new⋈new ordered one way plus new⋈old both ways — never old⋈old
+    # (those pairs were emitted by earlier batches).
     nb_a, nb_b = new_b.alias("a"), new_b.alias("b")
     cand = nb_a.join(
         nb_b,
@@ -555,10 +569,7 @@ def minhash_index_upsert(
             F.greatest(F.col("o.doc_id"), F.col("n.doc_id")).alias("id_b"),
         )
         cand = cand.unionByName(cross)
-    candidates = cand.distinct()
-
-    pairs = _verify_candidates(candidates, all_sh, all_sizes, threshold)
-    return pairs, {"entries": all_entries, "shingles": all_sh, "sizes": all_sizes}
+    return cand.distinct()
 
 
 def minhash_index_probe(
@@ -585,6 +596,9 @@ def minhash_index_probe(
       given OLD-side candidate doc ids. The verify join only reads
       candidate docs' rows, and `old_ids` is bounded by the post-cap
       pair-formation bound — O(candidates), independent of history.
+      Never called when ``read_entries`` returns None: with no state the
+      probe emits exactly `minhash_index_upsert(index=None)`'s
+      within-batch pairs.
 
     Pair-emission contract is IDENTICAL to `minhash_index_upsert` with
     the same ``max_bucket`` (streaming-cap semantics; pinned equal —
@@ -596,41 +610,10 @@ def minhash_index_probe(
 
     Returns the verified pairs only — the state GROWTH is the caller's
     append of ``b_index`` itself (the store's delta shape)."""
-    b_entries = b_index["entries"]
-    old_entries = read_entries(b_entries)
-    all_entries = (
-        b_entries if old_entries is None else old_entries.unionByName(b_entries)
+    old_entries = read_entries(b_index["entries"])
+    candidates = _persist_tracked(
+        _index_candidates(b_index["entries"], old_entries, max_bucket)
     )
-
-    ok_buckets = (
-        all_entries.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= max_bucket)
-        .select("band", "key")
-    )
-    new_b = b_entries.join(ok_buckets, ["band", "key"])
-
-    nb_a, nb_b = new_b.alias("a"), new_b.alias("b")
-    cand = nb_a.join(
-        nb_b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    if old_entries is not None:
-        old_b = old_entries.join(ok_buckets, ["band", "key"])
-        o, n = old_b.alias("o"), new_b.alias("n")
-        cross = o.join(
-            n,
-            (F.col("o.band") == F.col("n.band"))
-            & (F.col("o.key") == F.col("n.key"))
-            & (F.col("o.doc_id") != F.col("n.doc_id")),
-        ).select(
-            F.least(F.col("o.doc_id"), F.col("n.doc_id")).alias("id_a"),
-            F.greatest(F.col("o.doc_id"), F.col("n.doc_id")).alias("id_b"),
-        )
-        cand = cand.unionByName(cross)
-    candidates = _persist_tracked(cand.distinct())
 
     b_sh, b_sizes = b_index["shingles"], b_index["sizes"]
     all_sh, all_sizes = b_sh, b_sizes

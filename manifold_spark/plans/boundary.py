@@ -11,9 +11,11 @@ stage-boundary write; this helper makes the choice a configuration:
   bench behavior (zero I/O, same executor holds the blocks). Bench rows
   are unchanged by this module.
 - ``parquet``: write-read through
-  ``spark.manifold.stageBoundaryDir`` (default: a session-scoped temp
-  dir) — the boundary survives executor loss and its read-back plan is
-  a plain scan, so downstream lineage is equally truncated.
+  ``spark.manifold.stageBoundaryDir`` (default: the driver's
+  ``tempfile.gettempdir()/manifold-stage-boundaries``, which nothing
+  deletes: every boundary write stays on disk after the session ends)
+  — the boundary survives executor loss and its read-back plan is a
+  plain scan, so downstream lineage is equally truncated.
 
 Set ``spark.manifold.stageBoundary=parquet`` (session conf) or
 ``MANIFOLD_STAGE_BOUNDARY=parquet`` (env, read at call time) for

@@ -126,11 +126,15 @@ def test_incremental_curation_batch_split_invariant(spark, sf_dir, tmp_path):
     summed per-stage counts — the dedup state (first-seen hashes +
     MinHash index) makes later batches see exactly what a one-shot run
     sees. Every stage engages (chunked corpus, tight LSH threshold).
-    State chains through per-batch parquet DELTAS (the curation_sink
-    append shape) — in-memory localCheckpoint chaining pins unevictable
-    blocks in the shared test JVM and starved later tests of execution
-    memory in the full-suite run."""
-    from manifold_spark.curation import curate_batch_incremental, curation_models
+    State chains through a `CurationState` store, the `curation_sink`
+    shape: begin_batch, curate, write_delta. ``audit=False`` (the
+    production-sink fast path) keeps the same rows with an empty
+    report."""
+    from manifold_spark.curation import (
+        CurationState,
+        curate_batch_incremental,
+        curation_models,
+    )
     from manifold_spark.operators.dedup import operator_cache_scope
 
     docs = (
@@ -154,34 +158,27 @@ def test_incremental_curation_batch_split_invariant(spark, sf_dir, tmp_path):
             docs, models, None, **knobs
         )
         one_ids = {r["doc_id"] for r in one_packed.collect()}
+    with operator_cache_scope():
+        quiet_packed, _, quiet_report = curate_batch_incremental(
+            docs, models, None, audit=False, **knobs
+        )
+        assert quiet_report == {}
+        assert {r["doc_id"] for r in quiet_packed.collect()} == one_ids
 
     # three id-ordered batches (monotone ids across batches — the contract)
     bounds = [(0, 170), (170, 340), (340, 1 << 60)]
-    root = str(tmp_path / "cur-state")
-    parts = ("entries", "shingles", "sizes")
-    state = None
+    store = CurationState(spark, str(tmp_path / "cur-state"))
     split_ids: set = set()
     summed: dict[str, int] = {}
     for i, (lo, hi) in enumerate(bounds):
         b = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        store.begin_batch(i)
         with operator_cache_scope():
-            packed, new_state, report = curate_batch_incremental(
-                b, models, state, **knobs
+            packed, deltas, report = curate_batch_incremental(
+                b, models, store, **knobs
             )
             split_ids |= {r["doc_id"] for r in packed.collect()}
-            # persist only the batch deltas; the v* glob reconstructs the
-            # cumulative state (and truncates lineage for the next batch)
-            deltas = new_state["deltas"]
-            deltas["hashes"].write.parquet(f"{root}/v{i}/hashes")
-            for name, frame in deltas["minhash"].items():
-                frame.write.parquet(f"{root}/v{i}/mh_{name}")
-        state = {
-            "hashes": spark.read.parquet(f"{root}/v*/hashes"),
-            "minhash": {
-                name: spark.read.parquet(f"{root}/v*/mh_{name}")
-                for name in parts
-            },
-        }
+            store.write_delta(i, deltas)
         for k, v in report.items():
             summed[k] = summed.get(k, 0) + v
     release_shingle_caches()
@@ -193,46 +190,3 @@ def test_incremental_curation_batch_split_invariant(spark, sf_dir, tmp_path):
     assert one_report["quality"] < one_report["fuzzy_dedup"]
     assert one_report["mixture"] < one_report["quality"]
     assert one_report["packed"] > 0
-
-
-@pytest.mark.slow
-def test_checkpoint_curation_state_roundtrip(spark):
-    """`checkpoint_curation_state` (the in-memory lineage truncation for
-    notebook-style loops) must preserve state contents exactly and drop
-    the per-batch deltas. Tiny corpus — checkpointed blocks are pinned
-    unevictable in the JVM, so this stays deliberately small."""
-    from manifold_spark.curation import (
-        checkpoint_curation_state,
-        curate_batch_incremental,
-        curation_models,
-    )
-    from manifold_spark.operators.dedup import operator_cache_scope
-
-    docs = spark.createDataFrame(
-        [(i, "en", f"alpha beta gamma delta epsilon tok{i}") for i in range(20)],
-        "doc_id long, lang string, text string",
-    )
-    with operator_cache_scope():
-        models = curation_models(docs)
-        # audit=False is the production-sink fast path: no count()
-        # actions, empty report, identical outputs/state. (Measured at
-        # sf0.1: no wall-clock difference — the counts ride the persisted
-        # stage caches; the flag exists so sinks aren't forced to pay
-        # actions they don't read.)
-        packed_q, state_q, report_q = curate_batch_incremental(
-            docs, models, None, audit=False
-        )
-        assert report_q == {}
-        assert packed_q.count() > 0
-        _, state, _ = curate_batch_incremental(docs, models, None)
-        before = {
-            "hashes": sorted(r["_h"] for r in state["hashes"].collect()),
-            "sizes": sorted(map(tuple, state["minhash"]["sizes"].collect())),
-        }
-        cp = checkpoint_curation_state(state)
-        assert "deltas" not in cp
-        assert sorted(r["_h"] for r in cp["hashes"].collect()) == before["hashes"]
-        assert (
-            sorted(map(tuple, cp["minhash"]["sizes"].collect()))
-            == before["sizes"]
-        )

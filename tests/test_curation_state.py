@@ -18,18 +18,14 @@ VERDICT r10 #1 / ADVICE r10 demanded:
 - the CAP CAVEAT characterization (curation.py module header): an
   engaging `lsh_max_bucket` breaks one-shot ≡ split invariance at the
   boundary batch, and raising the cap restores it.
+
+The cap-lifted half of the CAP CAVEAT runs in the default tier (a
+12-doc, two-trigger store drive, ~20 s); every other test here is
+marked slow (`-m slow`).
 """
 
 
 from __future__ import annotations
-
-import pytest
-
-# r15 slow tier (VERDICT r14 #2): store-backed incremental curation drives (6-trigger store runs) —
-# excluded from the default (driver-verify) run by pytest.ini's
-# `-m "not slow"`; run with `-m slow` (round-close evidence in
-# OPTIMIZATION_r15.md).
-pytestmark = pytest.mark.slow
 
 import os
 
@@ -153,6 +149,7 @@ def _state_content(spark, state_dir):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_py_hash_twin_matches_column(spark):
     """`_py_stable_long_hash` must equal `stable_long_hash` exactly — the
     store prunes shingle-state partitions with the PYTHON twin, so a
@@ -177,6 +174,7 @@ def test_py_hash_twin_matches_column(spark):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_probe_matches_upsert_pairs(spark, tmp_path):
     """`minhash_index_probe` against a CurationState store must emit the
     exact pair set of `minhash_index_upsert` over in-memory state — at a
@@ -225,6 +223,7 @@ def test_probe_matches_upsert_pairs(spark, tmp_path):
     assert any(a < 100 <= b for a, b in results[10_000])
 
 
+@pytest.mark.slow
 def test_delta_layout_flat_and_snapshot_fanout(spark, tmp_path):
     """r13 layout (VERDICT r12 #3): a DELTA is flat — ONE file per
     relation with the bucket id as a sorted data column, file count
@@ -247,7 +246,7 @@ def test_delta_layout_flat_and_snapshot_fanout(spark, tmp_path):
         "minhash": empty_mh,
     })
 
-    # flat: no bucket dirs, exactly delta_files(=1) parquet file —
+    # flat: no bucket dirs, exactly one parquet file —
     # even though 128 distinct pfx buckets (and 256 doc buckets) exist.
     hdir = os.path.join(state_dir, "v0", "hashes")
     assert not any("=" in n for n in os.listdir(hdir)), os.listdir(hdir)
@@ -302,6 +301,7 @@ def test_delta_layout_flat_and_snapshot_fanout(spark, tmp_path):
     assert 0 < probe2.read_stats["hashes_bytes"] < totals["state_total_bytes"]
 
 
+@pytest.mark.slow
 def test_legacy_empty_partitioned_delta_does_not_break_reads(spark, tmp_path):
     """Review r13: a PRE-r13 empty delta (the old partitionBy path wrote
     only _SUCCESS for an all-duplicate trigger — no '=' subdirs, no
@@ -347,6 +347,7 @@ def test_legacy_empty_partitioned_delta_does_not_break_reads(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_store_empty_delta_compaction(spark, tmp_path):
     """A fully-duplicate micro-batch writes a committed version whose
     part dirs hold only _SUCCESS. Compaction spanning it previously died
@@ -387,6 +388,7 @@ def test_store_empty_delta_compaction(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_compaction_rederives_numeric_prefix_partitions(spark, tmp_path):
     """hash_prefix_len=2 with all-numeric prefixes ('05', '12'): the
     read-back partition value type-infers to int, so a compaction that
@@ -432,6 +434,7 @@ def test_compaction_rederives_numeric_prefix_partitions(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_sink_six_batches_compaction_gc_matches_oneshot(spark, tmp_path):
     """Six sink triggers with compact_every=2: compaction engages ≥2×,
     the read horizon never exceeds compact_every+1 committed versions,
@@ -483,6 +486,7 @@ def test_sink_six_batches_compaction_gc_matches_oneshot(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_sink_trigger_retry_idempotent(spark, tmp_path):
     """foreachBatch redelivery: after (a) a crash that left the delta
     dir partial (no _COMMIT), (b) a crash that left the SNAPSHOT partial,
@@ -562,78 +566,72 @@ def test_sink_trigger_retry_idempotent(spark, tmp_path):
     assert crash_state == clean_state
 
 
-def test_checkpoint_passes_store_state_through(spark, tmp_path):
-    """Store-shaped state ({"store", "deltas"}) must pass through
-    `checkpoint_curation_state` unchanged — the store already truncates
-    lineage via parquet (ADVICE r10: this raised KeyError and crashed
-    callers chaining store-backed in-memory batches)."""
-    from manifold_spark.curation import checkpoint_curation_state
-
-    store = CurationState(spark, str(tmp_path / "cp-state"))
-    state = {"store": store, "deltas": {"hashes": None, "minhash": None}}
-    assert checkpoint_curation_state(state) is state
-
-
 # ---------------------------------------------------------------------------
 # 7. CAP CAVEAT characterization (VERDICT r10 #6)
 # ---------------------------------------------------------------------------
 
 
-def test_cap_engaged_split_invariance(spark):
-    """The documented CAP CAVEAT, as a pinned contract: when the LSH
-    skew cap engages AT a batch boundary, one-shot ≠ split (the split's
-    first batch pairs its in-cap bucket before it outgrows the cap; the
-    one-shot sees it over-cap from the start) — and raising
-    `lsh_max_bucket` restores exact split-invariance."""
-    # 8 near-identical docs (one LSH bucket family) + 4 unique docs
+def _cap_split_kept(spark, tmp_path, cap):
+    """Kept ids of one-shot vs a two-trigger split at LSH cap ``cap``:
+    8 near-identical docs (one LSH bucket family) + 4 unique docs, split
+    4 + 4 family docs. The split chains through a `CurationState` store
+    (begin_batch, curate, write_delta), the path `curation_sink` runs.
+    audit=False: only the kept ids are compared, so the per-stage
+    count() jobs would be pure test time."""
     rows = [(i, "en", _near_dup_text(i)) for i in range(8)] + [
         (100 + i, "en", _unique_text(i)) for i in range(4)
     ]
     docs = _mk_docs(spark, rows)
     first = _mk_docs(spark, rows[:4] + rows[8:10])   # ids 0-3, 100-101
     second = _mk_docs(spark, rows[4:8] + rows[10:])  # ids 4-7, 102-103
-
     knobs = dict(
         min_words_per_line=1, min_kept_lines=1, require_terminal_punct=False,
         lsh_threshold=0.3, pack_budget=128, max_ppl_bucket=3,
-        require_repetition_pass=False,
+        require_repetition_pass=False, audit=False, lsh_max_bucket=cap,
     )
-
-    def kept(cap):
-        with operator_cache_scope():
-            models = curation_models(
-                docs, temperature=1.0, mixture_target_fraction=1.0
+    store = CurationState(spark, str(tmp_path / "cap-state"))
+    with operator_cache_scope():
+        models = curation_models(
+            docs, temperature=1.0, mixture_target_fraction=1.0
+        )
+        one, _, _ = curate_batch_incremental(docs, models, None, **knobs)
+        one_ids = {r["doc_id"] for r in one.select("doc_id").collect()}
+        split_ids: set = set()
+        for batch_id, batch in enumerate((first, second)):
+            store.begin_batch(batch_id)
+            packed, deltas, _ = curate_batch_incremental(
+                batch, models, store, **knobs
             )
-            one, _, _ = curate_batch_incremental(
-                docs, models, None, lsh_max_bucket=cap, **knobs
-            )
-            one_ids = {r["doc_id"] for r in one.select("doc_id").collect()}
-            p1, st, _ = curate_batch_incremental(
-                first, models, None, lsh_max_bucket=cap, **knobs
-            )
-            split_ids = {r["doc_id"] for r in p1.select("doc_id").collect()}
-            from manifold_spark.curation import checkpoint_curation_state
-
-            st = checkpoint_curation_state(st)
-            p2, _, _ = curate_batch_incremental(
-                second, models, st, lsh_max_bucket=cap, **knobs
-            )
-            split_ids |= {r["doc_id"] for r in p2.select("doc_id").collect()}
-        return one_ids, split_ids
-
-    # cap=4: the 8-doc bucket is over-cap one-shot (no pairs → all kept)
-    # but the split's first 4 entries are in-cap (pairs → drops) — diverge
-    one_small, split_small = kept(4)
-    assert one_small != split_small
-    assert {0, 1, 2, 3, 4, 5, 6, 7} <= one_small  # over-cap: none dropped
-
-    # cap lifted: exact one-shot ≡ split, and the family collapses to id 0
-    one_big, split_big = kept(10_000)
-    assert one_big == split_big
-    assert 0 in one_big
-    assert not ({1, 2, 3, 4, 5, 6, 7} & one_big)
+            split_ids |= {r["doc_id"] for r in packed.select("doc_id").collect()}
+            store.write_delta(batch_id, deltas)
+    return one_ids, split_ids
 
 
+@pytest.mark.slow
+def test_cap_engaged_split_diverges(spark, tmp_path):
+    """The documented CAP CAVEAT, as a pinned contract: when the LSH
+    skew cap engages AT a batch boundary, one-shot ≠ split. At cap=4 the
+    8-doc bucket is over-cap one-shot (no pairs, all kept), but the
+    split's first 4 entries are in-cap, so they pair and drop."""
+    one_ids, split_ids = _cap_split_kept(spark, tmp_path, 4)
+    assert one_ids != split_ids
+    assert {0, 1, 2, 3, 4, 5, 6, 7} <= one_ids  # over-cap: none dropped
+
+
+def test_cap_lifted_split_invariance(spark, tmp_path):
+    """The other half of the CAP CAVEAT: with `lsh_max_bucket` lifted,
+    one-shot ≡ split through the store exactly, and the family collapses
+    to id 0 (the second trigger's family docs pair with the stored first
+    trigger's: pruned entry reads, stored shingles in the verify).
+    Default tier: the tier-1 drive of the store-backed incremental
+    path."""
+    one_ids, split_ids = _cap_split_kept(spark, tmp_path, 10_000)
+    assert one_ids == split_ids
+    assert 0 in one_ids
+    assert not ({1, 2, 3, 4, 5, 6, 7} & one_ids)
+
+
+@pytest.mark.slow
 def test_crashed_partial_dirs_swept_below_trigger(spark, tmp_path):
     """r12 `AnnIndexStore` parity (shared `sweep_uncommitted`): an
     uncommitted partial version dir BELOW the current trigger can never
