@@ -22,8 +22,9 @@ caps (3), hash gates (5), and one sharded window (6). Stage boundaries
 persist (shared operator-cache registry) or truncate lineage
 (`plans.boundary.stage_boundary`) so each stage's audit count and the
 next stage both read the materialized frame instead of re-executing the
-upstream DAG. At 100 TB you would write stage boundaries as parquet
-instead; the `report` counts then come free from write metrics.
+upstream DAG. At 100 TB set ``spark.manifold.stageBoundary=parquet``
+so the boundaries survive executor loss; the `report` counts could
+then come free from write metrics.
 """
 
 from __future__ import annotations
@@ -63,13 +64,14 @@ def curate_corpus(
     counts from stage writes) when auditing isn't needed.
 
     Every stage reads a materialized input, never a re-execution of the
-    upstream DAG. Stages 1-3 and 5 persist through the shared
-    operator-cache registry (release with `operator_cache_scope()` /
-    `release_shingle_caches()`). The quality stage has three lineage
-    boundaries (`plans.boundary.stage_boundary`: a lazy localCheckpoint
-    by default, a durable parquet write-read under
-    ``spark.manifold.stageBoundary=parquet``, made while this function
-    builds the plan, not at a later action):
+    upstream DAG. Stages 1-3 and 5 persist, and the quality stage has
+    three lineage boundaries (`plans.boundary.stage_boundary`, durable
+    under ``spark.manifold.stageBoundary=parquet``, where they are
+    written while this function builds the plan). All of them sit in
+    the shared operator-cache registry: run every action on ``packed``
+    before the enclosing `operator_cache_scope()` exits or
+    `release_shingle_caches()` runs, since a released boundary cannot
+    be recomputed. The boundaries:
 
     - "curation-repetition": the repetition-filtered survivors, which LM
       training, scoring and the join back all read. Without it each of

@@ -758,12 +758,14 @@ def q_ann_store_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     in between — the r11 `weak` shape) — then a pruned-cell probe whose
     results the DuckDB oracle recomputes as exact IVF over the final
     live corpus (corpus minus never-re-added deletes). The store state
-    lives in a temp dir; the tiny result frame is localCheckpointed so
-    the state can be removed before the driver collects."""
+    lives in a temp dir; the tiny result frame is pinned behind a
+    `stage_boundary` so the state can be removed before the driver
+    collects."""
     import shutil
     import tempfile
 
     from manifold_spark.operators.ann_store import AnnIndexStore
+    from manifold_spark.plans.boundary import stage_boundary
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     vid = F.col("vec_id")
@@ -796,9 +798,11 @@ def q_ann_store_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             with_op(emb.filter(vid % 4 == 3).filter(vid % 21 == 0), "add")
         )                                                            # v5
         assert store._scan()[0] == [3], "no compaction may absorb D3"
-        res = store.topk(
-            emb.filter(vid < N_QUERIES), k=TOP_K, nprobe=IVF_NPROBE
-        ).localCheckpoint(eager=True)
+        res = stage_boundary(
+            store.topk(emb.filter(vid < N_QUERIES), k=TOP_K, nprobe=IVF_NPROBE),
+            "ann-store-gate",
+            eager=True,
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return res
@@ -3781,7 +3785,8 @@ def q_curation_store_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-trigger state layering (first-seen exact dedup, probe-based
     fuzzy victims), the seed-model gating, and the per-trigger packing,
     externally and hash-exact. State lives in a temp dir; the kept rows
-    are localCheckpointed so it can be removed before collection."""
+    are pinned behind a `stage_boundary`, taken after the operator
+    cache scope closes, so the state can be removed before collection."""
     import shutil
     import tempfile
 
@@ -3794,6 +3799,7 @@ def q_curation_store_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from manifold_spark.operators.lm import score_docs, train_char_lm
     from manifold_spark.operators.sampling import temperature_rates
+    from manifold_spark.plans.boundary import stage_boundary
 
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -3864,18 +3870,18 @@ def q_curation_store_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     docs_b.filter(F.col("batch_no") == i + 1).drop("batch_no"),
                     i,
                 )
-            res = (
-                spark.read.parquet(f"{tmp}/out")
-                .select(
-                    F.col("doc_id").cast("long").alias("doc_id"),
-                    "lang",
-                    F.col("shard").cast("long").alias("shard"),
-                    F.col("bin_id").cast("long").alias("bin_id"),
-                    F.col("n_tokens").cast("long").alias("n_tokens"),
-                    F.col("batch_id").cast("long").alias("batch_id"),
-                )
-                .localCheckpoint(eager=True)
-            )
+        res = stage_boundary(
+            spark.read.parquet(f"{tmp}/out").select(
+                F.col("doc_id").cast("long").alias("doc_id"),
+                "lang",
+                F.col("shard").cast("long").alias("shard"),
+                F.col("bin_id").cast("long").alias("bin_id"),
+                F.col("n_tokens").cast("long").alias("n_tokens"),
+                F.col("batch_id").cast("long").alias("batch_id"),
+            ),
+            "curation-store-gate",
+            eager=True,
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return res

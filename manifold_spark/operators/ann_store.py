@@ -63,6 +63,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from manifold_spark.plans.boundary import _persist_tracked, stage_boundary
 from manifold_spark.versioned_store import (
     has_parquet,
     scan_committed,
@@ -856,8 +857,8 @@ class AnnIndexStore:
           with zero extra Spark jobs, and `topk_ivf` broadcasts the
           query side.
         - True — corpus-scale query frames: the batch is NEVER
-          collected. It is localCheckpointed (pinning nondeterminism),
-          each query's nprobe cells derive as a COLUMN
+          collected. An eager `stage_boundary` pins it (and its
+          nondeterminism), each query's nprobe cells derive as a COLUMN
           (`assign_centroids` — the same expression the scoring pass
           uses, so the pruned read cannot disagree), the distinct cell
           set (bounded by n_cells) drives the pruned read, and scoring
@@ -883,8 +884,8 @@ class AnnIndexStore:
             rows = proj.take(self.DRIVER_PROBE_MAX + 1)
             distributed = len(rows) > self.DRIVER_PROBE_MAX
         if distributed:
-            q = queries.select(self.id_col, self.vec_col).localCheckpoint(
-                eager=True
+            q = stage_boundary(
+                queries.select(self.id_col, self.vec_col), "ann-queries", eager=True
             )
             probe_cells = assign_centroids(
                 q.select(self.id_col, self.vec_col), self.centroids_df(),
@@ -934,12 +935,13 @@ class AnnIndexStore:
           pinned; `topk_ivf_pq` ranks probes and builds the ADC lookup
           tables driver-side; refuses batches past ``DRIVER_PROBE_MAX``.
         - True — corpus-scale query frames: the batch is NEVER
-          collected. It is localCheckpointed (pinning nondeterminism),
-          probe cells derive as a column (`assign_centroids` — the same
-          expression `adc_probe_tables` probes with, so the pruned read
-          cannot disagree with scoring), the distinct cell set (bounded
-          by n_cells) drives the pruned read of codes + re-rank
-          vectors, and the per-(query, probed cell) ADC tables compute
+          collected. An eager `stage_boundary` pins it (and its
+          nondeterminism), probe cells derive as a column
+          (`assign_centroids` — the same expression `adc_probe_tables`
+          probes with, so the pruned read cannot disagree with
+          scoring), the distinct cell set (bounded by n_cells) drives
+          the pruned read of codes + re-rank vectors, and the
+          per-(query, probed cell) ADC tables compute
           as COLUMNS (`pq.adc_probe_tables` — bit-identical IEEE
           doubles to the driver build, pinned) with no query-side
           broadcast hint anywhere in the plan.
@@ -959,10 +961,8 @@ class AnnIndexStore:
             rows = proj.take(self.DRIVER_PROBE_MAX + 1)
             distributed = len(rows) > self.DRIVER_PROBE_MAX
         if distributed:
-            from manifold_spark.operators.dedup import _persist_tracked
-
-            q = queries.select(self.id_col, self.vec_col).localCheckpoint(
-                eager=True
+            q = stage_boundary(
+                queries.select(self.id_col, self.vec_col), "ann-queries", eager=True
             )
             # ONE probe-relation build (review r13): the persisted
             # adc_probe_tables output yields the pruned-read cell set

@@ -26,8 +26,9 @@ Algorithm, mapped to relations:
    rewrite the symbol strings, record the merge. The argmax is a one-row
    driver collect per round (the same bounded-scalar pattern as the
    kmeans centroid roundtrip, `similarity.kmeans_centroids`); everything
-   else stays distributed. The word relation localCheckpoints each round
-   so plan depth stays constant across merges.
+   else stays distributed. The word relation goes behind a
+   `stage_boundary` each round so plan depth stays constant across
+   merges; the previous round's is released once the next exists.
 
 The DuckDB oracle for the registry gate unrolls the same rounds as CTEs
 (pair counts → one-row best CTE → LEFT-JOIN-ON-TRUE rewrite, so an
@@ -51,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from manifold_spark.operators.dedup import normalized_tokens
+from manifold_spark.plans.boundary import _release, stage_boundary
 from manifold_spark.plans.parallelism import ensure_parallelism
 
 #: End-of-word marker (Sennrich et al.): lets the model distinguish
@@ -129,8 +131,10 @@ def train_bpe(
     """Learn up to ``n_merges`` BPE merges (stopping early when no pair
     reaches ``min_pair_freq``). Returns (merges, words): merges =
     [(a, b, pair_freq), ...] in learned order; words = the final
-    (word, freq, syms) relation with all merges applied."""
-    # localCheckpoint inside the loop keeps plan depth constant per
+    (word, freq, syms) relation with all merges applied, behind a
+    registered boundary (valid until the enclosing
+    `operator_cache_scope()` exits)."""
+    # A boundary inside the loop keeps plan depth constant per
     # round (each rewrite would otherwise nest the previous round's
     # whole DAG), at the cost of materializing the vocab-bounded
     # relation; the loop itself lives in `train_bpe_from_words`.
@@ -284,7 +288,7 @@ def train_bpe_from_words(
     """`train_bpe`'s merge loop over an ALREADY-BUILT word table (e.g.
     `word_table_upsert` state) — retraining after corpus growth never
     re-reads old batches."""
-    words = words.localCheckpoint(eager=True)
+    words = stage_boundary(words, "bpe-words", eager=True)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         top = (
@@ -297,5 +301,7 @@ def train_bpe_from_words(
             break
         a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
         merges.append((a, b, cnt))
-        words = apply_merge(words, a, b).localCheckpoint(eager=True)
+        merged = stage_boundary(apply_merge(words, a, b), "bpe-words", eager=True)
+        _release(words)
+        words = merged
     return merges, words

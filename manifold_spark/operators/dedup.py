@@ -26,69 +26,22 @@ pair list, which is tiny relative to the corpus.
 
 from __future__ import annotations
 
-import contextlib
 import functools
-import logging
 import operator
-
-_log = logging.getLogger(__name__)
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from manifold_spark.functions.hashing import stable_long_hash
+from manifold_spark.plans.boundary import (  # noqa: F401  (re-exported)
+    _SHINGLE_CACHES,
+    _persist_tracked,
+    _release,
+    operator_cache_scope,
+    release_shingle_caches,
+    stage_boundary,
+)
 from manifold_spark.plans.parallelism import ensure_parallelism
-
-#: DataFrames persisted by the pair generators below. The exploded shingle
-#: diamond must be cached WITHIN a query (3 consumers), but the operators
-#: return lazy plans, so they cannot unpersist before the caller consumes
-#: them. Long-lived sessions (bench loops, notebooks) call
-#: `release_shingle_caches()` between queries instead of relying on LRU
-#: eviction under memory pressure.
-_SHINGLE_CACHES: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _SHINGLE_CACHES.append(df)
-    return df
-
-
-def release_shingle_caches() -> int:
-    """Unpersist every cache created by the dedup pair generators; returns
-    how many were released. Safe to call at any time — plans re-cache on
-    next use. Prefer the `operator_cache_scope()` context manager where
-    the cache lifetime has clear lexical scope (bench tiers, tests);
-    this function remains the escape hatch for everything else."""
-    n = 0
-    while _SHINGLE_CACHES:
-        df = _SHINGLE_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception as exc:  # dead session / already-freed block
-            _log.debug("release_shingle_caches: unpersist failed: %s", exc)
-    return n
-
-
-@contextlib.contextmanager
-def operator_cache_scope():
-    """Scope the shared operator-cache registry: every frame persisted by
-    the operators inside the `with` body is unpersisted on exit (success
-    OR error), so bench loops and long-lived sessions cannot leak
-    persisted frames by forgetting `release_shingle_caches()`. Nestable —
-    an inner scope releases only the caches created inside it (the
-    registry length is marked at entry and popped back to the mark)."""
-    mark = len(_SHINGLE_CACHES)
-    try:
-        yield
-    finally:
-        while len(_SHINGLE_CACHES) > mark:
-            df = _SHINGLE_CACHES.pop()
-            try:
-                df.unpersist()
-            except Exception as exc:  # dead session / already-freed block
-                _log.debug("operator_cache_scope: unpersist failed: %s", exc)
 
 
 def normalized_tokens(text: Column) -> Column:
@@ -1094,10 +1047,12 @@ def _components_driver_union_find(edges: DataFrame) -> DataFrame:
 def _components_label_propagation(sym: DataFrame, max_iters: int) -> DataFrame:
     """Min-label propagation over the (persisted, symmetric) edge set.
     Returns (node, label) for every node with at least one edge."""
-    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    ).persist()
-    round_cache = labels  # the persisted plan backing the current labels
+    labels = _persist_tracked(
+        sym.select(F.col("src").alias("node")).distinct().withColumn(
+            "label", F.col("node")
+        )
+    )
+    round_cache = labels  # the pinned frame backing the current labels
     converged = False
     rounds = 0
     for _ in range(max_iters):
@@ -1134,25 +1089,21 @@ def _components_label_propagation(sym: DataFrame, max_iters: int) -> DataFrame:
                     ).alias("new_label"),
                 )
             )
-        # Lazy localCheckpoint on `proposed`: the convergence count below
-        # materializes it (ONE action per round — the checkpoint caches
+        # Lazy boundary on `proposed`: the convergence count below
+        # materializes it (ONE action per round — the boundary caches
         # the round AND truncates lineage). Without truncation each
         # round's logical plan embeds the previous round's whole tree ~2×,
         # so analysis cost grows 2^rounds — persist() alone does NOT
-        # truncate lineage, it only caches execution. On a real cluster
-        # swap for `checkpoint()` with a reliable dir (localCheckpoint
-        # does not survive executor loss).
-        proposed = proposed.localCheckpoint(eager=False)
+        # truncate lineage, it only caches execution.
+        proposed = stage_boundary(proposed, "components-label")
         changed = proposed.filter(F.col("new_label") != F.col("label")).count()
-        round_cache.unpersist()
+        _release(round_cache)
         round_cache = proposed
         labels = proposed.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             converged = True
             break
-    # the returned plan reads the final persisted round (tracked so
-    # release_shingle_caches() frees it in long-lived sessions)
-    _SHINGLE_CACHES.append(round_cache)
+    # the returned plan reads the final round, which stays registered
     LAST_COMPONENTS_INFO.update(backend="label", rounds=rounds)
     if not converged:
         raise ComponentsNotConverged(
@@ -1214,14 +1165,14 @@ def _components_star_contraction(sym: DataFrame, max_iters: int) -> DataFrame:
         ).collect()[0]
         return (row["n"], row["h1"], row["h2"])
 
-    # Lazy localCheckpoint per iteration: one star round references the
+    # Lazy boundary per iteration: one star round references the
     # previous edge set ~12 times, so WITHOUT lineage truncation the
     # logical plan grows 12^rounds and the analyzer, not the data, becomes
     # the bottleneck (persist() caches execution but keeps full lineage).
-    # The signature action materializes the checkpoint — still one job per
-    # iteration. On a real cluster use `checkpoint()` + a reliable dir.
+    # The signature action materializes the boundary — still one job per
+    # iteration.
     edges = sym.filter(F.col("src") != F.col("dst"))
-    cur = edges.localCheckpoint(eager=False)
+    cur = stage_boundary(edges, "components-star")
     prev_sig = None
     converged = False
     rounds = 0
@@ -1231,17 +1182,16 @@ def _components_star_contraction(sym: DataFrame, max_iters: int) -> DataFrame:
         # barrier-halving move as the label backend): a fixpoint is
         # preserved by re-application, so signature equality between
         # consecutive ACTIONS still detects it exactly.
-        nxt = small_star(large_star(small_star(large_star(cur)))).localCheckpoint(
-            eager=False
+        nxt = stage_boundary(
+            small_star(large_star(small_star(large_star(cur)))), "components-star"
         )
         sig = signature(nxt)
-        cur.unpersist()
+        _release(cur)
         cur = nxt
         if sig == prev_sig:
             converged = True
             break
         prev_sig = sig
-    _SHINGLE_CACHES.append(cur)
     LAST_COMPONENTS_INFO.update(backend="star", rounds=rounds)
     if not converged:
         raise ComponentsNotConverged(

@@ -160,23 +160,16 @@ def score_docs(
         # The model is referenced by three subtrees below (term join,
         # prefix fallback, vocab scalar); without materialization each
         # reference re-executes the whole training aggregation (measured:
-        # 27 exchanges → 7). r14 round-close: localCheckpoint (the
-        # components-loop idiom, guide §3.3) instead of persist — persist
+        # 27 exchanges → 7). A lineage cut (the components-loop idiom,
+        # guide §3.3) instead of persist — persist
         # only caches DATA; the LOGICAL plan still embedded the training
         # lineage and every reference COPIED it (logical plans are trees,
         # not DAGs), so a self-scoring caller's downstream plan tripled
         # the whole upstream DAG per model reference (curate_corpus
         # measured a 770 KB logical plan at the quality boundary — the
         # canonicalize/cache-lookup cost of which dominated every later
-        # stage). The frame is charset³-bounded — checkpoint storage is
+        # stage). The frame is charset³-bounded — boundary storage is
         # not a memory risk; lazy so the first action materializes it.
-        # r15 (VERDICT r14 #7): the boundary is durability-switchable —
-        # localCheckpoint locally (unchanged bench behavior), a parquet
-        # write-read under spark.manifold.stageBoundary=parquet so a
-        # cluster run survives executor loss (localCheckpoint blocks have
-        # no replication and no recompute lineage). The parquet mode
-        # writes EAGERLY: the training job runs here, while the plan is
-        # built, even if the caller never runs an action on the result.
         from manifold_spark.plans.boundary import stage_boundary
 
         model = stage_boundary(

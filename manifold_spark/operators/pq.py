@@ -942,8 +942,9 @@ def topk_ivf_pq(
     columns (`adc_probe_tables`, bit-identical to the driver build),
     the ADC scan shuffle-joins codes and probes on the list id, and the
     exact re-rank joins without query-side broadcast hints. The caller
-    must pass a DETERMINISTIC query frame (pin with localCheckpoint if
-    the source samples/limits — `AnnIndexStore.topk_pq` does)."""
+    must pass a DETERMINISTIC query frame (pin it with an eager
+    `stage_boundary` if the source samples/limits —
+    `AnnIndexStore.topk_pq` does)."""
     if encoded is not None and (codebooks is None or centroids is None):
         raise ValueError(
             "encoded requires the explicit codebooks AND centroids that built "

@@ -286,7 +286,7 @@ def dsir_sample(
     importance weight. One corpus-bounded model fit + two broadcast
     scalars; the corpus shuffles only on the doc-keyed score join."""
     from manifold_spark.operators.classifier import doc_bucket_tf, dsir_logratio
-    from manifold_spark.operators.dedup import _persist_tracked
+    from manifold_spark.plans.boundary import _persist_tracked, stage_boundary
 
     target = df.filter(F.col(source_col) == F.lit(target_value))
     raw = df.filter(
@@ -324,11 +324,8 @@ def dsir_sample(
     # every downstream aggregate here would re-embed and re-analyze
     # those copies — observed as DRIVER-heap OOM during plan analysis
     # on a 4g driver late in a long session. (id, logratio) is O(docs)
-    # narrow rows — the standard materialize-the-scores step; at
-    # cluster scale write it to parquet instead (localCheckpoint is the
-    # local stand-in; blocks stay pinned until released — NOTES r9
-    # pitfall).
-    lr = lr.localCheckpoint(eager=True)
+    # narrow rows — the standard materialize-the-scores step.
+    lr = stage_boundary(lr, "dsir-logratio", eager=True)
     scored = dsir_keep_rates(
         df.join(lr, key_col), "logratio", target_fraction
     )

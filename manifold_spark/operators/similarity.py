@@ -19,8 +19,6 @@ partitioned layout and every search after is a partition-pruned scan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -40,11 +38,9 @@ from manifold_spark.plans.parallelism import ensure_parallelism
 #: payload — far above any quantizer this engine trains (16×64 at the
 #: gates; low thousands × high hundreds in production IVF), far below
 #: anything that would strain the driver. Beyond it the join+aggregate
-#: path below takes over, so the knob is scale-adaptive, not a
-#: local-mode constant. Env-overridable for cluster tuning.
-ASSIGN_LITERAL_MAX_ELEMENTS = int(
-    os.environ.get("MANIFOLD_ASSIGN_LITERAL_MAX", str(1 << 20))
-)
+#: path below takes over, so the budget is scale-adaptive, not a
+#: local-mode constant.
+ASSIGN_LITERAL_MAX_ELEMENTS = 1 << 20
 
 
 def topk_bruteforce(
@@ -609,36 +605,6 @@ def rp_hyperplanes(num_bits: int, dim: int, seed: int = 11) -> list[list[float]]
     return planes
 
 
-def _rp_packed_columns(planes, dim: int, num_bits: int) -> Column:
-    """The per-bit Column-chain fingerprint builder over a staged
-    ``__vec`` — the pre-r15 form, kept as the fallback for non-finite
-    coefficients and as the REFERENCE the single-parse `_rp_packed_expr`
-    is value-pinned against (tests/test_linalg_fastpath.py): ~num_bits ×
-    (dim-element transform + fold) Column calls ≈ 1 s of py4j driver time
-    per query at the 24-bit/dim-64 defaults."""
-
-    def _bitsum(j: int) -> Column:
-        coef_j = lit_double_array([float(planes[j][d]) for d in range(dim)])
-        terms = F.transform(
-            F.col("__vec"),
-            lambda x, i: F.floor(
-                x.cast("double")
-                * F.element_at(coef_j, (i + 1).cast("int"))
-                * F.lit(_RP_SCALE)
-                + F.lit(0.5)
-            ).cast("long"),
-        )
-        return F.aggregate(terms, F.lit(0).cast("long"), lambda acc, t: acc + t)
-
-    packed = None
-    for j in range(num_bits):
-        bit = F.when(_bitsum(j) > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        packed = bit if packed is None else packed + bit
-    return packed
-
-
 def _rp_packed_expr(planes, dim: int, num_bits: int) -> Column:
     """Single-parse packed RP fingerprint over a staged ``__vec`` column
     (r15, guide §7.3 / VERDICT r14 #6): the whole num_bits × dim
@@ -646,31 +612,29 @@ def _rp_packed_expr(planes, dim: int, num_bits: int) -> Column:
     `F.expr` call instead of ~num_bits·dim py4j Column calls. The
     PySpark-generated lambda-variable names differ from the parser's, so
     analyzed-tree identity cannot be pinned; the pin is VALUE-level
-    (exact integer fingerprint equality vs `_rp_packed_columns` on a
-    fixed corpus — every arithmetic step is the same per-term double
-    multiply chain followed by floor-quantized integer adds, so the
-    values are bit-identical by construction). Non-finite coefficients
-    (no SQL literal) fall back to the Column form."""
+    (exact integer fingerprint equality vs the per-bit Column-chain form
+    in tests/test_linalg_fastpath.py on a fixed corpus — every arithmetic
+    step is the same per-term double multiply chain followed by
+    floor-quantized integer adds, so the values are bit-identical by
+    construction). `rp_hyperplanes` coefficients and ``_RP_SCALE`` are
+    finite, so every one has a SQL literal."""
     from manifold_spark.operators.linalg import _doubles_array_sql, double_sql
 
-    try:
-        scale = double_sql(_RP_SCALE)
-        bits = []
-        for j in range(num_bits):
-            coefs = _doubles_array_sql([float(planes[j][d]) for d in range(dim)])
-            bitsum = (
-                f"aggregate(transform(__vec, (x, i) -> "
-                f"CAST(FLOOR(CAST(x AS DOUBLE) * element_at({coefs}, "
-                f"CAST(i + 1 AS INT)) * {scale} + 0.5D) AS BIGINT)), "
-                f"CAST(0 AS BIGINT), (acc, t) -> acc + t)"
-            )
-            bits.append(
-                f"(CASE WHEN {bitsum} > 0 THEN CAST({1 << j} AS BIGINT) "
-                f"ELSE CAST(0 AS BIGINT) END)"
-            )
-        return F.expr(" + ".join(bits))
-    except ValueError:
-        return _rp_packed_columns(planes, dim, num_bits)
+    scale = double_sql(_RP_SCALE)
+    bits = []
+    for j in range(num_bits):
+        coefs = _doubles_array_sql([float(planes[j][d]) for d in range(dim)])
+        bitsum = (
+            f"aggregate(transform(__vec, (x, i) -> "
+            f"CAST(FLOOR(CAST(x AS DOUBLE) * element_at({coefs}, "
+            f"CAST(i + 1 AS INT)) * {scale} + 0.5D) AS BIGINT)), "
+            f"CAST(0 AS BIGINT), (acc, t) -> acc + t)"
+        )
+        bits.append(
+            f"(CASE WHEN {bitsum} > 0 THEN CAST({1 << j} AS BIGINT) "
+            f"ELSE CAST(0 AS BIGINT) END)"
+        )
+    return F.expr(" + ".join(bits))
 
 
 def _rp_band_entries(

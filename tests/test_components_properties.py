@@ -151,6 +151,13 @@ def test_label_backend_raises_beyond_diameter(spark):
 def test_star_backend_logarithmic_on_path(spark):
     # Star contraction resolves the same 30-node path in O(log n) rounds
     # where label propagation needs 29.
+    from manifold_spark.operators.dedup import _SHINGLE_CACHES, release_shingle_caches
+
+    def stored_rdd_ids():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    release_shingle_caches()
+    before = stored_rdd_ids()
     ids, pairs = _path_graph(spark, 30)
     got = {
         r["doc_id"]: r["cluster_id"]
@@ -159,7 +166,14 @@ def test_star_backend_logarithmic_on_path(spark):
     assert got == {i: 0 for i in range(30)}
     assert LAST_COMPONENTS_INFO["backend"] == "star"
     # log2(30) ≈ 5; allow slack for the +1 fixed-point confirmation round
-    assert LAST_COMPONENTS_INFO["rounds"] <= 10
+    assert 2 <= LAST_COMPONENTS_INFO["rounds"] <= 10
+    # Each round releases the previous one: what the call leaves in the
+    # block manager is the final round plus the call's two edge persists
+    # (the registered entries), not one checkpoint per round.
+    added = stored_rdd_ids() - before
+    assert len(added) <= len(_SHINGLE_CACHES) == 3
+    release_shingle_caches()
+    assert not stored_rdd_ids() & added
 
 
 def test_label_backend_rounds_and_jobs_bounded(spark):

@@ -233,14 +233,39 @@ def test_lit_double_array_nonfinite_falls_back(spark):
 # ---------------------------------------------------------------------------
 
 
+def _rp_packed_columns(planes, dim: int, num_bits: int):
+    """The per-bit Column-chain RP fingerprint over a staged ``__vec``:
+    the form `similarity._rp_packed_expr` replaced, kept here as the
+    reference it is value-pinned against (~num_bits × (dim-element
+    transform + fold) Column calls)."""
+    from manifold_spark.operators.similarity import _RP_SCALE
+
+    def _bitsum(j: int):
+        coef_j = L.lit_double_array([float(planes[j][d]) for d in range(dim)])
+        terms = F.transform(
+            F.col("__vec"),
+            lambda x, i: F.floor(
+                x.cast("double")
+                * F.element_at(coef_j, (i + 1).cast("int"))
+                * F.lit(_RP_SCALE)
+                + F.lit(0.5)
+            ).cast("long"),
+        )
+        return F.aggregate(terms, F.lit(0).cast("long"), lambda acc, t: acc + t)
+
+    packed = None
+    for j in range(num_bits):
+        bit = F.when(_bitsum(j) > 0, F.lit(1 << j).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+        packed = bit if packed is None else packed + bit
+    return packed
+
+
 def test_rp_packed_expr_equals_column_form(spark):
     from pyspark.sql import functions as F
 
-    from manifold_spark.operators.similarity import (
-        _rp_packed_columns,
-        _rp_packed_expr,
-        rp_hyperplanes,
-    )
+    from manifold_spark.operators.similarity import _rp_packed_expr, rp_hyperplanes
 
     dim, num_bits = 8, 12
     planes = rp_hyperplanes(num_bits, dim)
@@ -279,7 +304,7 @@ def test_rp_band_entries_unchanged_by_single_parse(spark):
         .select(F.col("vec_id").alias("vid"),
                 F.slice(F.col("embedding"), 1, dim).alias("__vec"))
     )
-    fp = staged.select("vid", sim._rp_packed_columns(planes, dim, num_bits).alias("fp"))
+    fp = staged.select("vid", _rp_packed_columns(planes, dim, num_bits).alias("fp"))
     n_bands = num_bits // band_bits
     mask = (1 << band_bits) - 1
     ref = fp.select(

@@ -344,10 +344,11 @@ def test_topk_ivf_pq_broadcast_queries_knob(spark, sf_dir):
     assert "SortMergeJoin" in unhinted or "ShuffledHashJoin" in unhinted
 
 
-def test_stage_boundary_modes_row_identical(spark, sf_dir):
+def test_stage_boundary_modes_row_identical(spark, sf_dir, tmp_path):
     """r15 (VERDICT r14 #7): the durable (parquet) stage boundary returns
     the identical rows as the local (localCheckpoint) default, and its
-    read-back plan is a plain scan (lineage truncated)."""
+    read-back plan is a plain scan (lineage truncated). Parquet mode
+    writes under stageBoundaryDir and refuses to run without it."""
     from manifold_spark.operators.lm import score_docs
     from manifold_spark.plans.boundary import stage_boundary
 
@@ -355,11 +356,16 @@ def test_stage_boundary_modes_row_identical(spark, sf_dir):
     local_rows = sorted(map(repr, score_docs(docs).collect()))
     spark.conf.set("spark.manifold.stageBoundary", "parquet")
     try:
+        with pytest.raises(ValueError, match="stageBoundaryDir"):
+            stage_boundary(docs, "no-dir")
+        spark.conf.set("spark.manifold.stageBoundaryDir", str(tmp_path))
         durable_rows = sorted(map(repr, score_docs(docs).collect()))
+        assert [p.name[:8] for p in tmp_path.iterdir()] == ["lm-model"]
         # direct helper check: plan truncated to a scan
         bounded = stage_boundary(docs.filter("doc_id % 2 = 0"), "pin")
         plan = bounded._jdf.queryExecution().optimizedPlan().toString()
         assert "Relation" in plan and "Filter" not in plan
     finally:
         spark.conf.set("spark.manifold.stageBoundary", "local")
+        spark.conf.unset("spark.manifold.stageBoundaryDir")
     assert durable_rows == local_rows
