@@ -32,6 +32,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from manifold_spark.versioned_store import (
+    CELLS,
+    FLAT,
+    fold_part,
+    read_part,
+    scan_committed,
+    sweep_uncommitted,
+    walk_parquet_stats,
+    write_version,
+)
+
 
 def curate_corpus(
     docs: DataFrame,
@@ -552,47 +563,37 @@ def _py_stable_long_hash(value, seed: int = 0) -> int:
 
 
 class CurationState:
-    """Parquet-backed dedup state for streaming curation — the plain-
-    parquet form of a keyed Delta/Iceberg append table, built from three
-    ingredients so per-trigger READ cost stays bounded while the
-    cumulative state grows without bound (VERDICT r9 #2):
+    """Parquet-backed dedup state for streaming curation, on the
+    versioned-store format of `manifold_spark.versioned_store` (keyed
+    versions, schema-bearing commit markers, one writer/reader/fold).
+    What this store decides for itself:
 
-    1. **Keyed versions + commit markers**: each trigger's state delta
-       lands in ``v{batch_id}`` (overwrite — a crashed trigger's retry
-       rewrites the same dir), committed by an empty ``_COMMIT`` file
-       written LAST. Readers ignore uncommitted dirs and any stray
-       entry that doesn't match ``[vs]<int>``, so a partial write can
-       never corrupt the next trigger. A batch's reads consider ONLY
-       versions with id < its own batch_id — a retry never sees its
-       crashed attempt's output (the foreachBatch idempotence recipe).
-    2. **Bucketed layout, fanned out only where it pays** (r13): every
-       row carries a bucket id — a hex prefix of the content hash for
-       hashes, of the LSH bucket key for entries, a doc-id hash bucket
-       for shingles/sizes. DELTAS store it as a SORTED data column in
-       one flat file per relation (footer min/max prunes the small
-       side; writes never pay per-bucket file fanout); SNAPSHOTS fan
-       out into hive bucket dirs at compaction (one amortized O(state)
-       rewrite) so the big side prunes by directory. The exact-dedup
-       anti-join thus reads only touched hash buckets, the LSH probe
-       only touched bucket-key ranges, and the Jaccard verify only the
-       CANDIDATE docs' shingle rows (O(candidates), flat per trigger
-       regardless of stream age).
-    3. **Snapshot compaction**: once ``compact_every`` deltas accumulate
-       past the last snapshot, they fold into ``s{batch_id}`` and the
-       superseded dirs are garbage-collected at the NEXT trigger's start
-       (deferring GC one trigger keeps a retry of the compacting batch
-       replayable). The read glob is thus never more than
-       ``compact_every`` deltas + one snapshot. Compaction costs one
-       O(state) rewrite every N triggers — amortized O(state/N), the
-       standard LSM trade.
+    1. **Read horizon**: a batch reads ONLY committed versions with id <
+       its own batch_id, so a retry never sees its crashed attempt's
+       output (the foreachBatch idempotence recipe); each trigger's
+       delta lands in ``v{batch_id}`` by overwrite.
+    2. **Buckets**: every row carries a bucket id — a hex prefix of the
+       content hash for hashes, of the LSH bucket key for entries, a
+       doc-id hash bucket for shingles/sizes — derived from the data at
+       every write (`_project`). DELTAS are flat (one sorted file per
+       relation: writes never pay per-bucket fanout); SNAPSHOTS are
+       cells (one amortized O(state) rewrite at compaction, so the big
+       side prunes by directory). The exact-dedup anti-join thus reads
+       only touched hash buckets, the LSH probe only touched bucket-key
+       ranges, and the Jaccard verify only the CANDIDATE docs' shingle
+       rows (O(candidates), flat per trigger regardless of stream age).
+    3. **Compaction and GC**: once ``compact_every`` deltas accumulate
+       past the last snapshot, they fold into ``s{batch_id}``; the
+       superseded dirs are removed at the NEXT trigger's `begin_batch`
+       (so a retry of the compacting batch stays replayable). The read
+       glob is never more than ``compact_every`` deltas + one snapshot
+       — amortized O(state/N) rewrite cost, the standard LSM trade.
 
     Local prefix lengths default small (16-way); at cluster scale raise
     ``hash_prefix_len``/``key_prefix_len`` to 2-3 hex chars and
     ``doc_buckets`` to thousands so a small batch prunes to a sliver of
-    the state — since r13 that prices only snapshot READS (the lever
-    the granularity exists for): delta writes are bucket-count-
-    independent (one flat file per relation), so the r12 measurement's
-    2–3× write penalty at 256-way no longer applies.
+    the state — that prices only snapshot READS, since delta writes are
+    bucket-count-independent.
 
     ``read_stats`` accumulates the files/bytes each pruned read actually
     touched since the last `begin_batch` — the bench's flatness
@@ -609,7 +610,7 @@ class CurationState:
     recipe applied to the hash/entry/shingle parts; it is not wired
     until a real retention policy picks a side."""
 
-    MH_PARTS = ("entries", "shingles", "sizes")
+    PARTS = ("hashes", "mh_entries", "mh_shingles", "mh_sizes")
 
     def __init__(
         self,
@@ -635,16 +636,8 @@ class CurationState:
         #: (`curation_sink(state_metrics=[...])` flips it on).
         self.collect_read_stats = False
 
-    # -- directory scanning ------------------------------------------------
-
     def _scan(self) -> tuple[list[int], list[int]]:
-        """Committed (snapshot_ids, delta_ids), ascending. Uncommitted
-        dirs and stray names are invisible (ADVICE r9: a partial version
-        dir left by a crash must not break the next trigger). Shared
-        contract with every versioned parquet store:
-        `manifold_spark.versioned_store`."""
-        from manifold_spark.versioned_store import scan_committed
-
+        """Committed (snapshot_ids, delta_ids), ascending."""
         return scan_committed(self.state_dir)
 
     def begin_batch(self, batch_id: int) -> None:
@@ -652,15 +645,11 @@ class CurationState:
         committed snapshot strictly BEFORE this batch supersedes (safe:
         batch N starting means batch N−1's epoch committed, so no retry
         can need them), sweep CRASHED partial dirs below this trigger
-        (same reasoning: only THIS trigger can replay, so an uncommitted
-        dir with a lower id can never be retried and would otherwise
-        leak disk forever — the r12 `AnnIndexStore` parity fix, shared
-        via `versioned_store.sweep_uncommitted`), and reset the
-        read-stat counters."""
+        (only THIS trigger can replay, so an uncommitted dir with a
+        lower id can never be retried), and reset the read-stat
+        counters."""
         import os
         import shutil
-
-        from manifold_spark.versioned_store import sweep_uncommitted
 
         sweep_uncommitted(self.state_dir, batch_id)
         snaps, deltas = self._scan()
@@ -685,84 +674,12 @@ class CurationState:
             names.insert(0, f"s{self._base}")
         return names
 
-    def _pruned_sources(
-        self, part: str, pcol: str, buckets: list | None
-    ) -> tuple[list[str], list[str]]:
-        """Concrete read sources for `part` across the read horizon,
-        split by on-disk layout (r13 — reads must serve both):
-
-        - **partitioned** (snapshots, and pre-r13 deltas): hive bucket
-          dirs; pruned to the touched ``{pcol}={bucket}`` leaf dirs.
-        - **flat** (r13 deltas): one file per relation per trigger with
-          the bucket id as a SORTED data column; the whole (O(batch)-
-          small) file is a read source and the bucket `isin` pushes to
-          the parquet footer min/max instead of the directory tree.
-
-        Accumulates files/bytes of both into read_stats (flat delta
-        files count fully — honest: the footer prune saves decode, not
-        scan bytes, and the files are trigger-sized)."""
-        import os
-
-        part_dirs: list[str] = []
-        flat_dirs: list[str] = []
-        for v in self._version_names():
-            root = os.path.join(self.state_dir, v, part)
-            if not os.path.isdir(root):
-                continue
-            if any(
-                "=" in name and os.path.isdir(os.path.join(root, name))
-                for name in os.listdir(root)
-            ):
-                if buckets is None:
-                    part_dirs.append(root)
-                else:
-                    for b in buckets:
-                        d = os.path.join(root, f"{pcol}={b}")
-                        if os.path.isdir(d):
-                            part_dirs.append(d)
-            elif self._has_parquet(root):
-                # The parquet guard matters for LEGACY empty deltas
-                # (pre-r13 partitionBy wrote only _SUCCESS for an
-                # all-duplicate trigger — the ADVICE-r10 shape): no '='
-                # subdirs, no parquet — handing the bare dir to
-                # spark.read.parquet would die with
-                # UNABLE_TO_INFER_SCHEMA. r13 flat deltas always hold a
-                # schema-ful (possibly 0-row) file.
-                flat_dirs.append(root)
-        if self.collect_read_stats:
-            from manifold_spark.versioned_store import walk_parquet_stats
-
-            files, size = walk_parquet_stats(part_dirs + flat_dirs)
-            self.read_stats[f"{part}_files"] = (
-                self.read_stats.get(f"{part}_files", 0) + files
-            )
-            self.read_stats[f"{part}_bytes"] = (
-                self.read_stats.get(f"{part}_bytes", 0) + size
-            )
-        return part_dirs, flat_dirs
-
-    def _read_pruned(
-        self, part: str, pcol: str, buckets: list | None, cols: list[str]
-    ) -> DataFrame | None:
-        """Bucket-pruned union of both layouts of `part` (see
-        `_pruned_sources`); data columns only — the read-back partition
-        value is never trusted (ADVICE r10). None when nothing prunes
-        in."""
-        part_dirs, flat_dirs = self._pruned_sources(part, pcol, buckets)
-        frames: list[DataFrame] = []
-        if part_dirs:
-            frames.append(self.spark.read.parquet(*part_dirs).select(*cols))
-        if flat_dirs:
-            df = self.spark.read.parquet(*flat_dirs)
-            if buckets is not None:
-                df = df.filter(F.col(pcol).isin(buckets))
-            frames.append(df.select(*cols))
-        if not frames:
-            return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+    def _read(self, part: str, buckets: list) -> DataFrame | None:
+        """`part`'s rows in ``buckets`` across the read horizon."""
+        return read_part(
+            self.spark, self.state_dir, self._version_names(), part, buckets,
+            self.read_stats if self.collect_read_stats else None,
+        )
 
     # -- pruned reads --------------------------------------------------------
 
@@ -779,7 +696,7 @@ class CurationState:
             .distinct()
             .collect()
         ]
-        return self._read_pruned("hashes", "pfx", pfxs, ["_h"])
+        return self._read("hashes", pfxs)
 
     def read_entries(self, b_entries: DataFrame) -> DataFrame | None:
         """State LSH entries in the key-prefix buckets the batch's
@@ -797,9 +714,7 @@ class CurationState:
             .distinct()
             .collect()
         ]
-        prev = self._read_pruned(
-            "mh_entries", "kb", kbs, ["doc_id", "band", "key"]
-        )
+        prev = self._read("mh_entries", kbs)
         if prev is None:
             return None
         return prev.join(
@@ -817,13 +732,12 @@ class CurationState:
         scan reduction, skipped past 10k ids where the literal list
         would bloat the plan). (None, None) when no pruned dir holds any
         of the buckets — unreachable when candidates came from this
-        stream's own entries, but the invariant is now explicit instead
-        of a zero-path `spark.read.parquet()` crash."""
+        stream's own entries, but the invariant is explicit."""
         buckets = sorted({
             _py_stable_long_hash(str(v)) % self.doc_buckets for v in old_ids
         })
-        sh = self._read_pruned("mh_shingles", "dpfx", buckets, ["doc_id", "h"])
-        sizes = self._read_pruned("mh_sizes", "dpfx", buckets, ["doc_id", "n"])
+        sh = self._read("mh_shingles", buckets)
+        sizes = self._read("mh_sizes", buckets)
         if sh is None or sizes is None:
             return None, None
         if len(old_ids) <= 10_000:
@@ -834,16 +748,10 @@ class CurationState:
     # -- writes ----------------------------------------------------------------
 
     def _project(self, part: str, frame: DataFrame) -> tuple[DataFrame, str]:
-        """Data columns + partition column RE-DERIVED from the data for
+        """Data columns + bucket column RE-DERIVED from the data for
         `part` — the single projection both `write_delta` and
-        `maybe_compact` go through. Compaction MUST NOT trust the
-        partition value Spark read back: partition-type inference turns
-        an all-numeric string bucket ('05') into int 5 and a rewrite
-        would land it under ``pfx=5``, silently invisible to pruned
-        probes of ``pfx=05`` (ADVICE r10, reproduced; latent at the
-        prefix lengths the cluster-scale docstring recommends). Deriving
-        pfx/kb/dpfx from `_h`/`key`/`doc_id` at every write makes the
-        directory names a pure function of the data."""
+        `maybe_compact` go through, so the bucket (and a snapshot's
+        cell dir names) is a pure function of the data."""
         from manifold_spark.functions.hashing import stable_long_hash
 
         if part == "hashes":
@@ -877,8 +785,6 @@ class CurationState:
         explicitly (read ≤ total; the gap is what pruning saved)."""
         import os
 
-        from manifold_spark.versioned_store import walk_parquet_stats
-
         snaps, deltas = self._scan()
         files, size = walk_parquet_stats(
             [
@@ -888,81 +794,32 @@ class CurationState:
         )
         return {"state_total_files": files, "state_total_bytes": size}
 
-    @staticmethod
-    def _has_parquet(path: str) -> bool:
-        """True iff the dir holds at least one parquet file (the
-        ADVICE-r10 empty-delta guard — shared contract:
-        `versioned_store.has_parquet`)."""
-        from manifold_spark.versioned_store import has_parquet
-
-        return has_parquet(path)
-
     def write_delta(self, batch_id: int, deltas: dict) -> None:
-        """Persist the batch's O(batch) state delta as ``v{batch_id}``:
-        full-dir overwrite (idempotent under trigger retry), committed by
-        the `_COMMIT` marker only after every part landed. The four part
-        writes are independent jobs — submitted concurrently (driver
-        threads; Spark schedules them FIFO across the same executors) so
-        the per-trigger write cost is the largest part, not the sum.
-
-        Layout (r13 — VERDICT r12 #3, decoupling read pruning from
-        write fanout): a delta is ONE FLAT file per relation, sorted by the bucket column (stored as data, not as
-        hive dirs) — parquet footer min/max gives the small-delta read
-        side the same bucket prune the directory tree would, while the
-        write never pays per-bucket fanout (measured r12: 256-way
-        prefixes cost 630–2,528 files and 2–3× wall per corpus-sized
-        trigger for zero read benefit at that batch/bucket ratio). The
-        directory fanout happens ONLY at compaction, where one
-        O(state) rewrite amortizes it and snapshot reads — the reads
-        bucket granularity exists for — get the full dir prune. So
-        raising ``doc_buckets``/prefix lengths into the thousands now
-        prices reads only, which is the terminal 100 TB form."""
+        """Persist the batch's O(batch) state delta as ``v{batch_id}``
+        (full-dir overwrite, idempotent under trigger retry), one FLAT
+        file per relation sorted by its bucket column: the parquet
+        footer min/max gives the small-delta read side the bucket prune,
+        while the write never pays per-bucket fanout (measured r12:
+        256-way prefixes cost 630–2,528 files and 2–3× wall per
+        corpus-sized trigger for zero read benefit)."""
         import os
-        import shutil
-        from concurrent.futures import ThreadPoolExecutor
 
-        root = os.path.join(self.state_dir, f"v{batch_id}")
-        shutil.rmtree(root, ignore_errors=True)
         mh = deltas["minhash"]
-        parts = {
-            "hashes": deltas["hashes"],
-            "mh_entries": mh["entries"],
-            "mh_shingles": mh["shingles"],
-            "mh_sizes": mh["sizes"],
-        }
-
-        def _write(item):
-            part, frame = item
+        frames = (deltas["hashes"], mh["entries"], mh["shingles"], mh["sizes"])
+        parts = {}
+        for part, frame in zip(self.PARTS, frames):
             proj, pcol = self._project(part, frame)
-            # repartition(1), NOT coalesce(1): the delta is a lazy plan
-            # (the trigger's LSH/hash tail), and coalesce would collapse
-            # everything after its last exchange into the single write
-            # task — measured +5-8 s/trigger at sf0.1. The round-robin
-            # shuffle is O(batch) and keeps the upstream stage parallel;
-            # the single-task sort of a trigger-sized partition is noise.
-            proj.repartition(1).sortWithinPartitions(pcol).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, part))
-
-        with ThreadPoolExecutor(max_workers=len(parts)) as pool:
-            list(pool.map(_write, parts.items()))
-        from manifold_spark.versioned_store import write_commit_marker
-
-        write_commit_marker(root)
+            parts[part] = (proj, FLAT, pcol)
+        write_version(os.path.join(self.state_dir, f"v{batch_id}"), parts)
 
     def maybe_compact(self, batch_id: int) -> None:
-        """Fold the live deltas (+ previous snapshot) into
+        """Fold the live deltas (+ previous snapshot) into cells snapshot
         ``s{batch_id}`` once ``compact_every`` deltas accumulated.
         Idempotent: a retry that finds its snapshot already committed
         skips; a partial snapshot dir is rewritten. Superseded dirs are
         NOT deleted here — `begin_batch` of a LATER trigger GCs them,
-        so a retry of THIS trigger can still read its inputs. Empty
-        deltas are skipped per-part (`_has_parquet`), and the snapshot's
-        partition columns are re-derived from the data (`_project`) —
-        never round-tripped through partition-type inference."""
+        so a retry of THIS trigger can still read its inputs."""
         import os
-        import shutil
-        from concurrent.futures import ThreadPoolExecutor
 
         snaps, deltas = self._scan()
         if batch_id in snaps:
@@ -975,48 +832,13 @@ class CurationState:
         sources = ([f"s{base}"] if base is not None else []) + [
             f"v{d}" for d in live
         ]
-        root = os.path.join(self.state_dir, f"s{batch_id}")
-        shutil.rmtree(root, ignore_errors=True)
-
-        data_cols = {
-            "hashes": ["_h"],
-            "mh_entries": ["doc_id", "band", "key"],
-            "mh_shingles": ["doc_id", "h"],
-            "mh_sizes": ["doc_id", "n"],
-        }
-
-        def _compact_part(part: str) -> None:
-            frames = []
-            for src in sources:
-                p = os.path.join(self.state_dir, src, part)
-                if os.path.isdir(p) and self._has_parquet(p):
-                    # Data columns ONLY: the read-back partition column is
-                    # inference-typed (string '05' vs int 5 across
-                    # versions) and must neither be unioned nor trusted.
-                    frames.append(
-                        self.spark.read.parquet(p).select(*data_cols[part])
-                    )
-            if not frames:
-                return
-            merged = frames[0]
-            for f in frames[1:]:
-                merged = merged.unionByName(f)
-            proj, pcol = self._project(part, merged)
-            # one file per bucket value — see write_delta
-            proj.repartition(F.col(pcol)).write.partitionBy(pcol).mode(
-                "overwrite"
-            ).parquet(os.path.join(root, part))
-
-        with ThreadPoolExecutor(max_workers=len(self.MH_PARTS) + 1) as pool:
-            list(
-                pool.map(
-                    _compact_part,
-                    ("hashes", "mh_entries", "mh_shingles", "mh_sizes"),
-                )
-            )
-        from manifold_spark.versioned_store import write_commit_marker
-
-        write_commit_marker(root)
+        parts = {}
+        for part in self.PARTS:
+            merged = fold_part(self.spark, self.state_dir, sources, part)
+            if merged is not None:
+                proj, pcol = self._project(part, merged)
+                parts[part] = (proj, CELLS, pcol)
+        write_version(os.path.join(self.state_dir, f"s{batch_id}"), parts)
 
 
 def start_curation_stream(

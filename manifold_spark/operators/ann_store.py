@@ -8,19 +8,16 @@ anticipate: `similarity.topk_ivf(lists=…, centroids=…)` and
 `pq.topk_ivf_pq(encoded=…, codebooks=…, centroids=…)` accept
 pre-materialized indexes and REQUIRE the quantizer that built them —
 the store owns exactly that pairing (frozen quantizer + cell tables) on
-disk, with the `CurationState` versioning discipline:
+disk, on the versioned-store format `CurationState` also uses
+(`manifold_spark.versioned_store`: keyed versions, schema-bearing commit
+markers, one writer/reader/fold). What this store decides for itself:
 
-1. **Keyed versions + commit markers** — each `append` lands in
-   ``v{batch_id}`` (full-dir overwrite ⇒ idempotent under retry),
-   committed by an empty ``_COMMIT`` written LAST; readers ignore
-   uncommitted dirs.
-2. **Cell-partitioned layout** — every part is ``partitionBy`` the
-   coarse list id, ONE file per cell per version (repartition by the
-   partition column before write), so a query batch's probe reads
-   ``|probed cells| × |live versions|`` files. The partition value is
-   never trusted on read-back: ``centroid_id`` is stored as a DATA
-   column and the partition column is a derived copy (the ADVICE-r10
-   partition-type-inference lesson, applied from day one here).
+1. **Read horizon** — each `append` lands in ``v{batch_id}``; searches
+   read every committed version.
+2. **Cells on the coarse list id** — vectors and codes are cells on
+   ``pc``, a derived copy of the ``centroid_id`` data column, so a
+   query batch's probe reads ``|probed cells| × |live versions|``
+   files; tombstones are one flat file per version.
 3. **Snapshot compaction** — after ``compact_every`` deltas, fold into
    ``s{batch_id}``; superseded dirs GC with a one-append GRACE period
    (see `_gc_superseded`). The probe glob is never more than
@@ -62,14 +59,18 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from manifold_spark.plans.boundary import _persist_tracked, stage_boundary
 from manifold_spark.versioned_store import (
-    has_parquet,
+    CELLS,
+    FLAT,
+    fold_part,
+    read_part,
     scan_committed,
     sweep_uncommitted,
     walk_parquet_stats,
-    write_commit_marker,
+    write_version,
 )
 
 
@@ -77,7 +78,8 @@ class AnnIndexStore:
     """Persistent IVF(-PQ) index under ``state_dir``:
 
     - ``quantizer/centroids/``  (id_col, vec_col) — the frozen coarse
-      quantizer (+ ``quantizer/meta.json``: dim, pq knobs, codebooks).
+      quantizer (+ ``quantizer/meta.json``: dim, pq knobs, codebooks,
+      centroid schema).
     - ``v{n}/vecs/pc=*/``   (id, vec, centroid_id, ver) per cell.
     - ``v{n}/codes/pc=*/``  (id, codes, centroid_id, ver) per cell (PQ).
     - ``v{n}/tombs/``       (id, tomb_ver) — merge-on-read deletes
@@ -88,13 +90,13 @@ class AnnIndexStore:
     - ``s{n}/…``            compacted snapshots, same parts (never
       tombs; surviving rows KEEP their original ``ver``).
 
-    On-disk format note: the ``ver``/``tomb_ver`` columns are the r12
-    format; a state dir written by an earlier revision fails loudly on
-    first read (unresolved column) and must be rebuilt via
-    ``initialize(overwrite=True)`` + re-append. Deliberately NO silent
-    fallback: a guessed sequence number for unversioned rows could
-    resurrect deleted rows or hide re-added ones — the two failure
-    modes the sequence numbers exist to prevent.
+    On-disk format note: a state dir written before part schemas were
+    recorded (empty ``_COMMIT`` markers, no centroid schema in
+    ``meta.json``) fails its first read with a ``ValueError`` and must
+    be rebuilt via ``initialize(overwrite=True)`` + re-append.
+    Deliberately NO compatibility reader: a guessed schema — or, for
+    the pre-``ver`` format, a guessed sequence number — could resurrect
+    deleted rows or hide re-added ones.
 
     Crash window note: `initialize` writes the quantizer, then appends
     v0 — no marker spans both, so a crash in between leaves a quantizer
@@ -138,14 +140,22 @@ class AnnIndexStore:
     @property
     def meta(self) -> dict:
         if self._meta is None:
-            with open(os.path.join(self.state_dir, "quantizer", "meta.json")) as f:
-                self._meta = json.load(f)
+            qdir = os.path.join(self.state_dir, "quantizer")
+            with open(os.path.join(qdir, "meta.json")) as f:
+                meta = json.load(f)
+            if "centroid_schema" not in meta:
+                raise ValueError(
+                    f"{qdir}: meta.json records no centroid schema — the "
+                    "store was written by an older format; rebuild it with "
+                    "initialize(overwrite=True)"
+                )
+            self._meta = meta
         return self._meta
 
     def centroids_df(self) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.state_dir, "quantizer", "centroids")
-        )
+        return self.spark.read.schema(
+            StructType.fromJson(self.meta["centroid_schema"])
+        ).parquet(os.path.join(self.state_dir, "quantizer", "centroids"))
 
     # -- versioning (CurationState discipline) -------------------------------
 
@@ -222,8 +232,6 @@ class AnnIndexStore:
         ]:
             shutil.rmtree(os.path.join(self.state_dir, name), ignore_errors=True)
 
-    _has_parquet = staticmethod(has_parquet)
-
     # -- encode + write -------------------------------------------------------
 
     def _encode_parts(self, batch: DataFrame) -> dict[str, DataFrame]:
@@ -261,48 +269,25 @@ class AnnIndexStore:
             )
         }
 
-    def _write_version(self, name: str, parts: dict[str, DataFrame]) -> None:
-        """Write one version dir. Data rows are stamped with the
-        committing version as a ``ver`` DATA column (frames that already
-        carry one — the compaction fold's surviving rows — keep it);
-        tombstones are stamped ``tomb_ver``. These are the sequence
-        numbers the shadow rule (`_shadow`) compares."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        ver = int(name[1:])
-        root = os.path.join(self.state_dir, name)
-        shutil.rmtree(root, ignore_errors=True)
-
-        def _write(item) -> None:
-            part, frame = item
+    def _commit(self, batch_id: int, parts: dict[str, DataFrame]) -> None:
+        """Commit ``parts`` as ``v{batch_id}``: data rows are stamped with
+        the committing version as a ``ver`` DATA column and written as
+        cells on ``pc`` (a derived COPY of ``centroid_id``); tombstones
+        are stamped ``tomb_ver`` and written as one flat file. These are
+        the sequence numbers the shadow rule (`_shadow`) compares. For
+        PQ versions both data parts project the SAME persisted
+        `_encoded_cache` frame, so the concurrent part writes share the
+        encode work instead of racing to recompute it."""
+        ver = F.lit(batch_id).cast("long")
+        spec = {}
+        for part, frame in parts.items():
             if part == "tombs":
-                # id list, takedown-sized — one flat file, no cells.
-                tombs = frame.select(self.id_col).distinct().withColumn(
-                    "tomb_ver", F.lit(ver).cast("long")
-                )
-                tombs.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(root, part)
-                )
-                return
-            if "ver" not in frame.columns:
-                frame = frame.withColumn("ver", F.lit(ver).cast("long"))
-            # partition column = derived COPY of the data column; one
-            # file per cell (repartition by pc — see CurationState
-            # write_delta's small-file lesson).
-            proj = frame.withColumn("pc", F.col("centroid_id"))
-            proj.repartition(F.col("pc")).write.partitionBy("pc").mode(
-                "overwrite"
-            ).parquet(os.path.join(root, part))
-
-        # Independent jobs submitted concurrently (driver threads, the
-        # write_delta recipe — VERDICT r11 #7): a PQ version's vecs +
-        # codes (+ tombs) writes cost the largest part, not the sum.
-        # Note for PQ versions both data parts project the SAME persisted
-        # `_encoded_cache` frame, so the concurrent jobs share the
-        # encode work through the cache instead of racing to recompute.
-        with ThreadPoolExecutor(max_workers=max(len(parts), 1)) as pool:
-            list(pool.map(_write, parts.items()))
-        write_commit_marker(root)
+                tombs = frame.select(self.id_col).distinct()
+                spec[part] = (tombs.withColumn("tomb_ver", ver), FLAT, None)
+            else:
+                cells = frame.withColumn("ver", ver)
+                spec[part] = (cells.withColumn("pc", F.col("centroid_id")), CELLS, "pc")
+        write_version(os.path.join(self.state_dir, f"v{batch_id}"), spec)
 
     def _next_batch_id(self) -> int:
         """Auto-assign the next free version id — REFUSED while a
@@ -420,9 +405,9 @@ class AnnIndexStore:
             "dim": dim,
             "pq": bool(use_pq),
             "residual": bool(residual),
-            # persisted so list-form delete() can build a typed tombstone
-            # frame without re-opening the centroids parquet
-            "id_type": cents.schema[self.id_col].dataType.simpleString(),
+            # declared at every centroids read (no inference job), and
+            # list-form delete() types its tombstone frame from it
+            "centroid_schema": json.loads(cents.schema.json()),
         }
         if use_pq:
             m = m if m is not None else PQ_M
@@ -473,7 +458,7 @@ class AnnIndexStore:
             batch_id = self._next_batch_id()
         self._encoded_cache = None
         try:
-            self._write_version(f"v{batch_id}", self._encode_parts(batch))
+            self._commit(batch_id, self._encode_parts(batch))
         finally:
             if self._encoded_cache is not None:
                 self._encoded_cache.unpersist()
@@ -506,16 +491,13 @@ class AnnIndexStore:
         if isinstance(ids, DataFrame):
             tombs = ids.select(F.col(ids.columns[0]).alias(self.id_col))
         else:
-            # id type persisted in meta at initialize — a takedown of a
-            # handful of ids must not pay a centroids parquet open.
-            # (.get fallback: stores initialized before id_type existed)
-            id_type = self.meta.get("id_type") or (
-                self.centroids_df().schema[self.id_col].dataType.simpleString()
-            )
+            id_type = StructType.fromJson(self.meta["centroid_schema"])[
+                self.id_col
+            ].dataType.simpleString()
             tombs = self.spark.createDataFrame(
                 [(v,) for v in ids], schema=f"{self.id_col} {id_type}"
             )
-        self._write_version(f"v{batch_id}", {"tombs": tombs})
+        self._commit(batch_id, {"tombs": tombs})
         self._maybe_compact(batch_id)
         return batch_id
 
@@ -558,7 +540,7 @@ class AnnIndexStore:
             # full count aggregate on the per-trigger critical path.
             if dels.take(1):
                 parts["tombs"] = dels
-            self._write_version(f"v{batch_id}", parts)
+            self._commit(batch_id, parts)
         finally:
             if self._encoded_cache is not None:
                 self._encoded_cache.unpersist()
@@ -577,26 +559,10 @@ class AnnIndexStore:
         the tombstone horizon — compaction reuses it
         (``count_stats=False``) so the set searches hide and the set
         the fold drops can never drift apart."""
-        dirs = [
-            os.path.join(self.state_dir, v, "tombs")
-            for v in self._live_names()
-        ]
-        dirs = [d for d in dirs if os.path.isdir(d) and self._has_parquet(d)]
-        if not dirs:
+        tombs = self.read_cells("tombs", count_stats=count_stats)
+        if tombs is None:
             return None
-        if count_stats and self.collect_read_stats:
-            files, size = walk_parquet_stats(dirs)
-            self.read_stats["tombs_files"] = (
-                self.read_stats.get("tombs_files", 0) + files
-            )
-            self.read_stats["tombs_bytes"] = (
-                self.read_stats.get("tombs_bytes", 0) + size
-            )
-        return (
-            self.spark.read.parquet(*dirs)
-            .groupBy(self.id_col)
-            .agg(F.max("tomb_ver").alias("tomb_ver"))
-        )
+        return tombs.groupBy(self.id_col).agg(F.max("tomb_ver").alias("tomb_ver"))
 
     def _shadow(self, frame: DataFrame, tombs: DataFrame) -> DataFrame:
         """Drop `frame` rows a tombstone shadows: same id AND the row's
@@ -619,15 +585,12 @@ class AnnIndexStore:
     def _maybe_compact(self, batch_id: int) -> None:
         """Fold committed state into ``s{batch_id}`` once more than
         ``compact_every`` deltas sit past the last snapshot. Idempotent
-        (committed snapshot ⇒ skip); empty parts skipped per-dir
-        (`_has_parquet` — the ADVICE-r10 empty-delta crash class);
-        ``centroid_id`` comes from the DATA columns, never the inferred
-        partition value. Shadowed rows (``ver < tomb_ver``) are dropped
-        during the fold and the tombstones themselves are absorbed (not
-        written into the snapshot): the fold spans the whole live
-        horizon, so every row a live tombstone could shadow is inside
-        it, and any LATER row carries a ver above every absorbed
-        tombstone. Surviving rows keep their original ``ver``."""
+        (committed snapshot ⇒ skip). Shadowed rows (``ver < tomb_ver``)
+        are dropped during the fold and the tombstones themselves are
+        absorbed (not written into the snapshot): the fold spans the
+        whole live horizon, so every row a live tombstone could shadow
+        is inside it, and any LATER row carries a ver above every
+        absorbed tombstone. Surviving rows keep their original ``ver``."""
         snaps, deltas = self._scan()
         if batch_id in snaps:
             return
@@ -656,82 +619,37 @@ class AnnIndexStore:
         # the tomb_ver), so absorbing fold-internal tombstones stays
         # sound.
         tombs_all = self._tombstones(count_stats=False)
-        data_cols = {"vecs": [self.id_col, self.vec_col, "centroid_id", "ver"]}
-        if self.meta["pq"]:
-            data_cols["codes"] = [self.id_col, "codes", "centroid_id", "ver"]
-        root = os.path.join(self.state_dir, f"s{batch_id}")
-        shutil.rmtree(root, ignore_errors=True)
-        for part, cols in data_cols.items():
-            frames = []
-            for src in sources:
-                p = os.path.join(self.state_dir, src, part)
-                if os.path.isdir(p) and self._has_parquet(p):
-                    frames.append(self.spark.read.parquet(p).select(*cols))
-            if not frames:
+        parts = {}
+        for part in ("vecs", "codes") if self.meta["pq"] else ("vecs",):
+            merged = fold_part(self.spark, self.state_dir, sources, part)
+            if merged is None:
                 continue
-            merged = frames[0]
-            for fr in frames[1:]:
-                merged = merged.unionByName(fr)
             if tombs_all is not None:
                 merged = self._shadow(merged, tombs_all)
-            proj = merged.withColumn("pc", F.col("centroid_id"))
-            proj.repartition(F.col("pc")).write.partitionBy("pc").mode(
-                "overwrite"
-            ).parquet(os.path.join(root, part))
+            parts[part] = (merged.withColumn("pc", F.col("centroid_id")), CELLS, "pc")
         # GC fence (ADVICE r12): the max id committed as of this
         # compaction — `_gc_superseded` releases only once something
         # LATER commits, even when an out-of-band delta above batch_id
         # already existed (part of the snapshot dir, so it commits
         # atomically with it and a retried compaction rewrites it).
-        with open(os.path.join(root, "_FENCE"), "w") as f:
-            json.dump({"fence": max(snaps + deltas + [batch_id])}, f)
-        write_commit_marker(root)
+        write_version(
+            os.path.join(self.state_dir, f"s{batch_id}"),
+            parts,
+            {"_FENCE": json.dumps({"fence": max(snaps + deltas + [batch_id])})},
+        )
 
     # -- pruned reads ----------------------------------------------------------
 
-    def _leaf_dirs(self, part: str, cids: list | None) -> list[str]:
-        dirs: list[str] = []
-        for v in self._live_names():
-            root = os.path.join(self.state_dir, v, part)
-            if not os.path.isdir(root):
-                continue
-            if cids is None:
-                # Always hand Spark LEAF dirs: version roots would trip
-                # multi-root partition discovery (and we never want the
-                # inferred pc column anyway — centroid_id is in the data).
-                dirs.extend(
-                    os.path.join(root, name)
-                    for name in sorted(os.listdir(root))
-                    if name.startswith("pc=")
-                    and os.path.isdir(os.path.join(root, name))
-                )
-            else:
-                for cid in cids:
-                    d = os.path.join(root, f"pc={cid}")
-                    if os.path.isdir(d):
-                        dirs.append(d)
-        if self.collect_read_stats:
-            files, size = walk_parquet_stats(dirs)
-            self.read_stats[f"{part}_files"] = (
-                self.read_stats.get(f"{part}_files", 0) + files
-            )
-            self.read_stats[f"{part}_bytes"] = (
-                self.read_stats.get(f"{part}_bytes", 0) + size
-            )
-        return dirs
-
-    def read_cells(self, part: str, cids: list | None = None) -> DataFrame | None:
-        """The given cells of `part` across the live read horizon —
-        data columns only (pc dropped: leaf-dir reads never touch
-        partition inference)."""
-        dirs = self._leaf_dirs(part, cids)
-        if not dirs:
-            return None
-        cols = {
-            "vecs": [self.id_col, self.vec_col, "centroid_id", "ver"],
-            "codes": [self.id_col, "codes", "centroid_id", "ver"],
-        }[part]
-        return self.spark.read.parquet(*dirs).select(*cols)
+    def read_cells(
+        self, part: str, cids: list | None = None, count_stats: bool = True
+    ) -> DataFrame | None:
+        """`part` across the live read horizon, pruned to the ``cids``
+        cells when given — data columns only; None when no live version
+        holds the part."""
+        return read_part(
+            self.spark, self.state_dir, self._live_names(), part, cids,
+            self.read_stats if count_stats and self.collect_read_stats else None,
+        )
 
     def state_totals(self) -> dict[str, int]:
         files, size = walk_parquet_stats(

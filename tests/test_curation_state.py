@@ -27,7 +27,9 @@ marked slow (`-m slow`).
 
 from __future__ import annotations
 
+import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,6 +44,7 @@ from manifold_spark.curation import (
 from manifold_spark.functions.hashing import stable_long_hash
 from manifold_spark.operators import dedup
 from manifold_spark.operators.dedup import operator_cache_scope
+from manifold_spark.versioned_store import read_part
 
 
 # ---------------------------------------------------------------------------
@@ -131,16 +134,14 @@ def _state_content(spark, state_dir):
     names = ([f"s{base}"] if base is not None else []) + [
         f"v{d}" for d in deltas if base is None or d > base
     ]
-    for v in names:
-        for part, cols, acc in (
-            ("hashes", ["_h"], hashes),
-            ("mh_entries", ["doc_id", "band", "key"], entries),
-            ("mh_sizes", ["doc_id", "n"], sizes),
-        ):
-            p = os.path.join(state_dir, v, part)
-            if os.path.isdir(p) and CurationState._has_parquet(p):
-                for r in spark.read.parquet(p).select(*cols).collect():
-                    acc.add(tuple(r))
+    for part, cols, acc in (
+        ("hashes", ["_h"], hashes),
+        ("mh_entries", ["doc_id", "band", "key"], entries),
+        ("mh_sizes", ["doc_id", "n"], sizes),
+    ):
+        df = read_part(spark, state_dir, names, part)
+        if df is not None:
+            acc.update(tuple(r) for r in df.select(*cols).collect())
     return hashes, entries, sizes
 
 
@@ -302,13 +303,14 @@ def test_delta_layout_flat_and_snapshot_fanout(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_legacy_empty_partitioned_delta_does_not_break_reads(spark, tmp_path):
-    """Review r13: a PRE-r13 empty delta (the old partitionBy path wrote
-    only _SUCCESS for an all-duplicate trigger — no '=' subdirs, no
-    parquet) must not be classified as a flat r13 delta: handing the
-    bare dir to spark.read.parquet dies with UNABLE_TO_INFER_SCHEMA.
-    The parquet guard skips it, exactly as the old leaf-dir walk did."""
-    state_dir = str(tmp_path / "legacy-empty")
+def test_pre_schema_store_fails_loudly(spark, tmp_path):
+    """A store dir written before part schemas were recorded at commit
+    (an empty ``_COMMIT`` marker; an ANN ``meta.json`` without the
+    centroid schema) has no compatibility reader: its first read raises
+    a ValueError naming the dir, instead of inferring a schema."""
+    from manifold_spark.operators.ann_store import AnnIndexStore
+
+    state_dir = str(tmp_path / "pre-schema")
     st = CurationState(spark, state_dir)
     empty_mh = {
         "entries": spark.createDataFrame([], "doc_id long, band int, key string"),
@@ -316,30 +318,32 @@ def test_legacy_empty_partitioned_delta_does_not_break_reads(spark, tmp_path):
         "sizes": spark.createDataFrame([], "doc_id long, n long"),
     }
     st.write_delta(0, {
-        "hashes": spark.createDataFrame([("0abc",), ("5def",)], "_h string"),
+        "hashes": spark.createDataFrame([("0abc",)], "_h string"),
         "minhash": empty_mh,
     })
-    # fake the legacy shape: committed version whose part dirs hold only
-    # the Spark _SUCCESS marker (no parquet, no partition subdirs)
-    for part in ("hashes", "mh_entries", "mh_shingles", "mh_sizes"):
-        d = os.path.join(state_dir, "v1", part)
-        os.makedirs(d)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
-    open(os.path.join(state_dir, "v1", "_COMMIT"), "w").close()
-
+    open(os.path.join(state_dir, "v0", "_COMMIT"), "w").close()
     probe = CurationState(spark, state_dir)
-    probe.begin_batch(2)
-    got = probe.read_hashes(spark.createDataFrame([("0xyz",), ("5xyz",)], "_h string"))
-    assert {r["_h"] for r in got.collect()} == {"0abc", "5def"}
-    # must simply not raise (ADVICE r13: the former `is None or True`
-    # assertion was a tautology — the call itself is the check)
-    probe.read_entries(
-        spark.createDataFrame([(1, 0, "0key")], "doc_id long, band int, key string")
+    probe.begin_batch(1)
+    with pytest.raises(ValueError, match=re.escape(os.path.join(state_dir, "v0"))):
+        probe.read_hashes(spark.createDataFrame([("0xyz",)], "_h string"))
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(8)],
+        "vec_id long, embedding array<float>",
     )
-    sh, sz = probe.read_doc_state([1, 2])
-    # v0's minhash parts are empty but schema-ful; legacy v1 is skipped
-    if sh is not None:
-        assert sh.count() == 0 and sz.count() == 0
+    ann = AnnIndexStore(spark, str(tmp_path / "pre-schema-ann"))
+    ann.initialize(vecs, n_centroids=2)
+    meta_path = os.path.join(ann.state_dir, "quantizer", "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["centroid_schema"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    stale = AnnIndexStore(spark, ann.state_dir)
+    with pytest.raises(
+        ValueError, match=re.escape(os.path.join(ann.state_dir, "quantizer"))
+    ):
+        stale.topk(vecs.limit(1), k=1, nprobe=1)
 
 
 # ---------------------------------------------------------------------------
