@@ -222,9 +222,15 @@ def marker_replicas(docs: DataFrame, factor: int) -> DataFrame:
 
 
 def warmup(spark, queries, names, sf_dir) -> None:
-    """Run each query once so whole-stage codegen is compiled (and
-    janino-cached) before timing; best-effort, the timed run surfaces
-    real errors."""
+    """Run each query once so its generated classes are compiled and
+    cached before timing; best-effort, the timed run surfaces real
+    errors. The 15 headline queries need ~300 classes, which the
+    session's 1000-entry codegen cache holds: after a warm-up at
+    sf0.001, the three timed runs at sf0.01 (local[4]) compiled 24
+    classes, all in the first two runs of dedup_minhash_lsh (16),
+    dedup_ngram_jaccard (4), scd2_merge_full (2) and events_type_stats
+    (2), whose plans change with the data size. At Spark's default of
+    100 entries the same pass recompiled 329."""
     for name in names:
         try:
             queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()

@@ -1561,6 +1561,8 @@ def q_sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the corpus; search still covers the full corpus either way."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from manifold_spark.plans.parallelism import submit_inheriting
+
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     # r14 round-close (guide §2.6): the two quantizer trainings are
@@ -1570,13 +1572,15 @@ def q_sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier back-fills with the other's tasks. Values are unchanged:
     # each training is self-contained and deterministic.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_full = pool.submit(
+        f_full = submit_inheriting(
+            pool, spark,
             lambda: similarity.topk_ivf_kmeans(
                 queries, emb, DIM,
                 k=TOP_K, n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE,
             )
         )
-        f_sampled = pool.submit(
+        f_sampled = submit_inheriting(
+            pool, spark,
             lambda: similarity.topk_ivf_kmeans(
                 queries, emb, DIM,
                 k=TOP_K, n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE,
@@ -3564,11 +3568,15 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # list ops are GIL-atomic), so results are unchanged.
     from concurrent.futures import ThreadPoolExecutor
 
+    from manifold_spark.plans.parallelism import submit_inheriting
+
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_doc = pool.submit(
-            lambda: curate_corpus(docs, require_terminal_punct=True, **shared)
+        f_doc = submit_inheriting(
+            pool, spark,
+            lambda: curate_corpus(docs, require_terminal_punct=True, **shared),
         )
-        f_alt = pool.submit(
+        f_alt = submit_inheriting(
+            pool, spark,
             lambda: curate_corpus(
                 docs.filter(F.col("doc_id").cast("long") % CUR_ALT_MOD == 0),
                 require_terminal_punct=False,

@@ -133,6 +133,9 @@ class AnnIndexStore:
         #: CurationState.collect_read_stats.
         self.collect_read_stats = False
         self._meta: dict | None = None
+        #: the frozen quantizer's centroids as a cid-sorted list, read
+        #: once; `initialize` resets it with `_meta`
+        self._sorted_centroids: list | None = None
         self._encoded_cache: DataFrame | None = None
 
     # -- quantizer ----------------------------------------------------------
@@ -442,6 +445,7 @@ class AnnIndexStore:
         with open(os.path.join(qdir, "meta.json"), "w") as f:
             json.dump(meta, f)
         self._meta = None  # force re-read
+        self._sorted_centroids = None
         self.append(corpus, batch_id=0)
         return self
 
@@ -665,10 +669,11 @@ class AnnIndexStore:
 
     def _cids_for_vecs(self, q_vecs: list, nprobe: int) -> list:
         """The union of every query's nprobe nearest cells, computed
-        DRIVER-SIDE (one bounded collect — the centroid table is
-        cell-count-sized; the vectors were already collected by the
-        pinning step) with the exact `topk_ivf_pq` probe recipe:
-        left-associated double dots, (dot desc, cid asc) tie-break.
+        DRIVER-SIDE (one bounded collect of the cell-count-sized
+        centroid table on the store's first search, kept after; the
+        vectors were already collected by the pinning step) with the
+        exact `topk_ivf_pq` probe recipe: left-associated double dots,
+        (dot desc, cid asc) tie-break.
         That is bit-identical to the `assign_centroids` column
         expression (same IEEE-double op order over the same
         float32→double values — the repo-wide determinism contract
@@ -681,7 +686,11 @@ class AnnIndexStore:
 
         from manifold_spark.operators.pq import _sorted_cents
 
-        cents = _sorted_cents(self.centroids_df(), self.id_col, self.vec_col)
+        if self._sorted_centroids is None:
+            self._sorted_centroids = _sorted_cents(
+                self.centroids_df(), self.id_col, self.vec_col
+            )
+        cents = self._sorted_centroids
         cids: set = set()
         for vec in q_vecs:
             dots = sorted(

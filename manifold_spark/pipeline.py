@@ -91,7 +91,10 @@ def run_week(
     # are computed once under BlockManager per-partition locks). Each
     # write carries an Observation that counts its rows for the
     # staging_quality stage.
-    from manifold_spark.plans.parallelism import scoped_scan_split_size
+    from manifold_spark.plans.parallelism import (
+        scoped_scan_split_size,
+        submit_inheriting,
+    )
 
     def _write_staging(item: tuple[str, DataFrame]) -> Observation:
         name, df = item
@@ -110,7 +113,11 @@ def run_week(
         with scoped_scan_split_size(spark, path):
             staged = stage.stage_all(base, execution_date)
             with ThreadPoolExecutor(max_workers=len(staged)) as pool:
-                observed = dict(zip(staged, pool.map(_write_staging, staged.items())))
+                futures = [
+                    submit_inheriting(pool, spark, _write_staging, item)
+                    for item in staged.items()
+                ]
+                observed = dict(zip(staged, (f.result() for f in futures)))
     finally:
         base.unpersist()
     _mark("el_staging")
@@ -172,9 +179,14 @@ def run_week(
         return (row["mx"] or 0), row["n"]
 
     with ThreadPoolExecutor(max_workers=len(SURROGATE_KEYS) + 2) as pool:
-        date_future = pool.submit(_date_dim)
-        fact_prep_future = pool.submit(_fact_prep)
-        for dim_name, n in pool.map(_merge_dim, SURROGATE_KEYS.items()):
+        date_future = submit_inheriting(pool, spark, _date_dim)
+        fact_prep_future = submit_inheriting(pool, spark, _fact_prep)
+        dim_futures = [
+            submit_inheriting(pool, spark, _merge_dim, item)
+            for item in SURROGATE_KEYS.items()
+        ]
+        for f in dim_futures:
+            dim_name, n = f.result()
             counts[f"presentation.{dim_name}"] = n
         date_future.result()
     _mark("scd2_dims")

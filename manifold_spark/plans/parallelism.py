@@ -13,6 +13,9 @@ no-op exactly when the data is big enough not to need it, and the shuffled
 bytes are small exactly when it fires. The estimate comes from the plan's
 input FILES (count + local sizes vs `maxPartitionBytes`), never from
 `df.rdd` — touching `.rdd` forces a physical-plan compile per call.
+
+`submit_inheriting` is the driver-side counterpart: independent jobs
+submitted from a thread pool keep the caller's job group.
 """
 
 from __future__ import annotations
@@ -20,10 +23,12 @@ from __future__ import annotations
 import math
 import os
 import re
+from concurrent.futures import Executor, Future
 from contextlib import contextmanager
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 
 _MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
@@ -132,3 +137,18 @@ def ensure_parallelism(df: DataFrame, min_fraction: float = 0.5) -> DataFrame:
     if splits is not None and splits < max(2, int(target * min_fraction)):
         return df.repartition(target)
     return df
+
+
+def submit_inheriting(pool: Executor, spark: SparkSession, fn, *args) -> Future:
+    """``pool.submit(fn, *args)``, with every Spark job ``fn`` starts
+    carrying the calling thread's local properties (job group,
+    description, scheduler pool) and session tags. PySpark keeps those
+    per thread and a pool thread starts with none, so without the wrap a
+    job-group count of the caller misses every job the pool runs.
+
+    Each call copies the properties here, on the calling thread
+    (`inheritable_thread_target` copies them when it wraps): one copy
+    shared by concurrent pool threads would also share the SQL execution
+    id each query sets in it, and one thread's jobs could land under
+    another's execution."""
+    return pool.submit(inheritable_thread_target(spark)(fn), *args)

@@ -41,6 +41,25 @@ DEFAULT_CONF: dict[str, str] = {
     # diagnostic needs; truncation affects only display strings, never
     # the executed plan.
     "spark.sql.maxPlanStringLength": "2000000",
+    # Generated classes kept by the JVM-wide whole-stage codegen LRU
+    # (Spark's default is 100). A warm call needs more distinct classes
+    # than that, so at 100 it evicts its own classes and recompiles
+    # them every time; evicted classes also never live long enough for
+    # the JIT to warm them. Compiles per call (local[4], 4 vCPU;
+    # perfbench inputs, bench.py's headline queries at sf0.01):
+    #
+    #   call                            classes used   at 100   at 1000
+    #   run_week, one warm week                 ~210  185-191     10-16
+    #   curate_corpus, warm                     ~190  169-183      0-12
+    #   headline pass, 15 queries, warm         ~300  310-329      0-24
+    #   tier-1 test session, whole run        <=4700     7915      4704
+    #
+    # 1000 holds the three working sets together with room to spare.
+    # The conf is static: it is read at the JVM's first codegen, so a
+    # session reused through getOrCreate keeps the size it started
+    # with, and on a cluster every executor JVM has its own cache. The
+    # gain is measured in local mode and not claimed for a cluster.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from manifold_spark.plans.parallelism import submit_inheriting
+
 FLAT = "flat"
 CELLS = "cells"
 
@@ -124,8 +126,7 @@ def write_version(
             "schema": json.loads(StructType(fields).json()),
         }
 
-    def _write(item) -> None:
-        part, (frame, layout, bucket) = item
+    def _write(part: str, frame: DataFrame, layout: str, bucket) -> None:
         if layout == CELLS:
             writer = frame.repartition(F.col(bucket)).write.partitionBy(bucket)
         elif bucket is not None:
@@ -135,7 +136,14 @@ def write_version(
         writer.mode("overwrite").parquet(os.path.join(root, part))
 
     with ThreadPoolExecutor(max_workers=max(len(parts), 1)) as pool:
-        list(pool.map(_write, parts.items()))
+        futures = [
+            submit_inheriting(
+                pool, frame.sparkSession, _write, part, frame, layout, bucket
+            )
+            for part, (frame, layout, bucket) in parts.items()
+        ]
+        for f in futures:
+            f.result()
     for name, text in (extra_files or {}).items():
         with open(os.path.join(root, name), "w") as f:
             f.write(text)

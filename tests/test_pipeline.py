@@ -137,6 +137,55 @@ def test_fact_resolves_surrogate_keys(spark, warehouse):
     assert fact.select("id").distinct().count() == fact.count()
 
 
+def _compiles(spark) -> int:
+    """Janino compiles the JVM has run (one per generated class built)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_rerun_reuses_generated_classes(spark, warehouse, listings_weeks):
+    """A warm `run_week` needs ~200 distinct generated classes. The
+    session's codegen cache holds them all, so re-running a week right
+    after a run of the same week compiles almost nothing. With Spark's
+    default of 100 entries each call evicted its own classes and
+    recompiled ~190 of them."""
+    store = warehouse["store"]
+    run_week(spark, store, listings_weeks["root"], listings_weeks["week2"])
+    before = _compiles(spark)
+    run_week(spark, store, listings_weeks["root"], listings_weeks["week2"])
+    compiled = _compiles(spark) - before
+    assert compiled <= 20, f"a warm run_week compiled {compiled} classes"
+
+
+def _marker_job(sc, group: str) -> int:
+    """Id of a one-task job run under ``group``; job ids are sequential."""
+    sc.setJobGroup(group, "job-id marker")
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    (job_id,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job_id
+
+
+def test_run_week_jobs_carry_caller_job_group(spark, warehouse, listings_weeks):
+    """Every job a `run_week` call starts, the staging writes and the
+    dimension merges on its pool threads included, runs in the caller's
+    job group: the group's jobs are exactly the ids between two marker
+    jobs run before and after the call."""
+    sc = spark.sparkContext
+    first = _marker_job(sc, "run-week-group-before")
+    sc.setJobGroup("run-week-group", "run_week under a caller job group")
+    try:
+        run_week(spark, warehouse["store"], listings_weeks["root"], listings_weeks["week2"])
+    finally:
+        sc.setJobGroup(None, None)
+    last = _marker_job(sc, "run-week-group-after")
+    in_group = set(sc.statusTracker().getJobIdsForGroup("run-week-group"))
+    assert in_group == set(range(first + 1, last))
+
+
 def test_fact_idempotent_rerun(spark, warehouse, listings_weeks):
     store = warehouse["store"]
     before = store.read(spark, "presentation", "fact_stock").count()

@@ -2,7 +2,8 @@
 recorded (`manifold_spark.versioned_store`), so reading a
 `CurationState` horizon or an `AnnIndexStore`'s cells, tombstones and
 quantizer launches no Spark job — an inferred parquet read launches one
-per call. Default tier: both stores are built from a handful of rows."""
+per call — and a driver-path ANN search collects the frozen quantizer
+only once. Default tier: both stores are built from a handful of rows."""
 
 from __future__ import annotations
 
@@ -13,15 +14,17 @@ from manifold_spark.curation import CurationState, _py_stable_long_hash
 from manifold_spark.operators.ann_store import AnnIndexStore
 
 
-def _jobs_launched(spark, reads):
-    """(results of ``reads()``, ids of the jobs it launched)."""
+def _jobs_launched(spark, reads, group="versioned-store-reads"):
+    """(results of ``reads()``, ids of the jobs it launched), read after
+    the listener bus has drained. ``group`` must be new to the session
+    for the ids to be only this call's."""
     sc = spark.sparkContext
-    group = "versioned-store-reads"
-    sc.setJobGroup(group, "store reads must not launch jobs")
+    sc.setJobGroup(group, "store job-count pin")
     try:
         out = reads()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
@@ -119,3 +122,31 @@ def test_ann_store_reads_launch_no_jobs(spark, small_emb, tmp_path):
     assert _rows(codes.select("vec_id", "centroid_id")) == in_cells
     assert _rows(tombs) == [(3, 1), (40, 1)]
     assert cents.count() == 8
+
+
+def test_driver_probe_collects_frozen_quantizer_once(spark, small_emb, tmp_path):
+    """The driver-path `topk` ranks probe cells against the frozen
+    centroids: the first search collects them, a second search runs one
+    job fewer and returns the same rows, and `initialize(overwrite=True)`
+    drops the kept copy, so the next search probes the new centroids."""
+    from manifold_spark.operators.similarity import topk_ivf
+
+    queries = small_emb.filter(F.col("vec_id") < 4)
+    store = AnnIndexStore(spark, str(tmp_path / "ann"))
+    store.initialize(small_emb, n_centroids=8)
+
+    def search():
+        return _rows(store.topk(queries, k=3, nprobe=2, distributed=False))
+
+    first, first_jobs = _jobs_launched(spark, search, "ann-topk-first")
+    second, second_jobs = _jobs_launched(spark, search, "ann-topk-second")
+    assert second == first
+    assert len(second_jobs) == len(first_jobs) - 1
+
+    cents = small_emb.orderBy(F.col("vec_id").desc()).limit(8)
+    new_ids = {r["vec_id"] for r in cents.collect()}
+    store.initialize(small_emb, centroids=cents, overwrite=True)
+    vecs = [[float(v) for v in r["embedding"]] for r in queries.collect()]
+    assert set(store._cids_for_vecs(vecs, 2)) <= new_ids
+    want = topk_ivf(queries, small_emb, 64, k=3, nprobe=2, centroids=cents)
+    assert search() == _rows(want)
