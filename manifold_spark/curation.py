@@ -22,9 +22,8 @@ caps (3), hash gates (5), and one sharded window (6). Stage boundaries
 persist (shared operator-cache registry) or truncate lineage
 (`plans.boundary.stage_boundary`) so each stage's audit count and the
 next stage both read the materialized frame instead of re-executing the
-upstream DAG. At 100 TB set ``spark.manifold.stageBoundary=parquet``
-so the boundaries survive executor loss; the `report` counts could
-then come free from write metrics.
+upstream DAG. On a cluster each boundary keeps a second replica, so
+the boundaries survive the loss of one executor.
 """
 
 from __future__ import annotations
@@ -76,22 +75,21 @@ def curate_corpus(
 
     Every stage reads a materialized input, never a re-execution of the
     upstream DAG. Stages 1-3 and 5 persist, and the quality stage has
-    three lineage boundaries (`plans.boundary.stage_boundary`, durable
-    under ``spark.manifold.stageBoundary=parquet``, where they are
-    written while this function builds the plan). All of them sit in
-    the shared operator-cache registry: run every action on ``packed``
-    before the enclosing `operator_cache_scope()` exits or
-    `release_shingle_caches()` runs, since a released boundary cannot
-    be recomputed. The boundaries:
+    three lineage boundaries (`plans.boundary.stage_boundary`, which on
+    a cluster replicates each to a second executor so it survives the
+    loss of one). All of them sit in the shared operator-cache
+    registry: run every action on ``packed`` before the enclosing
+    `operator_cache_scope()` exits or `release_shingle_caches()` runs,
+    since a released boundary cannot be recomputed. The boundaries:
 
-    - "curation-repetition": the repetition-filtered survivors, which LM
-      training, scoring and the join back all read. Without it each of
+    - repetition: the repetition-filtered survivors, which LM training,
+      scoring and the join back all read. Without it each of
       those reads re-ran the Gopher repetition explode. On a 5,000-doc
       corpus (~300 chars a doc, local[4] on 4 vCPUs) the boundary cut
       one call from 35.1 to 18.4 s and its JVM allocation from 29.6 to
       10.3 GB (medians of 10 interleaved runs).
-    - "lm-model": the char-trigram LM inside `score_docs`.
-    - "curation-quality": the bucketed survivors; truncates the LM-scored
+    - LM model: the char-trigram LM inside `score_docs`.
+    - quality: the bucketed survivors; truncates the LM-scored
       plan before the mixture stage reads it twice.
 
     The quality stage's character and word n-grams come from one
@@ -149,8 +147,8 @@ def curate_corpus(
         # Boundary: LM training, scoring and the join back all read
         # `survivors` (score_docs alone reads it three times); without
         # this each read re-ran the repetition explode over every line
-        # and word n-gram. Parquet mode writes here, at plan-build time.
-        survivors = stage_boundary(survivors, "curation-repetition")
+        # and word n-gram.
+        survivors = stage_boundary(survivors)
     scored = score_docs(survivors, text_col=text_col, id_col=id_col).join(
         survivors.select(id_col, lang_col, text_col), id_col
     )
@@ -169,9 +167,8 @@ def curate_corpus(
     # downstream action re-canonicalized it while planning (measured:
     # the mixture stage cost 13 s of which <1 s was execution). This is
     # the last of the three quality-stage boundaries (see the docstring).
-    # Lazy in local mode: the stage count below materializes it; parquet
-    # mode writes here, at plan-build time.
-    quality = stage_boundary(quality, "curation-quality")
+    # Lazy: the stage count below materializes it.
+    quality = stage_boundary(quality)
     report["quality"] = quality.count()
 
     # 5. mixture (both options are deterministic hash gates —

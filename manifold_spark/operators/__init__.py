@@ -800,7 +800,6 @@ def q_ann_store_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert store._scan()[0] == [3], "no compaction may absorb D3"
         res = stage_boundary(
             store.topk(emb.filter(vid < N_QUERIES), k=TOP_K, nprobe=IVF_NPROBE),
-            "ann-store-gate",
             eager=True,
         )
     finally:
@@ -3887,7 +3886,6 @@ def q_curation_store_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_tokens").cast("long").alias("n_tokens"),
                 F.col("batch_id").cast("long").alias("batch_id"),
             ),
-            "curation-store-gate",
             eager=True,
         )
     finally:

@@ -811,9 +811,7 @@ class AnnIndexStore:
             rows = proj.take(self.DRIVER_PROBE_MAX + 1)
             distributed = len(rows) > self.DRIVER_PROBE_MAX
         if distributed:
-            q = stage_boundary(
-                queries.select(self.id_col, self.vec_col), "ann-queries", eager=True
-            )
+            q = stage_boundary(queries.select(self.id_col, self.vec_col), eager=True)
             probe_cells = assign_centroids(
                 q.select(self.id_col, self.vec_col), self.centroids_df(),
                 self.meta["dim"], self.id_col, self.vec_col,
@@ -888,9 +886,7 @@ class AnnIndexStore:
             rows = proj.take(self.DRIVER_PROBE_MAX + 1)
             distributed = len(rows) > self.DRIVER_PROBE_MAX
         if distributed:
-            q = stage_boundary(
-                queries.select(self.id_col, self.vec_col), "ann-queries", eager=True
-            )
+            q = stage_boundary(queries.select(self.id_col, self.vec_col), eager=True)
             # ONE probe-relation build (review r13): the persisted
             # adc_probe_tables output yields the pruned-read cell set
             # AND is the scoring pass's query side — the probe

@@ -288,7 +288,7 @@ def train_bpe_from_words(
     """`train_bpe`'s merge loop over an ALREADY-BUILT word table (e.g.
     `word_table_upsert` state) — retraining after corpus growth never
     re-reads old batches."""
-    words = stage_boundary(words, "bpe-words", eager=True)
+    words = stage_boundary(words, eager=True)
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
         top = (
@@ -301,7 +301,7 @@ def train_bpe_from_words(
             break
         a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
         merges.append((a, b, cnt))
-        merged = stage_boundary(apply_merge(words, a, b), "bpe-words", eager=True)
+        merged = stage_boundary(apply_merge(words, a, b), eager=True)
         _release(words)
         words = merged
     return merges, words

@@ -1095,7 +1095,7 @@ def _components_label_propagation(sym: DataFrame, max_iters: int) -> DataFrame:
         # round's logical plan embeds the previous round's whole tree ~2×,
         # so analysis cost grows 2^rounds — persist() alone does NOT
         # truncate lineage, it only caches execution.
-        proposed = stage_boundary(proposed, "components-label")
+        proposed = stage_boundary(proposed)
         changed = proposed.filter(F.col("new_label") != F.col("label")).count()
         _release(round_cache)
         round_cache = proposed
@@ -1172,7 +1172,7 @@ def _components_star_contraction(sym: DataFrame, max_iters: int) -> DataFrame:
     # The signature action materializes the boundary — still one job per
     # iteration.
     edges = sym.filter(F.col("src") != F.col("dst"))
-    cur = stage_boundary(edges, "components-star")
+    cur = stage_boundary(edges)
     prev_sig = None
     converged = False
     rounds = 0
@@ -1182,9 +1182,7 @@ def _components_star_contraction(sym: DataFrame, max_iters: int) -> DataFrame:
         # barrier-halving move as the label backend): a fixpoint is
         # preserved by re-application, so signature equality between
         # consecutive ACTIONS still detects it exactly.
-        nxt = stage_boundary(
-            small_star(large_star(small_star(large_star(cur)))), "components-star"
-        )
+        nxt = stage_boundary(small_star(large_star(small_star(large_star(cur)))))
         sig = signature(nxt)
         _release(cur)
         cur = nxt

@@ -172,9 +172,7 @@ def score_docs(
         # not a memory risk; lazy so the first action materializes it.
         from manifold_spark.plans.boundary import stage_boundary
 
-        model = stage_boundary(
-            train_char_lm(docs, text_col=text_col, k=k), "lm-model"
-        )
+        model = stage_boundary(train_char_lm(docs, text_col=text_col, k=k))
     prefixes = model.select("prefix", "c2", "v").distinct()
     v_row = model.select(F.max("v").alias("v_all"))
 

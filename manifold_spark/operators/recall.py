@@ -85,7 +85,10 @@ def quality_report(spark, sf_dir: str) -> dict:
 
     Recall is published at multiple similarity floors because LSH recall
     is an S-curve: the honest summary is "catches essentially everything
-    above the design point, intentionally loses the barely-similar"."""
+    above the design point, intentionally loses the barely-similar".
+
+    Everything it pins is released when it returns, and nothing else: a
+    caller's pins in an enclosing `operator_cache_scope` stay valid."""
     from manifold_spark.operators import (
         DIM,
         IVF_CENTROIDS,
@@ -94,102 +97,99 @@ def quality_report(spark, sf_dir: str) -> dict:
         TOP_K,
     )
     from manifold_spark.operators import dedup, pq, similarity
+    from manifold_spark.plans.boundary import _persist_tracked, operator_cache_scope
     from manifold_spark.queries import _t
 
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    out: dict = {}
+    with operator_cache_scope():
+        docs = _t(spark, sf_dir, "documents")
+        emb = _t(spark, sf_dir, "embeddings")
+        queries = emb.filter(F.col("vec_id") < N_QUERIES)
+        out: dict = {}
 
-    # --- ANN recall@k vs exact brute-force top-k --------------------------
-    bf = similarity.topk_bruteforce(queries, emb, DIM, k=TOP_K).persist()
-    out["ann_ivf@k"] = topk_recall(
-        similarity.topk_ivf(
-            queries, emb, DIM, k=TOP_K, n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE
-        ),
-        bf,
-    )
-    out["ann_ivf_kmeans@k"] = topk_recall(
-        similarity.topk_ivf_kmeans(
-            queries, emb, DIM, k=TOP_K, n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE
-        ),
-        bf,
-    )
-    # PQ-ADC at default rerank budget (R = 32k): how much of the true
-    # top-k survives 64×-compressed code scoring + exact re-rank. (Its
-    # plumbing is separately pinned BIT-identical to brute force at
-    # R ≥ |corpus| by tests/test_pq.py.)
-    out["ann_pq@k"] = topk_recall(
-        pq.topk_pq(queries, emb, DIM, k=TOP_K),
-        bf,
-    )
-    # IVF-PQ (coarse-pruned lists over the same codes) at the default
-    # nprobe=4/16 — the fully composed 100 TB architecture.
-    out["ann_ivf_pq@k"] = topk_recall(
-        pq.topk_ivf_pq(queries, emb, DIM, k=TOP_K),
-        bf,
-    )
-    # r7: residual encoding (codes quantize v − c(v), codebooks trained
-    # on residuals — the FAISS IVFPQ default). Same probe/budget knobs;
-    # the finer quantization recovers ADC ranking misses (sf0.1:
-    # 0.925 → 1.0 at unchanged nprobe=4).
-    out["ann_ivf_pq_residual@k"] = topk_recall(
-        pq.topk_ivf_pq(queries, emb, DIM, k=TOP_K, residual=True),
-        bf,
-    )
-    bf.unpersist()
+        # --- ANN recall@k vs exact brute-force top-k ----------------------
+        bf = _persist_tracked(similarity.topk_bruteforce(queries, emb, DIM, k=TOP_K))
+        out["ann_ivf@k"] = topk_recall(
+            similarity.topk_ivf(
+                queries, emb, DIM, k=TOP_K, n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE
+            ),
+            bf,
+        )
+        out["ann_ivf_kmeans@k"] = topk_recall(
+            similarity.topk_ivf_kmeans(
+                queries, emb, DIM, k=TOP_K, n_centroids=IVF_CENTROIDS, nprobe=IVF_NPROBE
+            ),
+            bf,
+        )
+        # PQ-ADC at default rerank budget (R = 32k): how much of the true
+        # top-k survives 64×-compressed code scoring + exact re-rank. (Its
+        # plumbing is separately pinned BIT-identical to brute force at
+        # R ≥ |corpus| by tests/test_pq.py.)
+        out["ann_pq@k"] = topk_recall(
+            pq.topk_pq(queries, emb, DIM, k=TOP_K),
+            bf,
+        )
+        # IVF-PQ (coarse-pruned lists over the same codes) at the default
+        # nprobe=4/16 — the fully composed 100 TB architecture.
+        out["ann_ivf_pq@k"] = topk_recall(
+            pq.topk_ivf_pq(queries, emb, DIM, k=TOP_K),
+            bf,
+        )
+        # r7: residual encoding (codes quantize v − c(v), codebooks trained
+        # on residuals — the FAISS IVFPQ default). Same probe/budget knobs;
+        # the finer quantization recovers ADC ranking misses (sf0.1:
+        # 0.925 → 1.0 at unchanged nprobe=4).
+        out["ann_ivf_pq_residual@k"] = topk_recall(
+            pq.topk_ivf_pq(queries, emb, DIM, k=TOP_K, residual=True),
+            bf,
+        )
 
-    # --- text LSH pair recall vs EXACT n-gram Jaccard ---------------------
-    truth_j = dedup.ngram_jaccard_pairs(
-        docs.withColumn("blk", F.lit(1)), "text", "doc_id", ["blk"], threshold=0.3
-    ).persist()
-    mh = dedup.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.3)
-    out["minhash_pairs_j>=0.3"] = pair_recall(mh, truth_j)
-    out["minhash_pairs_j>=0.5"] = pair_recall(mh, truth_j, F.col("jaccard") >= 0.5)
-    out["minhash_pairs_j>=0.7"] = pair_recall(mh, truth_j, F.col("jaccard") >= 0.7)
-    truth_j.unpersist()
-    dedup.release_shingle_caches()
+        # --- text LSH pair recall vs EXACT n-gram Jaccard -----------------
+        truth_j = _persist_tracked(
+            dedup.ngram_jaccard_pairs(
+                docs.withColumn("blk", F.lit(1)), "text", "doc_id", ["blk"], threshold=0.3
+            )
+        )
+        mh = dedup.minhash_lsh_pairs(docs, "text", "doc_id", threshold=0.3)
+        out["minhash_pairs_j>=0.3"] = pair_recall(mh, truth_j)
+        out["minhash_pairs_j>=0.5"] = pair_recall(mh, truth_j, F.col("jaccard") >= 0.5)
+        out["minhash_pairs_j>=0.7"] = pair_recall(mh, truth_j, F.col("jaccard") >= 0.7)
 
-    # --- simhash banded recall vs EXACT Hamming ---------------------------
-    fp = dedup.simhash_fingerprints(docs, "text", "doc_id").persist()
-    truth_h = exact_hamming_pairs(fp, max_hamming=6).persist()
-    sh = dedup.simhash_pairs(docs, "text", "doc_id", max_hamming=6)
-    out["simhash_pairs_h<=6"] = pair_recall(sh, truth_h)
-    out["simhash_pairs_h<=3"] = pair_recall(sh, truth_h, F.col("hamming") <= 3)
-    # The default max_bucket=100 cap BINDS on this corpus (32-bit
-    # fingerprints crowd: homogeneous synthetic text → ~20% of all pairs
-    # sit within Hamming 6, so band buckets blow past any sane cap and
-    # capped recall collapses — the price of bounded pair formation,
-    # published rather than hidden). The UNCAPPED variant isolates the
-    # banding scheme itself: 4 bands × 8 bits ⇒ every pair with h ≤ 3
-    # shares ≥1 intact band by pigeonhole, so this recall is exactly 1.0
-    # — asserted as a hard floor in tests.
-    sh_uncapped = dedup.simhash_pairs(
-        docs, "text", "doc_id", max_hamming=3, max_bucket=1 << 30
-    )
-    out["simhash_uncapped_h<=3"] = pair_recall(
-        sh_uncapped, truth_h, F.col("hamming") <= 3
-    )
-    truth_h.unpersist()
-    fp.unpersist()
+        # --- simhash banded recall vs EXACT Hamming -----------------------
+        fp = _persist_tracked(dedup.simhash_fingerprints(docs, "text", "doc_id"))
+        truth_h = _persist_tracked(exact_hamming_pairs(fp, max_hamming=6))
+        sh = dedup.simhash_pairs(docs, "text", "doc_id", max_hamming=6)
+        out["simhash_pairs_h<=6"] = pair_recall(sh, truth_h)
+        out["simhash_pairs_h<=3"] = pair_recall(sh, truth_h, F.col("hamming") <= 3)
+        # The default max_bucket=100 cap BINDS on this corpus (32-bit
+        # fingerprints crowd: homogeneous synthetic text → ~20% of all pairs
+        # sit within Hamming 6, so band buckets blow past any sane cap and
+        # capped recall collapses — the price of bounded pair formation,
+        # published rather than hidden). The UNCAPPED variant isolates the
+        # banding scheme itself: 4 bands × 8 bits ⇒ every pair with h ≤ 3
+        # shares ≥1 intact band by pigeonhole, so this recall is exactly 1.0
+        # — asserted as a hard floor in tests.
+        sh_uncapped = dedup.simhash_pairs(
+            docs, "text", "doc_id", max_hamming=3, max_bucket=1 << 30
+        )
+        out["simhash_uncapped_h<=3"] = pair_recall(
+            sh_uncapped, truth_h, F.col("hamming") <= 3
+        )
 
-    # --- embedding near-dup recall vs EXACT all-pairs cosine --------------
-    truth_c = exact_cosine_pairs(emb, DIM, threshold=0.2).persist()
-    rp = similarity.rp_lsh_near_dup(emb, DIM, threshold=0.2).persist()
-    # RP-LSH recall at cosine 0.2 is LOW by design (P(band) = (1−θ/π)⁸ ≈
-    # 1% near the threshold — its S-curve design point is the high-cosine
-    # near-dup regime, which this synthetic corpus barely contains) but
-    # its PRECISION is exactly 1.0: every emitted pair passed the exact
-    # cosine verify, so it must be a subset of the truth set — asserted
-    # as a hard floor in tests.
-    out["rp_lsh_pairs_c>=0.2"] = pair_recall(rp, truth_c)
-    out["rp_lsh_precision"] = pair_precision(rp, truth_c)
-    out["ivf_near_dup_c>=0.2"] = pair_recall(
-        similarity.cosine_near_dup(emb, DIM, threshold=0.2), truth_c
-    )
-    rp.unpersist()
-    truth_c.unpersist()
-    return out
+        # --- embedding near-dup recall vs EXACT all-pairs cosine ----------
+        truth_c = _persist_tracked(exact_cosine_pairs(emb, DIM, threshold=0.2))
+        rp = _persist_tracked(similarity.rp_lsh_near_dup(emb, DIM, threshold=0.2))
+        # RP-LSH recall at cosine 0.2 is LOW by design (P(band) = (1−θ/π)⁸ ≈
+        # 1% near the threshold — its S-curve design point is the high-cosine
+        # near-dup regime, which this synthetic corpus barely contains) but
+        # its PRECISION is exactly 1.0: every emitted pair passed the exact
+        # cosine verify, so it must be a subset of the truth set — asserted
+        # as a hard floor in tests.
+        out["rp_lsh_pairs_c>=0.2"] = pair_recall(rp, truth_c)
+        out["rp_lsh_precision"] = pair_precision(rp, truth_c)
+        out["ivf_near_dup_c>=0.2"] = pair_recall(
+            similarity.cosine_near_dup(emb, DIM, threshold=0.2), truth_c
+        )
+        return out
 
 
 def pair_precision(approx: DataFrame, truth: DataFrame) -> dict:

@@ -325,7 +325,7 @@ def dsir_sample(
     # those copies — observed as DRIVER-heap OOM during plan analysis
     # on a 4g driver late in a long session. (id, logratio) is O(docs)
     # narrow rows — the standard materialize-the-scores step.
-    lr = stage_boundary(lr, "dsir-logratio", eager=True)
+    lr = stage_boundary(lr, eager=True)
     scored = dsir_keep_rates(
         df.join(lr, key_col), "logratio", target_fraction
     )

@@ -4,37 +4,31 @@ Every lineage cut in the package goes through `stage_boundary`: the
 round loops (label propagation, star contraction, BPE merges) cut once
 per round so plan depth stays constant, and the curation, LM, DSIR, ANN
 and gate pins cut once so downstream plans stop re-embedding an
-expensive upstream DAG. How durable the cut is is one session conf,
-``spark.manifold.stageBoundary``:
+expensive upstream DAG. A cut is a `localCheckpoint`: zero I/O, and the
+returned frame's plan is a scan of the checkpointed blocks, which have
+no lineage to recompute from.
 
-- ``local`` (default): `localCheckpoint`. Zero I/O, but the blocks live
-  on the executors that computed them, with no replication and no
-  lineage to recompute from, so losing one of those executors fails
-  every later job that reads the frame
-  (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
-- ``parquet``: write the frame under ``spark.manifold.stageBoundaryDir``
-  (required in this mode: a ``ValueError`` without it; on a cluster use
-  a root on the shared file system, since a bare path resolves against
-  ``fs.defaultFS``) and return the read-back scan. The cut survives
-  executor loss and its plan is a plain scan, so lineage is equally
-  truncated. The write is always eager.
+Replication rule. On a local master (``local[N]``) there is one
+executor and no peer to copy to, so the cut keeps Spark's default
+local-checkpoint level (disk and memory, one replica). Otherwise it
+stores the same level with a second replica, so losing one executor
+loses no block: later jobs read the copy on its peer
+(tests/test_boundary_fault.py kills an executor on a two-executor
+``local-cluster`` and reads every kind of boundary back). The limit:
+losing both executors that hold a block fails every later job that
+reads the frame (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``).
 
-``eager`` applies to local mode: ``False`` (the default) leaves the
-checkpoint to the first downstream action, ``True`` materializes it
-here. Rows are identical in both modes (tests/test_plans.py), and
-tests/test_boundary_fault.py kills an executor on a two-executor
-local-cluster to pin both sides: parquet-mode results are unchanged,
-local mode raises.
+``eager=False`` (the default) leaves the checkpoint to the first
+downstream action; ``True`` materializes it here.
 
 Release rules. The operators return lazy plans, so they cannot free
 what they pin before the caller consumes it. Every tracked persist
 (`_persist_tracked`) and every boundary is registered in
 `_SHINGLE_CACHES`, and `_release` frees one entry by kind: a persist is
-unpersisted, a local boundary's checkpointed RDD is unpersisted
-(`DataFrame.unpersist()` on a checkpointed frame frees nothing), and a
-parquet boundary's directory is deleted through the Hadoop
-`FileSystem`. Round loops release their previous round as soon as the
-next one is materialized; everything else lives until the enclosing
+unpersisted, and a boundary's checkpointed RDD is unpersisted
+(`DataFrame.unpersist()` on a checkpointed frame frees nothing). Round
+loops release their previous round as soon as the next one is
+materialized; everything else lives until the enclosing
 `operator_cache_scope()` exits or `release_shingle_caches()` runs.
 """
 
@@ -42,64 +36,49 @@ from __future__ import annotations
 
 import contextlib
 import logging
-import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
 
-_CONF_MODE = "spark.manifold.stageBoundary"
-_CONF_DIR = "spark.manifold.stageBoundaryDir"
+#: Spark's default local-checkpoint level (disk, memory, deserialized)
+#: with a second replica.
+_REPLICATED = StorageLevel(True, True, False, True, 2)
 
-#: (frame, kind, parquet path or None) for every frame the operators pin
-#: for their caller; kind is "persist", "local" or "parquet".
-_SHINGLE_CACHES: list[tuple[DataFrame, str, str | None]] = []
+#: (frame, kind) for every frame the operators pin for their caller;
+#: kind is "persist" or "local".
+_SHINGLE_CACHES: list[tuple[DataFrame, str]] = []
 
 
 def _persist_tracked(df: DataFrame) -> DataFrame:
     df = df.persist()
-    _SHINGLE_CACHES.append((df, "persist", None))
+    _SHINGLE_CACHES.append((df, "persist"))
     return df
 
 
-def stage_boundary(df: DataFrame, name: str, eager: bool = False) -> DataFrame:
-    """Cut ``df``'s lineage: a `localCheckpoint` (lazy unless ``eager``)
-    or, in parquet mode, an eager write and its read-back scan under
-    ``<stageBoundaryDir>/<name>-<uuid>``. The returned frame is
-    registered and valid until it is released."""
-    spark = df.sparkSession
-    mode = spark.conf.get(_CONF_MODE, "local")
-    if mode == "local":
-        out = df.localCheckpoint(eager=eager)
-        _SHINGLE_CACHES.append((out, "local", None))
-        return out
-    if mode != "parquet":
-        raise ValueError(f"{_CONF_MODE} must be 'local' or 'parquet', got {mode!r}")
-    root = spark.conf.get(_CONF_DIR, None)
-    if not root:
-        raise ValueError(f"{_CONF_MODE}=parquet needs {_CONF_DIR}")
-    path = f"{root.rstrip('/')}/{name}-{uuid.uuid4().hex[:12]}"
-    df.write.parquet(path)
-    out = spark.read.parquet(path)
-    _SHINGLE_CACHES.append((out, "parquet", path))
+def stage_boundary(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage with a `localCheckpoint` (lazy unless
+    ``eager``), replicated to a second executor unless the master is
+    local. The returned frame is registered and valid until it is
+    released."""
+    # None keeps Spark's default level, with one replica.
+    level = None if df.sparkSession.sparkContext._jsc.isLocal() else _REPLICATED
+    out = df.localCheckpoint(eager=eager, storageLevel=level)
+    _SHINGLE_CACHES.append((out, "local"))
     return out
 
 
 def _release(df: DataFrame) -> None:
     """Drop ``df``'s (latest) registry entry and free what it pins. A
-    freed boundary cannot be recomputed: it has no lineage and its
-    directory is gone."""
+    freed boundary cannot be recomputed: it has no lineage."""
     i = max(i for i, entry in enumerate(_SHINGLE_CACHES) if entry[0] is df)
-    _, kind, path = _SHINGLE_CACHES.pop(i)
+    _, kind = _SHINGLE_CACHES.pop(i)
     try:
         if kind == "persist":
             df.unpersist()
-        elif kind == "local":
-            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         else:
-            spark = df.sparkSession
-            p = spark._jvm.org.apache.hadoop.fs.Path(path)
-            p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception as exc:  # dead session / already-freed block
         _log.debug("release of a %s entry failed: %s", kind, exc)
 

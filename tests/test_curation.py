@@ -70,15 +70,12 @@ def test_curate_corpus_end_to_end(spark, sf_dir):
         assert sum(toks) - max(toks) < 256, (shard, b, toks)
 
 
-@pytest.mark.parametrize("boundary_mode", ["local", "parquet"])
-def test_quality_stage_reads_bounded_survivors(
-    spark, sf_dir, tmp_path, monkeypatch, boundary_mode
-):
+def test_quality_stage_reads_bounded_survivors(spark, sf_dir, monkeypatch):
     """The frame curate_corpus hands `score_docs` is the repetition-
     filtered survivors behind a stage boundary, so LM training, scoring
     and the join back read one truncated input instead of each re-running
     the repetition explode (`__lines_tagged` is the per-line unit array
-    `repetition_signals` builds), in both boundary modes."""
+    `repetition_signals` builds)."""
     from manifold_spark.operators import lm
 
     real_score_docs = lm.score_docs
@@ -89,15 +86,11 @@ def test_quality_stage_reads_bounded_survivors(
         return real_score_docs(docs, *args, **kwargs)
 
     monkeypatch.setattr(lm, "score_docs", recording_score_docs)
-    spark.conf.set("spark.manifold.stageBoundary", boundary_mode)
-    spark.conf.set("spark.manifold.stageBoundaryDir", str(tmp_path))
     try:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         packed, report = curate_corpus(docs, pack_budget=256)
         n_packed = packed.count()
     finally:
-        spark.conf.unset("spark.manifold.stageBoundary")
-        spark.conf.unset("spark.manifold.stageBoundaryDir")
         release_shingle_caches()
 
     assert len(plans) == 1

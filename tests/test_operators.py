@@ -863,13 +863,12 @@ def test_span_dedup_scope_cross(spark):
     dedup.release_shingle_caches()
 
 
-def test_operator_cache_scope_nests_and_releases(spark, tmp_path):
+def test_operator_cache_scope_nests_and_releases(spark):
     """The r7 scoped cache registry: frames persisted inside a scope are
     unpersisted on exit (success or error), an inner scope releases only
     its own caches, and the escape-hatch function still drains whatever
     remains. Stage boundaries are registered too, and released by kind:
-    a local boundary's checkpointed RDD leaves the block manager and a
-    parquet boundary's directory is deleted."""
+    a boundary's checkpointed RDD leaves the block manager."""
     from manifold_spark.operators.dedup import (
         _SHINGLE_CACHES,
         _persist_tracked,
@@ -881,54 +880,41 @@ def test_operator_cache_scope_nests_and_releases(spark, tmp_path):
     def stored_rdd_ids():
         return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
-    def boundaries(tag):
-        """One boundary per mode; returns (local RDD id, parquet dir)."""
-        local = stage_boundary(df.selectExpr("id * 5 AS v"), f"{tag}-l", eager=True)
-        rdd_id = local._jdf.queryExecution().analyzed().rdd().id()
+    def boundary():
+        """One eager boundary; returns its checkpointed RDD's id."""
+        pinned = stage_boundary(df.selectExpr("id * 5 AS v"), eager=True)
+        rdd_id = pinned._jdf.queryExecution().analyzed().rdd().id()
         assert rdd_id in stored_rdd_ids()
-        spark.conf.set("spark.manifold.stageBoundary", "parquet")
-        try:
-            durable = stage_boundary(df.selectExpr("id * 7 AS v"), f"{tag}-p")
-        finally:
-            spark.conf.set("spark.manifold.stageBoundary", "local")
-        (path,) = tmp_path.glob(f"{tag}-p-*")
-        assert durable.count() == 10
-        return rdd_id, path
+        return rdd_id
 
     release_shingle_caches()
-    spark.conf.set("spark.manifold.stageBoundaryDir", str(tmp_path))
     df = spark.range(10)
+    with operator_cache_scope():
+        outer = _persist_tracked(df.selectExpr("id * 2 AS v"))
+        outer.count()
+        with operator_cache_scope():
+            inner = _persist_tracked(df.selectExpr("id * 3 AS v"))
+            inner.count()
+            assert len(_SHINGLE_CACHES) == 2
+        # inner scope released ONLY its own cache
+        assert len(_SHINGLE_CACHES) == 1
+        assert inner.storageLevel.useMemory is False
+        assert outer.storageLevel.useMemory is True
+        rdd_id = boundary()
+        assert len(_SHINGLE_CACHES) == 2
+    assert len(_SHINGLE_CACHES) == 0
+    assert outer.storageLevel.useMemory is False
+    assert rdd_id not in stored_rdd_ids()
+    # error path still releases
     try:
         with operator_cache_scope():
-            outer = _persist_tracked(df.selectExpr("id * 2 AS v"))
-            outer.count()
-            with operator_cache_scope():
-                inner = _persist_tracked(df.selectExpr("id * 3 AS v"))
-                inner.count()
-                assert len(_SHINGLE_CACHES) == 2
-            # inner scope released ONLY its own cache
-            assert len(_SHINGLE_CACHES) == 1
-            assert inner.storageLevel.useMemory is False
-            assert outer.storageLevel.useMemory is True
-            rdd_id, path = boundaries("ok")
-            assert len(_SHINGLE_CACHES) == 3
-        assert len(_SHINGLE_CACHES) == 0
-        assert outer.storageLevel.useMemory is False
-        assert rdd_id not in stored_rdd_ids()
-        assert not path.exists()
-        # error path still releases
-        try:
-            with operator_cache_scope():
-                _persist_tracked(df.selectExpr("id AS v")).count()
-                rdd_id, path = boundaries("err")
-                raise RuntimeError("boom")
-        except RuntimeError:
-            pass
-        assert len(_SHINGLE_CACHES) == 0
-        assert rdd_id not in stored_rdd_ids()
-        assert not path.exists()
-    finally:
-        spark.conf.unset("spark.manifold.stageBoundaryDir")
+            _persist_tracked(df.selectExpr("id AS v")).count()
+            rdd_id = boundary()
+            raise RuntimeError("boom")
+    except RuntimeError:
+        pass
+    assert len(_SHINGLE_CACHES) == 0
+    assert rdd_id not in stored_rdd_ids()
 
 
 def test_semdedup_keep_rule(spark):

@@ -344,28 +344,42 @@ def test_topk_ivf_pq_broadcast_queries_knob(spark, sf_dir):
     assert "SortMergeJoin" in unhinted or "ShuffledHashJoin" in unhinted
 
 
-def test_stage_boundary_modes_row_identical(spark, sf_dir, tmp_path):
-    """r15 (VERDICT r14 #7): the durable (parquet) stage boundary returns
-    the identical rows as the local (localCheckpoint) default, and its
-    read-back plan is a plain scan (lineage truncated). Parquet mode
-    writes under stageBoundaryDir and refuses to run without it."""
-    from manifold_spark.operators.lm import score_docs
-    from manifold_spark.plans.boundary import stage_boundary
+def test_stage_boundary_local_master_keeps_one_replica(spark, sf_dir):
+    """Under a local master (the fixture's and the benchmark's
+    ``local[N]``) `stage_boundary` makes the plain `localCheckpoint`
+    call: one replica, since there is no peer to copy to. The cut
+    truncates lineage (the optimized plan is the checkpoint scan, with
+    no Filter above it) and keeps the rows."""
+    from manifold_spark.plans.boundary import _release, stage_boundary
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    local_rows = sorted(map(repr, score_docs(docs).collect()))
-    spark.conf.set("spark.manifold.stageBoundary", "parquet")
+    assert spark.sparkContext._jsc.isLocal()
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter("doc_id % 2 = 0")
+    want = sorted(map(repr, docs.collect()))
+    bounded = stage_boundary(docs)
     try:
-        with pytest.raises(ValueError, match="stageBoundaryDir"):
-            stage_boundary(docs, "no-dir")
-        spark.conf.set("spark.manifold.stageBoundaryDir", str(tmp_path))
-        durable_rows = sorted(map(repr, score_docs(docs).collect()))
-        assert [p.name[:8] for p in tmp_path.iterdir()] == ["lm-model"]
-        # direct helper check: plan truncated to a scan
-        bounded = stage_boundary(docs.filter("doc_id % 2 = 0"), "pin")
+        rdd = bounded._jdf.queryExecution().analyzed().rdd()
+        assert rdd.getStorageLevel().replication() == 1
         plan = bounded._jdf.queryExecution().optimizedPlan().toString()
-        assert "Relation" in plan and "Filter" not in plan
+        assert "LogicalRDD" in plan and "Filter" not in plan, plan
+        assert sorted(map(repr, bounded.collect())) == want
     finally:
-        spark.conf.set("spark.manifold.stageBoundary", "local")
-        spark.conf.unset("spark.manifold.stageBoundaryDir")
-    assert durable_rows == local_rows
+        _release(bounded)
+
+
+def test_stage_boundary_cluster_level_is_default_with_two_replicas(spark):
+    """Off a local master `stage_boundary` passes `_REPLICATED`, which
+    must stay Spark's default local-checkpoint level with a second
+    replica: only the replica count may differ from what a local
+    master gets. (The slow `tests/test_boundary_fault.py` drives that
+    path on a two-executor cluster.)"""
+    from manifold_spark.plans.boundary import _REPLICATED
+
+    def fields(level):
+        return (
+            level.useDisk(), level.useMemory(), level.useOffHeap(),
+            level.deserialized(), level.replication(),
+        )
+
+    default = spark._jvm.org.apache.spark.rdd.LocalRDDCheckpointData.DEFAULT_STORAGE_LEVEL()
+    replicated = spark.sparkContext._getJavaStorageLevel(_REPLICATED)
+    assert fields(replicated) == fields(default)[:4] + (2,)

@@ -38,11 +38,22 @@ SF01_DIR = "/root/testdata/sf0.1"
 
 @pytest.fixture(scope="module")
 def report(spark):
+    """The report, computed while the caller holds an eager boundary in
+    an enclosing scope: `quality_report` frees only its own pins, so the
+    caller's pin still reads back after it returns."""
     import os
+
+    from manifold_spark.plans.boundary import operator_cache_scope, stage_boundary
 
     if not os.path.isdir(f"{SF01_DIR}"):
         pytest.skip("sf0.1 testdata not present")
-    return quality_report(spark, SF01_DIR)
+    frame = spark.range(0, 1000, numPartitions=4).selectExpr("id", "id % 7 AS k")
+    want = sorted(map(tuple, frame.collect()))
+    with operator_cache_scope():
+        pinned = stage_boundary(frame, eager=True)
+        out = quality_report(spark, SF01_DIR)
+        assert sorted(map(tuple, pinned.collect())) == want
+    return out
 
 
 @pytest.mark.slow
