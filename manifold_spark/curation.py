@@ -322,7 +322,11 @@ def curation_models(
     (release with `operator_cache_scope()`); pass the dict to
     `curate_batch_incremental` / `curation_sink`."""
     from manifold_spark.operators.dedup import _persist_tracked
-    from manifold_spark.operators.lm import score_docs, train_char_lm
+    from manifold_spark.operators.lm import (
+        ppl_threshold_cuts,
+        score_docs,
+        train_char_lm,
+    )
     from manifold_spark.operators.sampling import temperature_rates
 
     lm_model = _persist_tracked(train_char_lm(seed_docs, text_col=text_col))
@@ -331,15 +335,8 @@ def curation_models(
         .filter(F.col("n_trigrams") > 0)
         .join(seed_docs.select(id_col, lang_col), id_col)
     )
-    probs = ", ".join(
-        str(1 - i / n_buckets) for i in range(1, n_buckets)
-    )
     cuts = _persist_tracked(
-        scored.groupBy(lang_col).agg(
-            F.expr(f"approx_percentile(avg_logprob, array({probs}))").alias(
-                "cuts"
-            )
-        )
+        ppl_threshold_cuts(scored, group_col=lang_col, n_buckets=n_buckets)
     )
     rates = _persist_tracked(
         temperature_rates(
@@ -397,7 +394,7 @@ def curate_batch_incremental(
     lives on parquet and the driver holds only plans."""
     from manifold_spark.operators import dedup
     from manifold_spark.operators.dedup import _persist_tracked
-    from manifold_spark.operators.lm import score_docs
+    from manifold_spark.operators.lm import ppl_bucket_of, score_docs
     from manifold_spark.operators.repetition import repetition_signals
     from manifold_spark.operators.sampling import RATE_DENOM
     from manifold_spark.functions.hashing import stable_long_hash
@@ -499,12 +496,7 @@ def curate_batch_incremental(
     sc = score_docs(
         fuzzy, model=models["lm_model"], text_col=text_col, id_col=id_col
     )
-    bucket = (
-        F.size(
-            F.filter(F.col("cuts"), lambda c: c > F.col("avg_logprob"))
-        )
-        + 1
-    )
+    bucket = ppl_bucket_of(F.col("cuts"), F.col("avg_logprob"))
     gated = (
         fuzzy.join(sc, id_col)
         .join(broadcast(models["cuts"]), lang_col, "left")

@@ -43,7 +43,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from manifold_spark.functions.hashing import stable_long_hash
-from manifold_spark.operators.dedup import normalized_tokens
+from manifold_spark.operators.dedup import (
+    _persist_tracked,
+    _word_grams,
+    normalized_tokens,
+)
 from manifold_spark.plans.parallelism import ensure_parallelism
 
 #: Feature-hash bucket count. 2^18 keeps collisions negligible for real
@@ -58,29 +62,14 @@ FEATURE_SEED = 41
 SCORE_SCALE = 1_000_000
 
 
-def word_grams(tokens: Column, n: int) -> Column:
-    """NON-distinct word n-grams (multinomial counts need multiplicity —
-    `dedup.word_shingles` dedups for set semantics). Shorter than n →
-    empty array (sequence counts DOWN past zero without the guard)."""
-    idx = F.sequence(F.lit(0), F.size(tokens) - n)
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tokens, (i + j + 1).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(tokens) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def feature_grams_from(toks: Column) -> Column:
     """Unigrams + word bigrams from a PRE-STAGED token array column —
-    the fastText feature recipe (bag of words + word n-grams). r14: the
-    `word_grams` lambdas re-evaluate their captured input per element,
+    the fastText feature recipe (bag of words + word n-grams), counted
+    with multiplicity (NON-distinct, unlike `dedup.word_shingles`). r14:
+    the gram lambdas re-evaluate their captured input per element,
     so callers stage `normalized_tokens(text)` as its own projection
     and pass the attribute (O(len) instead of O(len²) per doc)."""
-    return F.concat(word_grams(toks, 1), word_grams(toks, 2))
+    return F.concat(_word_grams(toks, 1), _word_grams(toks, 2))
 
 
 def _bucket(gram: Column, n_buckets: int) -> Column:
@@ -152,7 +141,10 @@ def train_nb(
     exact integer sums of its ``tf`` column — identical to counting the
     exploded grams directly — and the corpus tokenize pass is shared
     with scoring instead of re-run. Doc counts (priors) still come from
-    ``docs`` (a count-only aggregate, no tokenize).
+    ``docs`` (a count-only aggregate, no tokenize). Without ``tf`` the
+    grams are counted straight into (label, bucket), which combines
+    map-side into the B·|classes| key space instead of first shuffling
+    a per-doc relation that only training would read.
     """
     if tf is not None:
         cnt = (
@@ -225,35 +217,15 @@ def score_nb_classes(
 
     ``tf`` (r14): a precomputed (persisted) `doc_bucket_tf(docs, ...)`
     relation over the SAME ``docs`` — extra carried columns are
-    projected away. Skips this call's own tokenize pass AND its
-    persist (the caller owns the shared relation's lifecycle)."""
+    projected away, and the caller owns its lifecycle. When None it is
+    built here and persisted through the operator-cache registry."""
+    if tf is None:
+        # persisted: both reductions below read it. Built on the caller's
+        # frame: `ensure_parallelism` of a repartitioned scan repartitions
+        # again.
+        tf = _persist_tracked(doc_bucket_tf(docs, text_col, id_col, n_buckets))
     docs = ensure_parallelism(docs)
-    if tf is not None:
-        feats = tf.select(id_col, "bucket", "tf")
-    else:
-        feats = (
-            docs.select(
-                F.col(id_col), normalized_tokens(F.col(text_col)).alias("__toks")
-            )
-            .select(
-                F.col(id_col),
-                F.explode(feature_grams_from(F.col("__toks"))).alias("gram"),
-            )
-            .select(id_col, _bucket(F.col("gram"), n_buckets).alias("bucket"))
-            .groupBy(id_col, "bucket")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        # Both reductions below (per-(doc, class) matched sums and the
-        # per-doc total) re-derive this relation; without a persist each
-        # branch repeats the tokenize+explode+bucket aggregation — the most
-        # expensive pass in the scoring plan. Measured on the 10× corpus
-        # (cold-cache min-of-2 per variant, interleaved in one session, r9):
-        # 78.1 s → 64.8 s self-classification. Registered with the shared
-        # operator-cache registry so `operator_cache_scope()` /
-        # `release_shingle_caches()` reclaim it.
-        from manifold_spark.operators.dedup import _persist_tracked
-
-        feats = _persist_tracked(feats)
+    feats = tf.select(id_col, "bucket", "tf")
     matched = feats.join(broadcast(model), "bucket")
     m_sums = matched.groupBy(id_col, "label").agg(
         F.sum(F.col("tf") * F.col("w_q")).alias("m_sum"),
@@ -342,8 +314,6 @@ def classify_self(
     ``tf``: pass an already-persisted `doc_bucket_tf(docs,
     carry_cols=(label_col,))` to share the relation with sibling
     consumers (e.g. a DSIR section over the same corpus)."""
-    from manifold_spark.operators.dedup import _persist_tracked
-
     if tf is None:
         tf = _persist_tracked(
             doc_bucket_tf(
@@ -386,11 +356,6 @@ def dsir_logratio(
 
         w(d) = Σ_b tf_d(b) · [ln P(b | target) − ln P(b | raw)]
 
-    Contract note (ADVICE r14): doc ids are assumed unique. With
-    ``score_tf`` set, duplicate ids collapse to ONE output row per id
-    (per-id summed n_features); the legacy tokenize path emits one row
-    per input ROW. The paths agree exactly under the stated contract.
-
     — exactly the two-class NB score difference with the class priors
     subtracted out, so this is a thin composition of the driver-gated
     classifier machinery (`train_nb` on {target, raw} + per-class
@@ -403,11 +368,11 @@ def dsir_logratio(
     (deterministic variant of DSIR's Gumbel resampling) or threshold.
 
     ``score_tf`` (r14): a precomputed (persisted) `doc_bucket_tf` over
-    the scored corpus (ids assumed unique — the curation contract).
-    Scoring reuses it via `score_nb_classes(tf=...)` and ``n_features``
-    becomes the per-doc exact integer sum of its ``tf`` column
-    (n_features = total gram count = Σ tf; docs with no grams coalesce
-    to 0) — two more corpus tokenize passes gone.
+    the scored corpus; when None it is built (and persisted) here, once.
+    Scoring reads it via `score_nb_classes(tf=...)` and ``n_features``
+    is the per-doc exact integer sum of its ``tf`` column (total gram
+    count; docs with no grams coalesce to 0). Doc ids are assumed unique
+    (the curation contract): one output row per id.
 
     ``train_tf`` (r14): a `doc_bucket_tf` relation over the target∪raw
     union carrying a ``_dsir_label`` column ('target'/'raw'). When the
@@ -416,8 +381,6 @@ def dsir_logratio(
     tokenize pass disappears as well (per-(label, bucket) counts are
     the exact integer Σtf either way).
     """
-    from manifold_spark.operators.dedup import _persist_tracked
-
     labeled = target_docs.select(
         F.col(id_col), F.col(text_col), F.lit("target").alias("_dsir_label")
     ).unionByName(
@@ -433,6 +396,10 @@ def dsir_logratio(
     class_table = _persist_tracked(class_table)
 
     to_score = raw_docs if score_docs is None else score_docs
+    if score_tf is None:
+        score_tf = _persist_tracked(
+            doc_bucket_tf(to_score, text_col, id_col, n_buckets)
+        )
     per_class = score_nb_classes(
         to_score, model, class_table, text_col=text_col, id_col=id_col,
         n_buckets=n_buckets, tf=score_tf,
@@ -445,39 +412,17 @@ def dsir_logratio(
         F.max(F.when(F.col("label") == "target", F.col("prior_q"))).alias("pt_q"),
         F.max(F.when(F.col("label") == "raw", F.col("prior_q"))).alias("pr_q"),
     )
-    if score_tf is not None:
-        n_feats = score_tf.groupBy(id_col).agg(
-            F.sum("tf").cast("int").alias("n_features")
-        )
-        return (
-            scores.crossJoin(broadcast(priors))
-            .join(n_feats, id_col, "left")
-            .select(
-                id_col,
-                F.coalesce(F.col("n_features"), F.lit(0)).cast("int").alias(
-                    "n_features"
-                ),
-                (
-                    ((F.col("t_q") - F.col("r_q")) - (F.col("pt_q") - F.col("pr_q")))
-                    .cast("double")
-                    / F.lit(float(SCORE_SCALE))
-                ).alias("logratio"),
-            )
-        )
-    feats = (
-        ensure_parallelism(to_score)
-        .select(F.col(id_col), normalized_tokens(F.col(text_col)).alias("__toks"))
-        .select(
-            F.col(id_col),
-            F.size(feature_grams_from(F.col("__toks"))).alias("n_features"),
-        )
+    n_feats = score_tf.groupBy(id_col).agg(
+        F.sum("tf").cast("int").alias("n_features")
     )
     return (
         scores.crossJoin(broadcast(priors))
-        .join(feats, id_col)
+        .join(n_feats, id_col, "left")
         .select(
             id_col,
-            F.col("n_features").cast("int"),
+            F.coalesce(F.col("n_features"), F.lit(0)).cast("int").alias(
+                "n_features"
+            ),
             (
                 ((F.col("t_q") - F.col("r_q")) - (F.col("pt_q") - F.col("pr_q")))
                 .cast("double")

@@ -74,9 +74,10 @@ def _normalized_tokens_replace_form(text: Column) -> Column:
     return F.filter(F.split(F.trim(cleaned), r"\s+"), lambda t: t != "")
 
 
-def word_shingles(tokens: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles: transform over a 0..size-n index sequence
-    (built-in higher-order functions — no explode, no UDF).
+def _word_grams(tokens: Column, n: int, distinct: bool = False) -> Column:
+    """Word n-grams: transform over a 0..size-n index sequence (built-in
+    higher-order functions — no explode, no UDF); ``distinct`` drops
+    repeats for set semantics.
 
     Docs shorter than n tokens yield an empty array — guarded up front
     because `sequence(0, -1)` counts DOWN and ANSI `element_at` throws on
@@ -88,9 +89,16 @@ def word_shingles(tokens: Column, n: int = 3) -> Column:
             " ", *[F.element_at(tokens, (i + j + 1).cast("int")) for j in range(n)]
         ),
     )
-    return F.when(F.size(tokens) >= n, F.array_distinct(grams)).otherwise(
+    if distinct:
+        grams = F.array_distinct(grams)
+    return F.when(F.size(tokens) >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
+
+
+def word_shingles(tokens: Column, n: int = 3) -> Column:
+    """Distinct n-word shingles."""
+    return _word_grams(tokens, n, distinct=True)
 
 
 def exact_dedup(
@@ -879,19 +887,16 @@ def ngram_jaccard_pairs(
 #: ran and how many iteration rounds (== driver-blocking Spark actions in
 #: the loop) it took. Tests pin this so the convergence-loop cost can't
 #: silently regress; ops dashboards can read it after a run.
-#: NOTE (ADVICE r13): since r13 each counted round advances TWO
-#: propagation hops (label backend) / two contractions (star backend),
-#: so ``rounds`` is barriers, not hops — pre-r13 values are comparable
-#: only after doubling, and ``max_iters`` budgets up to 2·max_iters
-#: hops of work per call.
 LAST_COMPONENTS_INFO: dict = {"backend": None, "rounds": 0}
 
 
 class ComponentsNotConverged(RuntimeError):
-    """Raised when label propagation hits ``max_iters`` with labels still
-    changing — returning partial labels would silently disagree with the
-    transitive closure. Deep chained-duplicate graphs should use
-    ``backend="star"`` (O(log n) rounds) instead of raising ``max_iters``."""
+    """Raised when a distributed backend hits ``max_iters`` rounds short
+    of its fixed point — label propagation with labels still changing,
+    or star contraction with edges still moving. Returning partial labels
+    would silently disagree with the transitive closure. Deep
+    chained-duplicate graphs should use ``backend="star"`` (O(log n)
+    rounds) instead of raising ``max_iters``."""
 
 
 def dedup_components(

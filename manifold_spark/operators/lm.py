@@ -307,6 +307,13 @@ def ppl_threshold_cuts(
     )
 
 
+def ppl_bucket_of(cuts: Column, score: Column) -> Column:
+    """1-based perplexity bucket of ``score`` under a descending
+    `ppl_threshold_cuts` vector: 1 + the number of cuts strictly above
+    it."""
+    return F.size(F.filter(cuts, lambda c: c > score)) + 1
+
+
 def ppl_threshold_buckets(
     scored: DataFrame,
     group_col: str | None = "lang",
@@ -332,10 +339,7 @@ def ppl_threshold_buckets(
         if group_col
         else scored.crossJoin(broadcast(cuts))
     )
-    # bucket = 1 + number of cuts strictly above the score
-    b = (
-        F.size(F.filter(F.col("cuts"), lambda c: c > F.col(score_col))) + 1
-    ).cast("int")
+    b = ppl_bucket_of(F.col("cuts"), F.col(score_col)).cast("int")
     if len(labels) == n_buckets:
         label = F.element_at(F.array(*[F.lit(x) for x in labels]), b)
     else:

@@ -1282,55 +1282,3 @@ def test_char_ngrams_from_equals_substr_form(spark):
         ).collect()
         for r in rows:
             assert r["old"] == r["staged"] == r["new"], (n, r)
-
-
-def test_classifier_shared_tf_paths_bit_identical(spark):
-    """r14 internals pin: the shared-tf wiring (train_nb(tf=),
-    score_nb(tf=), dsir_logratio(score_tf=, train_tf=)) must reproduce
-    the plain per-phase paths exactly — same model rows, same scores,
-    same n_features (incl. a doc with no extractable grams → 0)."""
-    from manifold_spark.operators.classifier import (
-        classify_self,
-        doc_bucket_tf,
-        dsir_logratio,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps", "en"),
-            (2, "the quick brown fox leaps", "en"),
-            (3, "der schnelle braune fuchs", "de"),
-            (4, "le renard brun rapide", None),
-            (5, "", "en"),  # no grams → n_features 0, still scored
-        ],
-        "doc_id long, text string, lang string",
-    )
-
-    plain = {r["doc_id"]: tuple(r) for r in classify_self(docs).collect()}
-    tf = doc_bucket_tf(docs, carry_cols=("lang",)).persist()
-    shared = {r["doc_id"]: tuple(r) for r in classify_self(docs, tf=tf).collect()}
-    assert plain == shared
-
-    target = docs.filter(F.col("lang") == "en")
-    raw = docs.filter(F.coalesce(F.col("lang"), F.lit("")) != "en")
-    d_plain = {
-        r["doc_id"]: (r["n_features"], r["logratio"])
-        for r in dsir_logratio(target, raw, score_docs=docs).collect()
-    }
-    train_tf = tf.select(
-        "doc_id",
-        F.when(F.col("lang") == "en", F.lit("target"))
-        .otherwise(F.lit("raw"))
-        .alias("_dsir_label"),
-        "bucket",
-        "tf",
-    )
-    d_shared = {
-        r["doc_id"]: (r["n_features"], r["logratio"])
-        for r in dsir_logratio(
-            target, raw, score_docs=docs, score_tf=tf, train_tf=train_tf
-        ).collect()
-    }
-    tf.unpersist()
-    assert d_plain == d_shared
-    assert d_plain[5][0] == 0  # gramless doc prices at zero features
