@@ -18,10 +18,11 @@ Model (per class c, hash bucket b, smoothing α):
     pred(d)   = argmax_c score(d, c)   (ties → label asc)
 
 Scale shape:
-- Training is one explode into a map-side-combined (label, bucket) count
-  whose key space is bounded by B·|classes| — NOT the corpus — so the
-  dense model table stays broadcastable at any corpus size (same bound
-  argument as the char-LM's charset³ table, `operators/lm.py`).
+- Training sums the per-doc tf relation (`doc_bucket_tf`) into a
+  (label, bucket) count whose key space is bounded by B·|classes| — NOT
+  the corpus — so the dense model table stays broadcastable at any
+  corpus size (same bound argument as the char-LM's charset³ table,
+  `operators/lm.py`).
 - Scoring: per-doc tf is a doc-keyed aggregate, the model and class
   tables broadcast against it, and the per-(doc, class) fold is doc-
   keyed — the corpus never shuffles by feature.
@@ -121,11 +122,10 @@ def doc_bucket_tf(
 
 def train_nb(
     docs: DataFrame,
+    tf: DataFrame,
     label_col: str = "lang",
-    text_col: str = "text",
     n_buckets: int = N_BUCKETS,
     alpha: int = ALPHA,
-    tf: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Train the smoothed NB model. Returns (model, class_table):
 
@@ -136,31 +136,15 @@ def train_nb(
     - class_table: (label, prior_q, default_q, class_total) — default_q
       prices features never observed in training (held-out docs).
 
-    ``tf`` (r14): a precomputed `doc_bucket_tf(docs, carry_cols=
-    (label_col,))` relation. The per-(label, bucket) counts are then the
-    exact integer sums of its ``tf`` column — identical to counting the
-    exploded grams directly — and the corpus tokenize pass is shared
-    with scoring instead of re-run. Doc counts (priors) still come from
-    ``docs`` (a count-only aggregate, no tokenize). Without ``tf`` the
-    grams are counted straight into (label, bucket), which combines
-    map-side into the B·|classes| key space instead of first shuffling
-    a per-doc relation that only training would read.
+    ``tf``: `doc_bucket_tf(docs, carry_cols=(label_col,))`, persisted by
+    the caller (three relations below read its counts). The per-(label,
+    bucket) counts are the exact integer sums of its ``tf`` column. Doc
+    counts (priors) come from ``docs`` (a count-only aggregate, no
+    tokenize), so classes whose docs carry no grams still get rows.
     """
-    if tf is not None:
-        cnt = (
-            tf.groupBy(F.col(label_col).alias("label"), "bucket")
-            .agg(F.sum("tf").alias("cnt"))
-        )
-    else:
-        docs = ensure_parallelism(docs)
-        feats = docs.select(
-            F.col(label_col).alias("label"),
-            normalized_tokens(F.col(text_col)).alias("__toks"),
-        ).select(
-            "label",
-            F.explode(feature_grams_from(F.col("__toks"))).alias("gram"),
-        ).select("label", _bucket(F.col("gram"), n_buckets).alias("bucket"))
-        cnt = feats.groupBy("label", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
+    cnt = tf.groupBy(F.col(label_col).alias("label"), "bucket").agg(
+        F.sum("tf").alias("cnt")
+    )
 
     class_tot = cnt.groupBy("label").agg(F.sum("cnt").alias("class_total"))
     n_docs_c = docs.groupBy(F.col(label_col).alias("label")).agg(
@@ -325,7 +309,7 @@ def classify_self(
             )
         )
     model, class_table = train_nb(
-        docs, label_col=label_col, text_col=text_col, n_buckets=n_buckets, tf=tf
+        docs, tf, label_col=label_col, n_buckets=n_buckets
     )
     model = _persist_tracked(model)
     class_table = _persist_tracked(class_table)
@@ -374,12 +358,13 @@ def dsir_logratio(
     count; docs with no grams coalesce to 0). Doc ids are assumed unique
     (the curation contract): one output row per id.
 
-    ``train_tf`` (r14): a `doc_bucket_tf` relation over the target∪raw
-    union carrying a ``_dsir_label`` column ('target'/'raw'). When the
-    two pools partition an already-tokenized corpus, the caller derives
-    this as a projection of its shared tf relation and the training
-    tokenize pass disappears as well (per-(label, bucket) counts are
-    the exact integer Σtf either way).
+    ``train_tf`` (r14): a persisted `doc_bucket_tf` relation over the
+    target∪raw union carrying a ``_dsir_label`` column ('target'/'raw');
+    when None it is built (and persisted) here, once. When the two pools
+    partition an already-tokenized corpus, the caller derives it as a
+    projection of its shared tf relation and the training tokenize pass
+    disappears as well (per-(label, bucket) counts are the exact integer
+    Σtf either way).
     """
     labeled = target_docs.select(
         F.col(id_col), F.col(text_col), F.lit("target").alias("_dsir_label")
@@ -388,9 +373,14 @@ def dsir_logratio(
             F.col(id_col), F.col(text_col), F.lit("raw").alias("_dsir_label")
         )
     )
+    if train_tf is None:
+        train_tf = _persist_tracked(
+            doc_bucket_tf(
+                labeled, text_col, id_col, n_buckets, carry_cols=("_dsir_label",)
+            )
+        )
     model, class_table = train_nb(
-        labeled, label_col="_dsir_label", text_col=text_col, n_buckets=n_buckets,
-        tf=train_tf,
+        labeled, train_tf, label_col="_dsir_label", n_buckets=n_buckets
     )
     model = _persist_tracked(model)
     class_table = _persist_tracked(class_table)

@@ -1,7 +1,7 @@
 """Classifier feature paths (default tier).
 
 `classifier.doc_bucket_tf` is the one hashed-n-gram term-frequency
-relation scoring and DSIR read. These pins hold the shared-tf wiring
+relation training, scoring and DSIR read. These pins hold the shared-tf wiring
 row-identical to the paths that build their own relation, and count the
 tokenize passes a DSIR plan runs.
 """
@@ -70,7 +70,7 @@ def _tokenize_passes(df) -> int:
 
 
 def test_classifier_shared_tf_paths_bit_identical(docs):
-    """r14 internals pin: the shared-tf wiring (train_nb(tf=),
+    """r14 internals pin: the shared-tf wiring (train_nb(docs, tf),
     score_nb(tf=), dsir_logratio(score_tf=, train_tf=)) must reproduce
     the plain per-phase paths exactly — same model rows, same scores,
     same n_features (incl. a doc with no extractable grams → 0)."""
@@ -106,15 +106,20 @@ def test_classifier_shared_tf_paths_bit_identical(docs):
         assert d_plain[5][0] == 0  # gramless doc prices at zero features
 
 
-def test_dsir_tokenizes_score_docs_once(docs):
-    """Without ``score_tf``, `dsir_logratio` builds one `doc_bucket_tf`
-    over ``score_docs`` and reads both the scores and ``n_features``
-    from it: one tokenize site for scoring. The other 8 are training's,
-    2 (one per pool of the union) in each of the 4 reads of its
-    (label, bucket) count: 3 in the cached model, 1 in the cached
-    class table."""
+def test_dsir_tokenizes_each_corpus_once(docs):
+    """Without ``score_tf`` or ``train_tf``, `dsir_logratio` builds one
+    persisted `doc_bucket_tf` per corpus: one over ``score_docs`` (the
+    scores and ``n_features`` both read it) and one over the target∪raw
+    training union (a tokenize site per pool). Passing a persisted
+    ``score_tf`` only moves the scoring site into the caller's
+    relation."""
     target, raw = _pools(docs)
     assert _tokenize_passes(doc_bucket_tf(docs)) == 1
     with operator_cache_scope():
-        d = dsir_logratio(target, raw, score_docs=docs)
-        assert _tokenize_passes(d) == 9
+        built = _tokenize_passes(dsir_logratio(target, raw, score_docs=docs))
+        score_tf = doc_bucket_tf(docs).persist()
+        given = _tokenize_passes(
+            dsir_logratio(target, raw, score_docs=docs, score_tf=score_tf)
+        )
+        score_tf.unpersist()
+    assert built == given == 1 + 2

@@ -681,12 +681,16 @@ def test_streaming_nb_classify_matches_batch(spark, sf_dir, tmp_path):
     """Stream-static NB classification (pretrained model, foreachBatch
     scoring) must land on exactly the batch `score_nb` rows when the doc
     stream is drained with availableNow (one file per trigger)."""
-    from manifold_spark.operators.classifier import score_nb, train_nb
+    from manifold_spark.operators.classifier import (
+        doc_bucket_tf,
+        score_nb,
+        train_nb,
+    )
     from manifold_spark.operators.dedup import release_shingle_caches
     from manifold_spark.streaming.jobs import nb_classify_sink
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    model, classes = train_nb(docs)
+    model, classes = train_nb(docs, doc_bucket_tf(docs, carry_cols=("lang",)))
     model = model.persist()
     classes = classes.persist()
 

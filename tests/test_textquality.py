@@ -641,13 +641,19 @@ def test_nb_classifier_matches_pure_python(spark):
 
 
 def test_nb_classifier_held_out_with_unseen_features(spark):
-    from manifold_spark.operators.classifier import score_nb, train_nb
+    from manifold_spark.operators.classifier import (
+        doc_bucket_tf,
+        score_nb,
+        train_nb,
+    )
     from manifold_spark.operators.dedup import release_shingle_caches
 
     train_df = spark.createDataFrame(
         _NB_TRAIN, "doc_id long, text string, lang string"
     )
-    model, classes = train_nb(train_df)
+    model, classes = train_nb(
+        train_df, doc_bucket_tf(train_df, carry_cols=("lang",))
+    )
     held_out = [
         (100, "gato casa zzz-neverseen"),  # es vocab + one unseen token
         (101, "dog food"),
