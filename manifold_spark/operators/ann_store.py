@@ -671,9 +671,9 @@ class AnnIndexStore:
         """The union of every query's nprobe nearest cells, computed
         DRIVER-SIDE (one bounded collect of the cell-count-sized
         centroid table on the store's first search, kept after; the
-        vectors were already collected by the pinning step) with the
-        exact `topk_ivf_pq` probe recipe: left-associated double dots,
-        (dot desc, cid asc) tie-break.
+        vectors were already collected by the pinning step) with
+        `topk_ivf_pq`'s probe ranking (`pq._nearest_cells`):
+        left-associated double dots, (dot desc, cid asc) tie-break.
         That is bit-identical to the `assign_centroids` column
         expression (same IEEE-double op order over the same
         float32→double values — the repo-wide determinism contract
@@ -681,10 +681,7 @@ class AnnIndexStore:
         so the pruned read can never disagree with scoring's probe set
         — without paying a Spark job per search just to rank nprobe
         centroids."""
-        import functools
-        import operator
-
-        from manifold_spark.operators.pq import _sorted_cents
+        from manifold_spark.operators.pq import _nearest_cells, _sorted_cents
 
         if self._sorted_centroids is None:
             self._sorted_centroids = _sorted_cents(
@@ -693,16 +690,7 @@ class AnnIndexStore:
         cents = self._sorted_centroids
         cids: set = set()
         for vec in q_vecs:
-            dots = sorted(
-                (
-                    -functools.reduce(
-                        operator.add, (v * c for v, c in zip(vec, cvec))
-                    ),
-                    cid,
-                )
-                for cid, cvec in cents
-            )[:nprobe]
-            cids.update(cid for _negdot, cid in dots)
+            cids.update(cid for _negdot, cid in _nearest_cells(vec, cents, nprobe))
         return sorted(cids)
 
     def _pin_queries(

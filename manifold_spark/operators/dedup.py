@@ -26,9 +26,6 @@ pair list, which is tiny relative to the corpus.
 
 from __future__ import annotations
 
-import functools
-import operator
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -58,20 +55,12 @@ def normalized_tokens(text: Column) -> Column:
     equals whole-string lowering restricted to the run — Java's only
     context-sensitive lowering rule (final sigma) sees a non-letter
     boundary in both forms. Pinned against the old form
-    (`_normalized_tokens_replace_form`); the dedup oracle gates mirror
-    the value."""
+    (`tests/reference_forms.py`); the dedup oracle gates mirror the
+    value."""
     return F.transform(
         F.regexp_extract_all(text, F.lit(r"[\p{L}\p{N}]+"), F.lit(0)),
         lambda t: F.lower(t),
     )
-
-
-def _normalized_tokens_replace_form(text: Column) -> Column:
-    """Pre-r15 regexp_replace-based tokenizer — the reference form
-    `normalized_tokens` is value-pinned against (not a production
-    path)."""
-    cleaned = F.lower(F.regexp_replace(text, r"[^\p{L}\p{N}]+", " "))
-    return F.filter(F.split(F.trim(cleaned), r"\s+"), lambda t: t != "")
 
 
 def _word_grams(tokens: Column, n: int, distinct: bool = False) -> Column:
@@ -603,38 +592,13 @@ def minhash_index_probe(
     return _verify_candidates(candidates, all_sh, all_sizes, threshold)
 
 
-def simhash_fingerprint(tokens: Column, num_bits: int = 32) -> Column:
-    """32-bit SimHash: per bit j, sign of Σ_tokens (bit_j(hash(t))·2−1);
-    packed into an int. Pure column expressions."""
-    hashes = F.transform(tokens, lambda t: stable_long_hash(t))
-
-    def bit_merge(j: int):
-        # closure capture (see _seeded_hash) — a 3-parameter lambda would
-        # receive a lambda-variable column as `j`.
-        return lambda acc, h: acc + (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1)
-
-    bit_sums = [
-        F.aggregate(hashes, F.lit(0).cast("long"), bit_merge(j))
-        for j in range(num_bits)
-    ]
-    packed = functools.reduce(
-        operator.add,
-        [
-            F.when(s > 0, F.lit(2**j).cast("long")).otherwise(F.lit(0).cast("long"))
-            for j, s in enumerate(bit_sums)
-        ],
-    )
-    return packed
-
-
 def simhash_fingerprints(
     df: DataFrame, text_col: str, id_col: str, num_bits: int = 32
 ) -> DataFrame:
     """Corpus-scale SimHash fingerprints as (doc_id, fp): explode tokens →
     one codegen'd hash per token → num_bits ±1 bit-sum aggregates with
-    map-side combine (the HOF `simhash_fingerprint` is interpreted and
-    re-hashes per bit — fine for one doc, wrong for a corpus). Shared by
-    `simhash_pairs` and the recall-quality bench's exact-Hamming truth."""
+    map-side combine. Shared by `simhash_pairs` and the recall-quality
+    bench's exact-Hamming truth."""
     df = ensure_parallelism(df)
     toks = df.select(
         F.col(id_col).alias("doc_id"),
@@ -647,8 +611,7 @@ def simhash_fingerprints(
     # it binds looser than `*` in SQL), parsed in num_bits + 1 JVM calls
     # instead of ~14 py4j round trips per bit. Integer arithmetic, so the
     # fingerprints are value-identical; pinned against the Column form
-    # (`_simhash_bitsum_column`/`_simhash_packed_column`) in
-    # tests/test_linalg_fastpath.py.
+    # (tests/reference_forms.py) in tests/test_linalg_fastpath.py.
     bitsums = h.groupBy("doc_id").agg(
         *[
             F.expr(f"sum((shiftright(h, {j}) & 1) * 2 - 1) AS b_{j}")
@@ -661,29 +624,6 @@ def simhash_fingerprints(
         for j in range(num_bits)
     )
     return bitsums.selectExpr("doc_id", f"{packed_sql} AS fp")
-
-
-def _simhash_bitsum_column(j: int) -> Column:
-    """Pre-r15 per-bit sum Column over `h` — the reference form the
-    single-parse aggregate in `simhash_fingerprints` is value-pinned
-    against."""
-    return F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1).alias(
-        f"b_{j}"
-    )
-
-
-def _simhash_packed_column(num_bits: int) -> Column:
-    """Pre-r15 packed-fingerprint Column over b_0..b_{n-1} — the
-    reference form for the value pin."""
-    return functools.reduce(
-        operator.add,
-        [
-            F.when(F.col(f"b_{j}") > 0, F.lit(2**j).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-            for j in range(num_bits)
-        ],
-    )
 
 
 def simhash_pairs(

@@ -1,11 +1,21 @@
 """Vector expression helpers for embedding columns (`array<float>`).
 
-Cross-engine determinism: both the Spark Column and the generated oracle
-SQL expand the dot product as the SAME left-associated chain of double
-multiplies/adds (`((a1*b1 + a2*b2) + a3*b3) + …`), so results are
+Cross-engine determinism: both the Spark expression and the generated
+oracle SQL expand the dot product as the SAME left-associated chain of
+double multiplies/adds (`((a1*b1 + a2*b2) + a3*b3) + …`), so results are
 bit-identical — no tolerance needed in the correctness gate. Elements are
 cast float→double (exact) before any arithmetic so neither engine does
 float math.
+
+One rendering: every vector expression is built as ONE Spark-SQL text
+and parsed by ONE `F.expr` call (a per-term Column chain costs ~400 py4j
+round trips per call — r14: plan-construction time dominated the sim
+rows' wall clock; guide §7.3 "avoid generating gigantic expression trees
+in loops"). Column names go through `_quote_name`, which backtick-quotes
+each dot segment, so keywords, spaces and nested fields all parse;
+double literals go through `double_sql`, which renders non-finite values
+through `CAST`. The Column chains these texts replaced live in
+`tests/reference_forms.py`, which pins each parsed tree against them.
 
 Scale note: a 64-term expression tree per pair is whole-stage-codegen'd
 into straight-line JVM code — this is the fast path for brute-force
@@ -14,47 +24,25 @@ scoring; no UDF, no Arrow transfer.
 
 from __future__ import annotations
 
-import functools
 import math
-import operator
-import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-#: Names the single-parse fast path below may inline into a SQL fragment
-#: verbatim. Dots are allowed because both `F.col("a.b")` and the SQL
-#: parser resolve them identically (nested-field reference); anything
-#: else (spaces, backticks, quotes) falls back to the Column builders.
-_SQL_SAFE_NAME = re.compile(r"^[A-Za-z_][A-Za-z0-9_.]*$")
-
-
-def _sql_safe(col: Column | str) -> bool:
-    return isinstance(col, str) and bool(_SQL_SAFE_NAME.match(col))
-
-
-def element(col: Column | str, i: int) -> Column:
-    """1-based element access, cast to double."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.element_at(c, i).cast("double")
 
 
 def _quote_name(name: str) -> str:
     """Backtick every dot-segment: `F.col("a.b")` and the parsed
     ``` `a`.`b` ``` resolve to the same nested-field reference, and the
-    backticks keep SQL keywords (`order`, `case`, …) valid as names."""
+    backticks keep SQL keywords (`order`, `case`, …) and names with
+    spaces valid."""
     return ".".join(f"`{seg}`" for seg in name.split("."))
 
 
 def _dot_terms_sql(a: str, b: str, dim: int) -> str:
-    """Spark-SQL text of the SAME expression tree `_dot_expr_columns`
-    builds: `+` is left-associative in the parser, `element_at`/`CAST`
-    resolve to the identical Catalyst nodes, so one `F.expr` parse of
-    this string analyzes to the exact tree the per-term Column chain
-    produced — bit-identical results, ~400 fewer py4j round trips per
-    call (r14 optimization: plan-construction time dominated the sim
-    rows' wall clock; guide §7.3 "avoid generating gigantic expression
-    trees in loops" — the loop now runs in the JVM parser)."""
+    """Spark-SQL text of the left-associated dot product: `+` is
+    left-associative in the parser and `element_at`/`CAST` resolve to the
+    same Catalyst nodes as their Column builders, so one `F.expr` parse
+    analyzes to the per-term Column chain's exact tree."""
     qa, qb = _quote_name(a), _quote_name(b)
     return " + ".join(
         f"(CAST(element_at({qa}, {i}) AS DOUBLE) * CAST(element_at({qb}, {i}) AS DOUBLE))"
@@ -62,29 +50,16 @@ def _dot_terms_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def _dot_expr_columns(a: Column | str, b: Column | str, dim: int) -> Column:
-    """The original per-term Column chain — kept for Column (non-name)
-    inputs and as the reference tree the fast path must reproduce
-    (pinned by test_linalg_fastpath equivalence tests)."""
-    return functools.reduce(
-        operator.add, (element(a, i) * element(b, i) for i in range(1, dim + 1))
-    )
-
-
-def dot_expr(a: Column | str, b: Column | str, dim: int) -> Column:
+def dot_expr(a: str, b: str, dim: int) -> Column:
     """Left-associated dot product of two vector columns."""
-    if _sql_safe(a) and _sql_safe(b):
-        return F.expr(_dot_terms_sql(a, b, dim))
-    return _dot_expr_columns(a, b, dim)
+    return F.expr(_dot_terms_sql(a, b, dim))
 
 
-def norm_expr(a: Column | str, dim: int) -> Column:
-    if _sql_safe(a):
-        return F.expr(f"sqrt({_dot_terms_sql(a, a, dim)})")
-    return F.sqrt(dot_expr(a, a, dim))
+def norm_expr(a: str, dim: int) -> Column:
+    return F.expr(f"sqrt({_dot_terms_sql(a, a, dim)})")
 
 
-def cosine_expr(a: Column | str, b: Column | str, dim: int) -> Column:
+def cosine_expr(a: str, b: str, dim: int) -> Column:
     """Cosine similarity, with zero-norm vectors defined as similarity
     0.0 — NOT left to x/0: under Spark's ANSI mode (default since 4.x) a
     raw division throws `DIVIDE_BY_ZERO` the first time a real corpus
@@ -92,31 +67,27 @@ def cosine_expr(a: Column | str, b: Column | str, dim: int) -> Column:
     `test_lsh_properties.py`). The guard compares the exact product of
     norms, so every nonzero pair divides by the identical value as
     before — bit-identical to the SQL mirror either way."""
-    if _sql_safe(a) and _sql_safe(b):
-        denom_sql = (
-            f"(sqrt({_dot_terms_sql(a, a, dim)}) * sqrt({_dot_terms_sql(b, b, dim)}))"
-        )
-        # `0.0D` (double literal), NOT `0.0` (decimal): the Column form's
-        # otherwise(F.lit(0.0)) is a DoubleType literal and the parsed
-        # tree must match it node-for-node.
-        return F.expr(
-            f"CASE WHEN {denom_sql} > 0 THEN ({_dot_terms_sql(a, b, dim)}) / {denom_sql} "
-            f"ELSE 0.0D END"
-        )
-    denom = norm_expr(a, dim) * norm_expr(b, dim)
-    return F.when(denom > 0, dot_expr(a, b, dim) / denom).otherwise(F.lit(0.0))
+    denom_sql = f"(sqrt({_dot_terms_sql(a, a, dim)}) * sqrt({_dot_terms_sql(b, b, dim)}))"
+    # `0.0D` (double literal), NOT `0.0` (decimal): the zero-norm branch
+    # must be a DoubleType literal like `F.lit(0.0)`.
+    return F.expr(
+        f"CASE WHEN {denom_sql} > 0 THEN ({_dot_terms_sql(a, b, dim)}) / {denom_sql} "
+        f"ELSE 0.0D END"
+    )
 
 
 def double_sql(v) -> str:
-    """SQL text of one double literal. repr() of a Python float is the
-    shortest round-trip decimal and Java's Double.parseDouble returns
+    """SQL text of one double literal. repr() of a finite Python float is
+    the shortest round-trip decimal and Java's Double.parseDouble returns
     the identical bits; a negative value parses as UnaryMinus(lit),
     which ConstantFolding collapses to the identical negative Literal
-    at optimize time. Raises ValueError for non-finite values (SQL text
-    has no NaN/Infinity literal)."""
+    at optimize time. SQL has no NaN/Infinity literal, so non-finite
+    values render as a string cast, which folds to the same double."""
     f = float(v)
-    if not math.isfinite(f):
-        raise ValueError("non-finite value has no SQL literal")
+    if math.isnan(f):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(f):
+        return "CAST('Infinity' AS DOUBLE)" if f > 0 else "CAST('-Infinity' AS DOUBLE)"
     return repr(f) + "D"
 
 
@@ -140,17 +111,8 @@ def lit_double_array(values) -> Column:
     """(Possibly nested) array<double> literal built in ONE JVM parse —
     the per-element `F.lit` loop costs ~2 py4j round trips per element,
     thousands per codebook (r14: plan-construction time dominated the
-    sim rows' wall clock). Values are bit-identical to the loop form;
-    non-finite values / empty levels fall back to it (SQL text has no
-    NaN/Infinity literal)."""
-    try:
-        return F.expr(_doubles_array_sql(values))
-    except ValueError:
-        def build(vs):
-            if any(isinstance(v, (list, tuple)) for v in vs):
-                return F.array(*[build(v) for v in vs])
-            return F.array(*[F.lit(float(v)) for v in vs])
-        return build(values)
+    sim rows' wall clock). Values are bit-identical to the loop form."""
+    return F.expr(_doubles_array_sql(values))
 
 
 def dot_sql(a: str, b: str, dim: int) -> str:

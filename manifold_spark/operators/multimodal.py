@@ -6,8 +6,7 @@ through Arrow-batched `mapInPandas` so Python touches whole columnar
 batches, never single rows. The codec libraries (PIL/torchaudio/ffmpeg)
 are NOT in this container, so the actual decode is stubbed: a clearly
 marked deterministic fake keeps the Spark-side plumbing (schema,
-partitioning, UDF signature, batch shape) real and testable, and
-`decode_real` raises NotImplementedError until a codec is installed.
+partitioning, UDF signature, batch shape) real and testable.
 """
 
 from __future__ import annotations
@@ -87,17 +86,6 @@ def extract_media_features(df_with_binary: DataFrame) -> DataFrame:
     return ensure_parallelism(df_with_binary).select("doc_id", "content").mapInPandas(
         decode_media_batch, MEDIA_FEATURES_SCHEMA
     )
-
-
-def decode_real(content: bytes):  # pragma: no cover - codec gate
-    """Real decode path, gated on codec availability."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "image codecs are not installed in this runtime; "
-            "extract_media_features uses the deterministic stub decoder"
-        ) from e
 
 
 #: Frame-sampling output: one row per sampled frame. Real video decode is

@@ -59,10 +59,8 @@ from pyspark.sql.functions import broadcast
 
 from manifold_spark.operators.linalg import (
     _quote_name,
-    _sql_safe,
     cosine_expr,
     double_sql,
-    element,
     lit_double_array,
 )
 from manifold_spark.plans.parallelism import ensure_parallelism
@@ -74,18 +72,11 @@ PQ_M = 8
 PQ_KSUB = 16
 
 
-def _sq_l2(a_terms: list, b_terms: list):
-    """Left-associated Σ (aᵢ−bᵢ)² over pre-built element Columns."""
-    return functools.reduce(
-        operator.add, ((a - b) * (a - b) for a, b in zip(a_terms, b_terms))
-    )
-
-
 def _fold_dot(a, b):
     """Left-associated Σ aᵢ·bᵢ over two ARRAY columns, folded WITHOUT a
     zero initializer — the seed is the first product, exactly like the
     driver-side `functools.reduce(operator.add, (x*y for …))` chains in
-    `_query_rows`/`_cids_for_vecs` (a 0.0 seed would differ only in the
+    `_ip_tables`/`_nearest_cells` (a 0.0 seed would differ only in the
     sign of an all-(−0.0) chain, but the LUT equality pin demands
     bit-identity, not just numeric equality). Elements cast float→double
     (exact) inside the fold, so mixed float/double array pairs are fine.
@@ -115,32 +106,19 @@ def _fold_dot(a, b):
     )
 
 
-def _subvec_elements(vec_col: str, j: int, dsub: int) -> list:
-    """Element Columns (cast double) of subspace j of a vector column."""
-    return [element(vec_col, j * dsub + i) for i in range(1, dsub + 1)]
-
-
 def _neg_dot_expr(vec_col: str, cvec: list[float], dim: int):
-    """−Σᵢ element(vec, i)·cvecᵢ — the per-centroid scan-side score used
-    by the coarse argmax structs. r14 fastpath: ONE `F.expr` parse of the
-    same left-associated chain when the name is SQL-safe (the reduce
-    chain is ~dim·5 py4j round trips PER CENTROID; negative coefficient
-    literals parse via UnaryMinus and fold at optimize time — optimized-
-    plan equality pinned in test_linalg_fastpath.py)."""
-    if _sql_safe(vec_col):
-        try:
-            qv = _quote_name(vec_col)
-            terms = " + ".join(
-                f"(CAST(element_at({qv}, {i}) AS DOUBLE) * {double_sql(cvec[i - 1])})"
-                for i in range(1, dim + 1)
-            )
-            return F.expr(f"-({terms})")
-        except ValueError:
-            pass  # non-finite coefficient — fall back to the Column chain
-    return -functools.reduce(
-        operator.add,
-        (element(vec_col, i) * F.lit(cvec[i - 1]) for i in range(1, dim + 1)),
+    """−Σᵢ vec[i]·cvecᵢ (left-associated, cast double) — the
+    per-centroid scan-side score used by the coarse argmax structs, as
+    ONE `F.expr` parse (a Column chain is ~dim·5 py4j round trips PER
+    CENTROID; negative coefficient literals parse via UnaryMinus and fold
+    at optimize time — optimized-plan equality with the Column chain
+    pinned in test_linalg_fastpath.py)."""
+    qv = _quote_name(vec_col)
+    terms = " + ".join(
+        f"(CAST(element_at({qv}, {i}) AS DOUBLE) * {double_sql(cvec[i - 1])})"
+        for i in range(1, dim + 1)
     )
+    return F.expr(f"-({terms})")
 
 
 def pq_codebooks(
@@ -223,7 +201,7 @@ def pq_codebooks(
     for _ in range(iters):
         # r14 (guide §2.4): the round's assignment is the SCAN-SIDE
         # literal-codebook argmin (`_codes_expr` — pinned bit-identical
-        # to the former broadcast-join + min_by fan-out: same `_sq_l2`
+        # to the former broadcast-join + min_by fan-out: same Σ (a−b)²
         # left association over the same doubles, same (dist asc, code
         # asc) tie-break), so the per-round n·m-row groupBy shuffle and
         # the ksub× fan-out join are gone; the ONLY shuffle left is the
@@ -263,30 +241,17 @@ def _codes_expr(
     code (struct order = dist asc, code asc), matching the trainer's
     assignment rule bit-for-bit.
 
-    r14: for plain column names the whole expression renders as ONE
-    Spark-SQL parse (`_codes_expr_sql`) — the per-term Column chain is
-    ~dim·ksub·6 py4j round trips per invocation (seconds of driver time
-    per Lloyd round / encode), and the parsed tree optimizes to the
-    identical Catalyst tree (negative codeword literals parse via
+    r14: the whole expression renders as ONE Spark-SQL parse — a
+    per-term Column chain is ~dim·ksub·6 py4j round trips per invocation
+    (seconds of driver time per Lloyd round / encode). `+`/`-`/`*` are
+    left-associative in the parser, `element_at`/CAST/array_sort resolve
+    to the same Catalyst nodes as their Column builders, `struct(x AS d,
+    …)` is the same CreateStruct the aliased `F.struct` builds (NOT
+    named_struct, whose node prints differently), and `double_sql`
+    literals round-trip bit-exactly (negative codewords parse via
     UnaryMinus, folded at optimize time — optimized-plan equality and
-    bit-identical codes pinned in test_linalg_fastpath.py)."""
-    if _sql_safe(vec_col):
-        try:
-            return F.expr(_codes_expr_sql(vec_col, codebooks, dim))
-        except ValueError:
-            pass  # non-finite codeword (cannot happen from training) — fall back
-    return _codes_expr_columns(vec_col, codebooks, dim)
-
-
-def _codes_expr_sql(
-    vec_col: str, codebooks: list[list[list[float]]], dim: int
-) -> str:
-    """SQL text of the SAME tree `_codes_expr_columns` builds: `+`/`-`/`*`
-    are left-associative in the parser, `element_at`/CAST/array_sort
-    resolve to the identical Catalyst nodes, `struct(x AS d, …)` is the
-    same CreateStruct the aliased `F.struct` builds (NOT named_struct,
-    whose node prints differently), and repr() double literals
-    round-trip bit-exactly through Double.parseDouble."""
+    bit-identical codes vs the Column chain pinned in
+    test_linalg_fastpath.py)."""
     m, ksub = len(codebooks), len(codebooks[0])
     dsub = dim // m
     qv = _quote_name(vec_col)
@@ -306,29 +271,7 @@ def _codes_expr_sql(
         codes.append(
             f"element_at(array_sort(array({', '.join(entries)})), 1).c"
         )
-    return "array(" + ", ".join(codes) + ")"
-
-
-def _codes_expr_columns(
-    vec_col: str, codebooks: list[list[list[float]]], dim: int
-):
-    """The original per-term Column chain — kept as the reference tree
-    the SQL fast path must reproduce, and the fallback for non-SQL-safe
-    names / non-finite codewords."""
-    m, ksub = len(codebooks), len(codebooks[0])
-    dsub = dim // m
-    codes = []
-    for j in range(m):
-        sub = _subvec_elements(vec_col, j, dsub)
-        entries = [
-            F.struct(
-                _sq_l2(sub, [F.lit(v) for v in codebooks[j][c]]).alias("d"),
-                F.lit(c).alias("c"),
-            )
-            for c in range(ksub)
-        ]
-        codes.append(F.element_at(F.array_sort(F.array(*entries)), 1).getField("c"))
-    return F.array(*codes)
+    return F.expr("array(" + ", ".join(codes) + ")")
 
 
 def encode(
@@ -460,53 +403,53 @@ def _query_rows(
     the exact ‖q‖ — bit-identical IEEE doubles to the expression form."""
     import math
 
-    m, ksub = len(codebooks), len(codebooks[0])
-    dsub = len(codebooks[0][0])
     out = []
     for row in queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     ).collect():
         vec = [float(v) for v in row["q_vec"]]
-        tables = [
-            [
-                functools.reduce(
-                    operator.add,
-                    (vec[j * dsub + i] * codebooks[j][c][i] for i in range(dsub)),
-                )
-                for c in range(ksub)
-            ]
-            for j in range(m)
-        ]
         norm = math.sqrt(functools.reduce(operator.add, (v * v for v in vec)))
-        out.append((row["query_id"], tables, norm, vec))
+        out.append((row["query_id"], _ip_tables(vec, codebooks), norm, vec))
     return out
 
 
-def _cent_aux_tables(
-    cents: list[tuple], codebooks: list[list[list[float]]], dim: int
-) -> dict:
+def _ip_tables(vec: list[float], codebooks: list[list[list[float]]]) -> list:
+    """t[j][c] = ⟨vec_subvec_j, cb[j][c]⟩, left-associated doubles — the
+    per-subspace inner-product table of a query (the ADC lookup) or of a
+    coarse centroid (the residual cross term)."""
+    dsub = len(codebooks[0][0])
+    return [
+        [
+            functools.reduce(
+                operator.add, (vec[j * dsub + i] * cent[i] for i in range(dsub))
+            )
+            for cent in cb_j
+        ]
+        for j, cb_j in enumerate(codebooks)
+    ]
+
+
+def _nearest_cells(vec: list[float], cents: list[tuple], nprobe: int) -> list:
+    """A vector's ``nprobe`` nearest coarse cells as (−dot, cid), ranked
+    by (dot desc, cid asc) — the `assign_centroids` rule, over
+    left-associated double dots (bit-identical to its column form)."""
+    return sorted(
+        (-functools.reduce(operator.add, (v * c for v, c in zip(vec, cvec))), cid)
+        for cid, cvec in cents
+    )[:nprobe]
+
+
+def _cent_aux_tables(cents: list[tuple], codebooks: list[list[list[float]]]) -> dict:
     """cid → (ct, cnorm): the per-coarse-centroid residual-reconstruction
     tables — ct[j][c] = ⟨c_subvec_j, cb[j][c]⟩ (left-associated) and
     ‖c‖². Driver-scale like the codebook (n_centroids·m·ksub doubles).
     ONE definition shared by the driver-side probe build (`topk_ivf_pq`)
     and the column-side build (`adc_probe_tables`) so the two paths can
     never drift."""
-    m, ksub = len(codebooks), len(codebooks[0])
-    dsub = dim // m
     aux = {}
     for cid, cvec in cents:
-        ct = [
-            [
-                functools.reduce(
-                    operator.add,
-                    (cvec[j * dsub + i] * codebooks[j][c][i] for i in range(dsub)),
-                )
-                for c in range(ksub)
-            ]
-            for j in range(m)
-        ]
         cnorm = functools.reduce(operator.add, (v * v for v in cvec))
-        aux[cid] = (ct, cnorm)
+        aux[cid] = (_ip_tables(cvec, codebooks), cnorm)
     return aux
 
 
@@ -587,7 +530,7 @@ def adc_probe_tables(
     )
     if residual:
         cents = _sorted_cents(centroids, id_col, vec_col)
-        aux = _cent_aux_tables(cents, codebooks, dim)
+        aux = _cent_aux_tables(cents, codebooks)
         aux_schema = StructType(
             [
                 StructField("centroid_id", centroids.schema[id_col].dataType),
@@ -1056,22 +999,11 @@ def topk_ivf_pq(
         # ct[l][j][c] = ⟨c_l subvec j, cb[j][c]⟩ and ‖c_l‖² — the cross
         # and norm terms of the x̂ = c + r̂ reconstruction (shared
         # definition with the column-side build: `_cent_aux_tables`).
-        cent_aux = _cent_aux_tables(cents, codebooks, dim)
+        cent_aux = _cent_aux_tables(cents, codebooks)
 
     q_data = []
     for qid, tables, norm, vec in q_rows:
-        dots = sorted(
-            (
-                (
-                    -functools.reduce(
-                        operator.add, (v * c for v, c in zip(vec, cvec))
-                    ),
-                    cid,
-                )
-                for cid, cvec in cents
-            ),
-        )[:nprobe]
-        for negdot, cid in dots:
+        for negdot, cid in _nearest_cells(vec, cents, nprobe):
             if residual:
                 ct, cnorm = cent_aux[cid]
                 q_data.append((qid, cid, tables, norm, -negdot, cnorm, ct))

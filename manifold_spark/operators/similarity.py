@@ -616,8 +616,7 @@ def _rp_packed_expr(planes, dim: int, num_bits: int) -> Column:
     in tests/test_linalg_fastpath.py on a fixed corpus — every arithmetic
     step is the same per-term double multiply chain followed by
     floor-quantized integer adds, so the values are bit-identical by
-    construction). `rp_hyperplanes` coefficients and ``_RP_SCALE`` are
-    finite, so every one has a SQL literal."""
+    construction)."""
     from manifold_spark.operators.linalg import _doubles_array_sql, double_sql
 
     scale = double_sql(_RP_SCALE)

@@ -164,19 +164,11 @@ def doc_fingerprint(text: Column) -> Column:
     arrays are provably equal: maximal alnum runs are the same set
     either way, and lowering a pure-ASCII-alnum token equals the
     substring of the lowered string. Pinned against the old form
-    (`_doc_fingerprint_replace_form`) in tests."""
+    (`tests/reference_forms.py`)."""
     tokens = F.transform(
         F.regexp_extract_all(text, F.lit("[A-Za-z0-9]+"), F.lit(0)),
         lambda t: F.lower(t),
     )
-    return F.sha2(F.concat_ws(" ", F.sort_array(F.array_distinct(tokens))), 256)
-
-
-def _doc_fingerprint_replace_form(text: Column) -> Column:
-    """Pre-r15 regexp_replace-based fingerprint — the reference form
-    `doc_fingerprint` is value-pinned against (not a production path)."""
-    cleaned = F.lower(F.regexp_replace(text, r"[^A-Za-z0-9]+", " "))
-    tokens = F.filter(F.split(F.trim(cleaned), r"\s+"), lambda t: t != "")
     return F.sha2(F.concat_ws(" ", F.sort_array(F.array_distinct(tokens))), 256)
 
 

@@ -28,11 +28,6 @@ def check_nonempty(n: int, name: str) -> int:
     return n
 
 
-def assert_nonempty(df: DataFrame, name: str) -> int:
-    """Reference A2: fail if ``df`` has no rows. Returns the count."""
-    return check_nonempty(df.count(), name)
-
-
 def duplicate_active_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     """Business keys with more than one active SCD2 row (reference A3
     intent, `README.md:149-157`; the shipped SQL template is broken —
@@ -46,21 +41,14 @@ def duplicate_active_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def assert_unique_active(df: DataFrame, keys: list[str], name: str) -> None:
-    """Fail if any business key has >1 active row."""
-    dups = duplicate_active_keys(df, keys).limit(5).collect()
-    if dups:
-        raise QualityError(f"dimension {name!r} has duplicate active rows, e.g. {dups}")
-
-
 def assert_dim_invariants(df: DataFrame, keys: list[str], name: str) -> int:
     """Both post-merge dimension gates (A2 non-empty + A3 unique-active)
     in ONE Spark action (r14: the sequential pair cost two jobs per
     dimension per week): a single groupBy over the business key computes
     each key's total and active row counts, and one final aggregate
-    yields (table rows, duplicate-active groups). Failure messages match
-    the split asserts' intent; the duplicate-example lookup runs only on
-    the (rare) failure path. Returns the row count."""
+    yields (table rows, duplicate-active groups). A duplicate active key
+    fails naming the dimension (the example lookup runs only on that
+    rare path), an empty table fails as "empty". Returns the row count."""
     sent = F.lit(SCD2_SENTINEL).cast("date")
     per_key = df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("_n"),

@@ -153,7 +153,7 @@ def scd2_merge(
     r15 (guide §2.4/§3): single-pass MERGE — ONE full-outer join on the
     business key routes every action, replacing the former 4-join
     structure (changed-keys inner join → semi → anti → staging left
-    join; kept as `_scd2_merge_joins` for the equivalence pin). The
+    join; kept in tests/reference_forms.py for the equivalence pin). The
     output is row-identical to the old form for EVERY input, including
     duplicate-key staging rows and invariant-violating duplicate active
     rows (pinned in tests/test_scd2_properties.py):
@@ -285,77 +285,5 @@ def scd2_merge(
     return (
         inactive.select(*ordered)
         .unionByName(t_rows.select(*ordered))
-        .unionByName(inserts.select(*ordered))
-    )
-
-
-def _scd2_merge_joins(
-    target: DataFrame | None,
-    base: DataFrame,
-    sk_col: str,
-    keys: list[str],
-    as_of: str | dt.date,
-) -> DataFrame:
-    """The pre-r15 4-join merge, kept verbatim as the REFERENCE FORM the
-    single-pass `scd2_merge` is pinned against (bit-identity on unique,
-    duplicate-staging and duplicate-active inputs —
-    tests/test_scd2_properties.py). Not a production path."""
-    if target is None:
-        return initial_load(base, sk_col, keys, as_of)
-
-    as_of = _as_date(as_of)
-    payload_cols = base.columns
-    as_of_lit = F.lit(as_of.isoformat()).cast("date")
-    sentinel = F.lit(SCD2_SENTINEL).cast("date")
-
-    active = target.filter(F.col("record_end_date") == sentinel)
-    inactive = target.filter(F.col("record_end_date") != sentinel)
-
-    b = base.alias("b")
-    t = active.alias("t")
-    key_cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"b.{k}")) for k in keys]
-
-    # J3: active rows whose hash changed → the expire set (identified by key;
-    # the unique-active invariant makes the key a sufficient identifier).
-    changed_keys = (
-        t.join(b, key_cond, "inner")
-        .filter(F.col(f"t.{HASH_COL}") != F.col(f"b.{HASH_COL}"))
-        .select(*[F.col(f"t.{k}").alias(k) for k in keys])
-    )
-
-    # Null business keys must compare null-safely here too, or a null-keyed
-    # row is never expired and the unique-active invariant breaks.
-    a = active.alias("a")
-    ck = changed_keys.alias("ck")
-    semi_cond = [F.col(f"a.{k}").eqNullSafe(F.col(f"ck.{k}")) for k in keys]
-    expired = (
-        a.join(ck, semi_cond, "left_semi")
-        .withColumn("record_end_date", F.date_sub(as_of_lit, 1))
-    )
-    untouched_active = a.join(ck, semi_cond, "left_anti")
-
-    # J4: staging rows that are brand new (no active row) or changed.
-    inserts_src = (
-        b.join(t, key_cond, "left")
-        .filter(
-            F.col(f"t.{sk_col}").isNull()
-            | (F.col(f"t.{HASH_COL}") != F.col(f"b.{HASH_COL}"))
-        )
-        .select(*[F.col(f"b.{c}").alias(c) for c in payload_cols])
-    )
-    inserts = inserts_src.withColumns(
-        {
-            "record_start_date": as_of_lit,
-            "record_end_date": sentinel,
-        }
-    )
-    max_sk = target.agg(F.max(sk_col)).collect()[0][0] or 0
-    inserts = assign_surrogate_keys(inserts, sk_col, keys, offset=max_sk)
-
-    ordered = [sk_col, *payload_cols, *SCD2_COLS]
-    return (
-        inactive.select(*ordered)
-        .unionByName(untouched_active.select(*ordered))
-        .unionByName(expired.select(*ordered))
         .unionByName(inserts.select(*ordered))
     )

@@ -2,9 +2,11 @@
 
 Replaces the reference's session + S3 wiring
 (`/root/reference/scripts/el_to_parquet.py:17-38`) with a local-or-cluster
-factory. Scale posture: AQE on (runtime coalescing + skew-join splitting),
-Arrow transfer on for the few Pandas-UDF paths, UTC session time so date
-semantics are deterministic across cluster timezones.
+factory; S3A credentials are plain confs
+(`extra_conf={"spark.hadoop.fs.s3a.access.key": …}`). Scale posture: AQE
+on (runtime coalescing + skew-join splitting), Arrow transfer on for the
+few Pandas-UDF paths, UTC session time so date semantics are
+deterministic across cluster timezones.
 """
 
 from __future__ import annotations
@@ -111,14 +113,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def configure_s3(spark: SparkSession, access_key: str, secret_key: str, endpoint: str | None = None) -> SparkSession:
-    """Wire S3A credentials into the Hadoop conf (reference S4,
-    `el_to_parquet.py:17-38`). No-op cost locally; kept for API parity."""
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hconf.set("fs.s3a.access.key", access_key)
-    hconf.set("fs.s3a.secret.key", secret_key)
-    if endpoint:
-        hconf.set("fs.s3a.endpoint", endpoint)
-    return spark

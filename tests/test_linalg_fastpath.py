@@ -3,7 +3,8 @@ single-parse SQL forms of dot/norm/cosine and the one-parse literal
 arrays must analyze/optimize to the IDENTICAL tree the per-term Column
 builders produced (hence bit-identical results — the oracle gates never
 see a difference). These pins are what lets the fast paths claim "same
-expression, fewer py4j round trips"."""
+expression, fewer py4j round trips". The Column builders live in
+`reference_forms`."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import re
 import struct
 
 import pytest
+import reference_forms as R
 from pyspark.sql import functions as F
 
 import manifold_spark.operators.linalg as L
@@ -51,20 +53,20 @@ def _bits(df, col):
 
 
 def _slow_cosine(a, b):
-    denom = F.sqrt(L._dot_expr_columns(a, a, DIM)) * F.sqrt(L._dot_expr_columns(b, b, DIM))
-    return F.when(denom > 0, L._dot_expr_columns(a, b, DIM) / denom).otherwise(F.lit(0.0))
+    denom = F.sqrt(R.dot_expr_columns(a, a, DIM)) * F.sqrt(R.dot_expr_columns(b, b, DIM))
+    return F.when(denom > 0, R.dot_expr_columns(a, b, DIM) / denom).otherwise(F.lit(0.0))
 
 
 def test_dot_fastpath_tree_and_bits_identical(vec_df):
     fast = L.dot_expr("va", "vb", DIM)
-    slow = L._dot_expr_columns("va", "vb", DIM)
+    slow = R.dot_expr_columns("va", "vb", DIM)
     assert _analyzed(vec_df, fast) == _analyzed(vec_df, slow)
     assert _bits(vec_df, fast) == _bits(vec_df, slow)
 
 
 def test_norm_fastpath_tree_identical(vec_df):
     fast = L.norm_expr("va", DIM)
-    slow = F.sqrt(L._dot_expr_columns("va", "va", DIM))
+    slow = F.sqrt(R.dot_expr_columns("va", "va", DIM))
     assert _analyzed(vec_df, fast) == _analyzed(vec_df, slow)
     assert _bits(vec_df, fast) == _bits(vec_df, slow)
 
@@ -79,26 +81,28 @@ def test_cosine_fastpath_tree_identical_including_zero_norm_guard(vec_df):
 def test_fastpath_handles_keyword_column_names(vec_df):
     kw = vec_df.selectExpr("id", "va as `order`", "vb as `case`")
     fast = L.dot_expr("order", "case", DIM)
-    slow = L._dot_expr_columns("order", "case", DIM)
-    assert L._sql_safe("order")
+    slow = R.dot_expr_columns("order", "case", DIM)
     assert _analyzed(kw, fast) == _analyzed(kw, slow)
 
 
 def test_fastpath_handles_struct_field_names(vec_df):
     st = vec_df.select("id", F.struct(F.col("va").alias("x")).alias("s"), "vb")
     fast = L.dot_expr("s.x", "vb", DIM)
-    slow = L._dot_expr_columns("s.x", "vb", DIM)
+    slow = R.dot_expr_columns("s.x", "vb", DIM)
     assert _analyzed(st, fast) == _analyzed(st, slow)
 
 
 def test_non_identifier_names_take_the_column_fallback(vec_df):
+    """A name that is no SQL identifier (a space) parses through the
+    backtick-quoted rendering to the Column chain's exact tree — there
+    is no separate fallback form — and computes the same values as a
+    plain rename."""
     weird = vec_df.selectExpr("id", "va as `weird name`", "vb")
-    assert not L._sql_safe("weird name")
-    assert not L._sql_safe(F.col("va"))
-    # must not raise, and must compute the same values as a safe rename
-    got = _bits(weird, L.dot_expr("weird name", "vb", DIM))
-    want = _bits(vec_df, L.dot_expr("va", "vb", DIM))
-    assert got == want
+    fast = L.dot_expr("weird name", "vb", DIM)
+    slow = R.dot_expr_columns("weird name", "vb", DIM)
+    assert _analyzed(weird, fast) == _analyzed(weird, slow)
+    assert _bits(weird, fast) == _bits(weird, slow)
+    assert _bits(weird, fast) == _bits(vec_df, L.dot_expr("va", "vb", DIM))
 
 
 def _lit_loop(vs):
@@ -140,7 +144,7 @@ def test_codes_expr_fastpath_tree_and_codes_identical(spark):
     # UnaryMinus-folding claim to be load-bearing
     assert any(v < 0 for row in cb for cent in row for v in cent)
     fast = P._codes_expr("embedding", cb, 8)
-    slow = P._codes_expr_columns("embedding", cb, 8)
+    slow = R.codes_expr_columns("embedding", cb, 8)
     assert _optimized(df, fast) == _optimized(df, slow)
     a = [r["r"] for r in df.select(fast.alias("r")).orderBy("vec_id").collect()]
     b = [r["r"] for r in df.select(slow.alias("r")).orderBy("vec_id").collect()]
@@ -155,13 +159,12 @@ def test_neg_dot_fastpath_tree_and_bits_identical(vec_df):
     import operator
 
     import manifold_spark.operators.pq as P
-    from manifold_spark.operators.linalg import element
 
     cvec = [0.5, -1.25, 3.0, -0.0625]
     fast = P._neg_dot_expr("va", cvec, DIM)
     slow = -functools.reduce(
         operator.add,
-        (element("va", i) * F.lit(cvec[i - 1]) for i in range(1, DIM + 1)),
+        (R.element("va", i) * F.lit(cvec[i - 1]) for i in range(1, DIM + 1)),
     )
     assert _optimized(vec_df, fast) == _optimized(vec_df, slow)
     assert _bits(vec_df, fast) == _bits(vec_df, slow)
@@ -216,10 +219,35 @@ def test_minhash_sig_and_band_fastpath_tree_identical(spark):
 
 
 def test_lit_double_array_nonfinite_falls_back(spark):
-    r = spark.range(1).select(
-        L.lit_double_array([1.0, float("nan")]).alias("r")
-    ).collect()[0]["r"]
-    assert len(r) == 2 and r[0] == 1.0 and math.isnan(r[1])
+    """Non-finite values go through the same one-parse literal as finite
+    ones (`CAST('NaN' AS DOUBLE)` …): it folds to the `F.lit` loop's
+    literal, with bit-identical values including NaN, ±Infinity and
+    −0.0."""
+    values = [1.0, float("nan"), float("inf"), float("-inf"), -0.0]
+    one = spark.range(1)
+    fast, slow = L.lit_double_array(values), _lit_loop(values)
+    assert _optimized(one, fast) == _optimized(one, slow)
+
+    def bits(col):
+        r = one.select(col.alias("r")).collect()[0]["r"]
+        return [struct.pack("<d", v) for v in r]
+
+    assert bits(fast) == bits(slow) == [struct.pack("<d", v) for v in values]
+
+
+@pytest.mark.parametrize(
+    "value", [float("nan"), float("inf"), float("-inf")], ids=["nan", "inf", "-inf"]
+)
+def test_double_sql_renders_nonfinite(spark, value):
+    """`double_sql` has a rendering for every double: NaN and ±Infinity
+    parse to the same double instead of raising."""
+    sql = L.double_sql(value)
+    got = spark.range(1).select(F.expr(sql).alias("r")).collect()[0]["r"]
+    if math.isnan(value):
+        assert math.isnan(got)
+    else:
+        assert got == value
+    assert struct.pack("<d", got) == struct.pack("<d", value)
 
 
 # ---------------------------------------------------------------------------
@@ -323,12 +351,7 @@ def test_rp_band_entries_unchanged_by_single_parse(spark):
 def test_simhash_single_parse_equals_column_form(spark):
     from pyspark.sql import functions as F
 
-    from manifold_spark.operators.dedup import (
-        _simhash_bitsum_column,
-        _simhash_packed_column,
-        normalized_tokens,
-        simhash_fingerprints,
-    )
+    from manifold_spark.operators.dedup import normalized_tokens, simhash_fingerprints
     from manifold_spark.functions.hashing import stable_long_hash
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -343,12 +366,12 @@ def test_simhash_single_parse_equals_column_form(spark):
     )
     h = toks.withColumn("h", stable_long_hash(F.col("token")))
     bitsums = h.groupBy("doc_id").agg(
-        *[_simhash_bitsum_column(j) for j in range(num_bits)]
+        *[R.simhash_bitsum_column(j) for j in range(num_bits)]
     )
     want = {
         r["doc_id"]: r["fp"]
         for r in bitsums.select(
-            "doc_id", _simhash_packed_column(num_bits).alias("fp")
+            "doc_id", R.simhash_packed_column(num_bits).alias("fp")
         ).collect()
     }
     assert got == want
@@ -361,14 +384,8 @@ def test_tokenizer_extract_all_equals_replace_form(spark):
     and NULL/empty/punct-only inputs — on top of the corpus pins below."""
     from pyspark.sql import functions as F
 
-    from manifold_spark.operators.dedup import (
-        _normalized_tokens_replace_form,
-        normalized_tokens,
-    )
-    from manifold_spark.operators.textstats import (
-        _doc_fingerprint_replace_form,
-        doc_fingerprint,
-    )
+    from manifold_spark.operators.dedup import normalized_tokens
+    from manifold_spark.operators.textstats import doc_fingerprint
 
     rows = [
         (1, "Hello, World! 123"),
@@ -384,15 +401,15 @@ def test_tokenizer_extract_all_equals_replace_form(spark):
     df = spark.createDataFrame(rows, "i int, text string")
     got = df.select("i", normalized_tokens(F.col("text")).alias("t"),
                     doc_fingerprint(F.col("text")).alias("fp")).collect()
-    want = df.select("i", _normalized_tokens_replace_form(F.col("text")).alias("t"),
-                     _doc_fingerprint_replace_form(F.col("text")).alias("fp")).collect()
+    want = df.select("i", R.normalized_tokens_replace_form(F.col("text")).alias("t"),
+                     R.doc_fingerprint_replace_form(F.col("text")).alias("fp")).collect()
     assert sorted(map(repr, got)) == sorted(map(repr, want))
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     diff = docs.select(
         (
-            (normalized_tokens(F.col("text")) != _normalized_tokens_replace_form(F.col("text")))
-            | (doc_fingerprint(F.col("text")) != _doc_fingerprint_replace_form(F.col("text")))
+            (normalized_tokens(F.col("text")) != R.normalized_tokens_replace_form(F.col("text")))
+            | (doc_fingerprint(F.col("text")) != R.doc_fingerprint_replace_form(F.col("text")))
         ).alias("d")
     ).filter("d").count()
     assert diff == 0

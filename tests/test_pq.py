@@ -243,7 +243,8 @@ def test_ivf_pq_index_plan_has_no_hash_exchange(emb, codebooks):
     import functools as ft
     import operator as op
 
-    from manifold_spark.operators.linalg import element
+    from reference_forms import element
+
     from manifold_spark.plans.parallelism import ensure_parallelism
 
     cents = [

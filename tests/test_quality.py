@@ -6,46 +6,52 @@ import pytest
 
 from manifold_spark.quality import (
     QualityError,
-    assert_nonempty,
-    assert_unique_active,
+    assert_dim_invariants,
+    check_nonempty,
     duplicate_active_keys,
 )
 
+DIM_SCHEMA = "broker string, record_start_date date, record_end_date date"
+SENTINEL = dt.date(9999, 12, 31)
+
 
 def test_empty_table_raises(spark):
-    df = spark.createDataFrame([], "a string")
     with pytest.raises(QualityError, match="empty"):
-        assert_nonempty(df, "staging.dim_broker")
+        check_nonempty(0, "staging.dim_broker")
+    df = spark.createDataFrame([], DIM_SCHEMA)
+    with pytest.raises(QualityError, match="empty"):
+        assert_dim_invariants(df, ["broker"], "dim_broker")
 
 
 def test_nonempty_returns_count(spark):
-    df = spark.createDataFrame([("x",), ("y",)], "a string")
-    assert assert_nonempty(df, "t") == 2
+    assert check_nonempty(2, "t") == 2
+    df = spark.createDataFrame(
+        [("x", dt.date(2024, 1, 1), SENTINEL), ("y", dt.date(2024, 1, 1), SENTINEL)],
+        DIM_SCHEMA,
+    )
+    assert assert_dim_invariants(df, ["broker"], "dim_broker") == 2
 
 
 def test_duplicate_active_detected(spark):
-    sentinel = dt.date(9999, 12, 31)
     rows = [
-        ("A", dt.date(2024, 1, 1), sentinel),
-        ("A", dt.date(2024, 2, 1), sentinel),  # second ACTIVE row for A
-        ("B", dt.date(2024, 1, 1), sentinel),
+        ("A", dt.date(2024, 1, 1), SENTINEL),
+        ("A", dt.date(2024, 2, 1), SENTINEL),  # second ACTIVE row for A
+        ("B", dt.date(2024, 1, 1), SENTINEL),
         ("B", dt.date(2023, 1, 1), dt.date(2023, 12, 31)),  # expired: fine
     ]
-    df = spark.createDataFrame(
-        rows, "broker string, record_start_date date, record_end_date date"
-    )
+    df = spark.createDataFrame(rows, DIM_SCHEMA)
     dups = duplicate_active_keys(df, ["broker"]).collect()
     assert len(dups) == 1 and dups[0]["broker"] == "A" and dups[0]["active_rows"] == 2
-    with pytest.raises(QualityError, match="dim_broker"):
-        assert_unique_active(df, ["broker"], "dim_broker")
+    with pytest.raises(QualityError, match="dimension 'dim_broker' has duplicate active"):
+        assert_dim_invariants(df, ["broker"], "dim_broker")
 
 
 def test_expired_only_key_passes(spark):
     df = spark.createDataFrame(
-        [("C", dt.date(2023, 1, 1), dt.date(2023, 6, 1))],
-        "broker string, record_start_date date, record_end_date date",
+        [("C", dt.date(2023, 1, 1), dt.date(2023, 6, 1))], DIM_SCHEMA
     )
-    assert_unique_active(df, ["broker"], "dim_broker")  # no active rows: OK
+    # no active rows: OK, and the expired row still counts
+    assert assert_dim_invariants(df, ["broker"], "dim_broker") == 1
 
 
 def test_run_checks_counts_violations(spark):

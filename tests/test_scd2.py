@@ -3,9 +3,10 @@
 import datetime as dt
 
 from pyspark.sql import functions as F
+from reference_forms import scd2_merge_joins
 
 from manifold_spark import scd2
-from manifold_spark.quality import assert_unique_active, duplicate_active_keys
+from manifold_spark.quality import assert_dim_invariants, duplicate_active_keys
 from manifold_spark.stage import with_fingerprint
 
 SENTINEL = dt.date(9999, 12, 31)
@@ -57,7 +58,7 @@ def test_merge_changed_new_unchanged(spark):
     (d,) = by_key["D"]
     assert d["record_start_date"] == dt.date(2024, 1, 8) and d["record_end_date"] == SENTINEL
 
-    assert_unique_active(dim2, ["broker"], "dim_broker")
+    assert assert_dim_invariants(dim2, ["broker"], "dim_broker") == dim2.count()
 
 
 def test_merge_idempotent(spark):
@@ -120,7 +121,7 @@ def test_all_null_hashes_of_a_key(spark):
             "hash", F.when(F.col("broker") == "B", F.col("hash")).otherwise(null_hash)
         )
         merged = scd2.scd2_merge(dim1, week2, "broker_id", ["broker"], "2024-01-08")
-        reference = scd2._scd2_merge_joins(
+        reference = scd2_merge_joins(
             dim1, week2, "broker_id", ["broker"], "2024-01-08"
         )
         rows = sorted(map(tuple, merged.collect()))

@@ -8,6 +8,7 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from reference_forms import scd2_merge_joins
 
 from manifold_spark import scd2
 from manifold_spark.quality import duplicate_active_keys
@@ -85,7 +86,7 @@ def test_scd2_invariants_hold_for_any_snapshot_sequence(spark, snaps):
 
 # ---------------------------------------------------------------------------
 # r15 single-pass MERGE pin: the full-outer-join `scd2_merge` must produce
-# EXACTLY the rows of the pre-r15 4-join reference form `_scd2_merge_joins`
+# EXACTLY the rows of the pre-r15 4-join reference form `scd2_merge_joins`
 # — on well-formed inputs AND on the pathological ones the old code
 # tolerated (duplicate staging keys, invariant-violating duplicate active
 # rows). Surrogate keys for DUPLICATE-key insert groups are tie-broken by
@@ -101,7 +102,7 @@ def _rows_sorted(df, drop_sk=None):
 
 def _assert_merge_equivalent(spark, target, base, sk, keys, as_of, unique=True):
     new = scd2.scd2_merge(target, base, sk, keys, as_of)
-    old = scd2._scd2_merge_joins(target, base, sk, keys, as_of)
+    old = scd2_merge_joins(target, base, sk, keys, as_of)
     if unique:
         assert _rows_sorted(new) == _rows_sorted(old)
     else:
